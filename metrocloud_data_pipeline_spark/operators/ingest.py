@@ -10,14 +10,15 @@ Everything is built-in column expressions (JVM-side, whole-stage
 codegen) — no Python UDFs anywhere on this hot path, which is what makes
 the chain viable at 100 TB.
 
-Chain order (normalize_raw): fan_out (T1) -> timestamp_normalize (T3/T4)
+Chain order (normalize): fan_out (T1) -> timestamp_normalize (T3/T4)
 -> battery_percent (T6) -> enrich_defaults (T12/T13) -> anomaly flag
-(T7) -> validate (T9/T10) -> clamp (T11) -> flatten (T2).
+(T7) -> reject_reasons (T9/T10) -> clamp of the valid rows (T11); then
+split_normalized: valid/rejected split -> flatten (T2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import schema as S
@@ -180,12 +181,11 @@ def detect_anomalies(df: DataFrame) -> DataFrame:
 REQUIRED_FIELDS = ("device_id", "device_type", "unit")
 
 
-def validate(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """OP-T9/T10: required-field + domain validation.
-
-    Returns (valid, rejected-with-reason). The engine keeps both streams
-    (reject stream replaces the reference's drop-and-count,
-    ruuvitag_adapter.py:387-405; models.py:171-197; init.sql:64-69)."""
+def reject_reasons(df: DataFrame) -> Column:
+    """OP-T9/T10: required-field + domain validation as ONE array column
+    naming every failed check (empty == valid). The single definition of
+    the checks: validate splits on it, and normalize tags the whole
+    micro-batch with it before the split."""
     checks = [
         (F.col(f).isNull() | (F.col(f) == ""), f"missing_{f}") for f in REQUIRED_FIELDS if f in df.columns
     ]
@@ -201,22 +201,40 @@ def validate(df: DataFrame) -> tuple[DataFrame, DataFrame]:
         checks.append((lon.isNotNull() & ~lon.between(-180.0, 180.0), "longitude_out_of_range"))
     if "status" in df.columns:
         checks.append((F.col("status").isNotNull() & ~F.col("status").isin(list(S.DEVICE_STATUSES)), "invalid_status"))
-
-    reason = F.array_compact(F.array(*[F.when(cond, F.lit(name)) for cond, name in checks]))
-    tagged = df.withColumn("reject_reasons", reason)
-    valid = tagged.where(F.size("reject_reasons") == 0).drop("reject_reasons")
-    rejected = tagged.where(F.size("reject_reasons") > 0)
-    return valid, rejected
+    return F.array_compact(F.array(*[F.when(cond, F.lit(name)) for cond, name in checks]))
 
 
-def clamp_timestamps(df: DataFrame, anchor=None, window_hours: int = S.CLAMP_WINDOW_HOURS) -> DataFrame:
+def is_valid() -> Column:
+    """True on a row of a reject_reasons-tagged frame that passed every check."""
+    return F.size("reject_reasons") == 0
+
+
+def split_rejects(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(valid without the reasons column, rejected with it) — two
+    filters of one tagged frame, so they partition it."""
+    return tagged.where(is_valid()).drop("reject_reasons"), tagged.where(~is_valid())
+
+
+def validate(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """OP-T9/T10: returns (valid, rejected-with-reason). The engine keeps
+    both streams (reject stream replaces the reference's drop-and-count,
+    ruuvitag_adapter.py:387-405; models.py:171-197; init.sql:64-69)."""
+    return split_rejects(df.withColumn("reject_reasons", reject_reasons(df)))
+
+
+def clamped_timestamp(anchor=None, window_hours: int = S.CLAMP_WINDOW_HOURS) -> Column:
     """OP-T11: accept-but-correct late/future timestamps
     (timescaledb_sink.py:151-160): |ts - now| > window -> replace with now.
     In streaming this pairs with withWatermark (OP-ST5)."""
     now = F.lit(anchor).cast("timestamp") if anchor is not None else F.current_timestamp()
     secs = window_hours * 3600
     diff = F.abs(F.unix_timestamp("timestamp") - F.unix_timestamp(now))
-    return df.withColumn("timestamp", F.when(diff > secs, now).otherwise(F.col("timestamp")))
+    return F.when(diff > secs, now).otherwise(F.col("timestamp"))
+
+
+def clamp_timestamps(df: DataFrame, anchor=None, window_hours: int = S.CLAMP_WINDOW_HOURS) -> DataFrame:
+    """OP-T11 over a whole frame (see clamped_timestamp)."""
+    return df.withColumn("timestamp", clamped_timestamp(anchor, window_hours))
 
 
 def flatten_location(df: DataFrame) -> DataFrame:
@@ -227,21 +245,35 @@ def flatten_location(df: DataFrame) -> DataFrame:
     return df.select("*", "location.*").drop("location")
 
 
-def normalize_raw(
+def normalize(
     raw: DataFrame,
     devices_dim: DataFrame | None = None,
     anchor=None,
-) -> tuple[DataFrame, DataFrame]:
-    """The full adapter chain: raw wide rows -> (valid flat readings,
-    rejected rows). Mirrors ruuvitag_adapter.adapt_ruuvitag_data
-    (:229-385) + sink validation (timescaledb_sink.py:124-167)."""
+) -> DataFrame:
+    """The full adapter chain up to (not including) the valid/rejected
+    split: every fanned-out reading, tagged with reject_reasons, with
+    the OP-T11 clamp applied to the valid rows only (a rejected row
+    keeps the timestamp it arrived with). Mirrors
+    ruuvitag_adapter.adapt_ruuvitag_data (:229-385) + sink validation
+    (timescaledb_sink.py:124-167).
+
+    One frame holds both outcomes so a micro-batch can be materialized
+    once and split afterwards (split_normalized)."""
     df = fan_out(raw)
     df = timestamp_normalize(df, anchor=anchor)
     df = battery_percent(df)
     df = enrich_defaults(df, devices_dim)
     df = detect_anomalies(df)
-    valid, rejected = validate(df)
-    valid = clamp_timestamps(valid, anchor=anchor)
+    tagged = df.withColumn("reject_reasons", reject_reasons(df))
+    return tagged.withColumn(
+        "timestamp", F.when(is_valid(), clamped_timestamp(anchor)).otherwise(F.col("timestamp"))
+    )
+
+
+def split_normalized(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """normalize's tagged frame -> (valid flat readings in store column
+    order, rejected rows with their reasons)."""
+    valid, rejected = split_rejects(tagged)
     ordered = [
         "device_id",
         "device_type",
@@ -259,3 +291,13 @@ def normalize_raw(
         "maintenance_date",
     ]
     return flatten_location(valid.select(*ordered)), rejected
+
+
+def normalize_raw(
+    raw: DataFrame,
+    devices_dim: DataFrame | None = None,
+    anchor=None,
+) -> tuple[DataFrame, DataFrame]:
+    """Raw wide rows -> (valid flat readings, rejected rows): normalize
+    then split_normalized."""
+    return split_normalized(normalize(raw, devices_dim, anchor))

@@ -26,8 +26,9 @@ import os
 from contextlib import contextmanager
 from datetime import date, datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @contextmanager
@@ -409,64 +410,68 @@ def idempotent_append(
 ) -> int:
     """OP-D4: ON CONFLICT DO NOTHING (database.py:300) — dedup the batch on
     the natural key, then anti-join against only the target partitions the
-    batch touches (partition-pruned read, not a full-table scan).
+    batch touches (partition-pruned read, not a full-table scan). Returns
+    the rows inserted.
 
-    Pass `days` (the batch's event-date bounds) when the caller knows
-    its window — a backfill job or a trigger with a bounded source —
-    and the batch is never scanned to discover target partitions.
-    Without it, the day set is read off the batch: the batch is
-    localCheckpoint-ed once, so dedup runs a single time and the
-    day-discovery is a metadata-sized read of the checkpointed rows,
-    shared with the final count and write. (A collect-free formulation
-    was measured and rejected: Spark's dynamic partition pruning
-    never fires for LEFT ANTI — canPruneRight covers Inner/LeftSemi
-    only — so the 'pure join' shape silently reads the whole store;
-    the bounded day list, calendar-sized by construction, is the
-    correct trade.)"""
-    deduped = batch.dropDuplicates(list(NATURAL_KEY))
+    Pass `days` (the batch's event dates) when the caller already knows
+    them — the streaming ingest body observes them on its one
+    materialization of the micro-batch — and the batch is never scanned
+    to discover target partitions. Without it, the batch is
+    localCheckpoint-ed and ONE aggregate over it yields both the day set
+    and the null-key count. (A collect-free formulation was measured and
+    rejected: Spark's dynamic partition pruning never fires for LEFT
+    ANTI — canPruneRight covers Inner/LeftSemi only — so the 'pure join'
+    shape silently reads the whole store; the bounded day list,
+    calendar-sized by construction, is the correct trade.)
 
-    def _reject_null_keys(frame: DataFrame) -> None:
-        # fail-loud: a NULL natural-key component never matches the
-        # anti-join below, so a re-delivered batch would re-append the
-        # row EVERY retry — effectively-once silently broken for
-        # exactly the rows with no identity (the r11 null-key sweep:
-        # scd2_merge / curate_batch's class). Matches the reference's
-        # NOT NULL primary key, which would reject the row outright.
-        # The wired ingest path validates these columns upstream; on
-        # the hot path this check reads the already-checkpointed rows.
-        cond = F.lit(False)
-        for k in NATURAL_KEY:
-            cond = cond | F.col(k).isNull()
-        if frame.where(cond).limit(1).collect():
-            raise ValueError(
-                "idempotent_append: batch contains NULL natural-key "
-                f"components {NATURAL_KEY} — validate or reject upstream "
-                "(null keys cannot be deduplicated and would re-append "
-                "on every redelivery)"
-            )
-
+    The dedup and the anti-join then run exactly once, inside the
+    write: the overlapping partitions are read with the batch's own
+    natural-key schema (no schema-inference job), and the inserted
+    count is an Observation on the write itself, not a count() that
+    would re-run the anti-join. No rows, no write: an empty batch
+    returns 0 before anything touches `path`."""
+    # fail-loud: a NULL natural-key component never matches the
+    # anti-join below, so a re-delivered batch would re-append the row
+    # EVERY retry — effectively-once silently broken for exactly the
+    # rows with no identity (the r11 null-key sweep: scd2_merge /
+    # curate_batch's class). Matches the reference's NOT NULL primary
+    # key, which would reject the row outright. The wired ingest path
+    # validates these columns upstream and hands in a materialized
+    # batch, so on the hot path this check reads checkpointed rows.
+    null_key = F.lit(False)
+    for k in NATURAL_KEY:
+        null_key = null_key | F.col(k).isNull()
     if days is None:
-        # one computation of the dedup shuffle, shared by the null-key
-        # guard, day discovery, the insert count, and the write
-        deduped = deduped.localCheckpoint(eager=True)
-        _reject_null_keys(deduped)
-        days = [
-            r[0]
-            for r in deduped.select(F.to_date(F.col(ts_col)).alias("d")).distinct().collect()
-        ]
+        # one computation of the batch, shared by discovery and the write
+        batch = batch.localCheckpoint(eager=True)
+        facts = batch.agg(
+            F.count_if(null_key).alias("null_keys"),
+            F.collect_set(F.to_date(F.col(ts_col))).alias("days"),
+        ).first()
+        has_null_key, days = facts["null_keys"] > 0, facts["days"]
     else:
-        _reject_null_keys(deduped)
+        has_null_key = bool(batch.where(null_key).limit(1).collect())
+    if has_null_key:
+        raise ValueError(
+            "idempotent_append: batch contains NULL natural-key "
+            f"components {NATURAL_KEY} — validate or reject upstream "
+            "(null keys cannot be deduplicated and would re-append "
+            "on every redelivery)"
+        )
+    if not days:
+        return 0
+    deduped = batch.dropDuplicates(list(NATURAL_KEY))
     existing_days = set(list_partitions(path))
     overlap = [d for d in days if d in existing_days]
     if overlap:
-        existing = spark.read.option("basePath", path).parquet(
+        key_schema = StructType([batch.schema[k] for k in NATURAL_KEY])
+        existing = spark.read.schema(key_schema).option("basePath", path).parquet(
             *[_partition_dir(path, d) for d in overlap]
         ).select(*NATURAL_KEY)
         deduped = deduped.join(existing, on=list(NATURAL_KEY), how="left_anti")
-    inserted = deduped.count()
-    if inserted:
-        write_partitioned(deduped, path, mode="append", ts_col=ts_col)
-    return inserted
+    inserted = Observation()
+    write_partitioned(deduped.observe(inserted, F.count(F.lit(1)).alias("rows")), path, mode="append", ts_col=ts_col)
+    return inserted.get["rows"]
 
 
 def full_history(spark: SparkSession, main_path: str, archive_path: str) -> DataFrame:
@@ -500,7 +505,10 @@ def refresh_bucket_aggregate(
     archival dropped its raw partition) has its aggregate partition
     DELETED: dynamic overwrite only rewrites partitions present in the
     new data, so without the explicit clear the old aggregate would
-    serve deleted rows forever. Returns partitions refreshed."""
+    serve deleted rows forever. Which days the new data covers is an
+    Observation on the overwrite itself, so the aggregate is computed
+    once, by the write, with no checkpoint or day-set collect before it.
+    Returns partitions refreshed."""
     from .analytics import bucket_aggregates
 
     target = days if days is not None else list_partitions(readings_path)
@@ -515,6 +523,7 @@ def refresh_bucket_aggregate(
         d for d in target
         if d in existing and _fs_has_data_files(_partition_dir(readings_path, d))
     ]
+    present = set()
     if avail:
         src = read_table(spark, readings_path).where(
             F.col(PARTITION_COL).isin([d.isoformat() for d in avail])
@@ -522,12 +531,14 @@ def refresh_bucket_aggregate(
         src = src.withColumnRenamed("timestamp", "ts") if "ts" not in src.columns else src
         agg = bucket_aggregates(src, bucket=bucket).withColumn(
             PARTITION_COL, F.to_date(F.col("bucket"))
-        ).localCheckpoint(eager=True)  # aggregate-sized; shared by day-set + write
-        present = {r[0] for r in agg.select(PARTITION_COL).distinct().collect()}
+        )
+        written = Observation()
         with dynamic_partition_overwrite(spark):
-            agg.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(agg_path)
-    else:
-        present = set()
+            (
+                agg.observe(written, F.collect_set(PARTITION_COL).alias("days"))
+                .write.mode("overwrite").partitionBy(PARTITION_COL).parquet(agg_path)
+            )
+        present = set(written.get["days"])
     for day in target:
         if day not in present:
             _fs_delete(_partition_dir(agg_path, day))

@@ -7,7 +7,7 @@ cheap aggregates usable in batch or inside foreachBatch (OP-M2/§2.11).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,20 +32,34 @@ def integrity_violations(df: DataFrame, id_col: str = "device_id", ts_col: str =
     return tagged.where(F.size("violations") > 0)
 
 
-def duplicate_pairs(df: DataFrame, keys=("device_id", "timestamp")) -> DataFrame:
-    """Duplicate (device_id, ts) groups (database_utils.py:382-395)."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n")).where(F.col("n") > 1)
+def batch_counters(ok: Column, anomaly: Column) -> list[Column]:
+    """The four per-batch counters (§2.11) as aggregate expressions over
+    rows where `ok` marks the valid ones: usable in `agg` or as the
+    metrics of an `Observation` riding a job the batch runs anyway."""
+    return [
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count_if(ok).alias("rows_valid"),
+        F.count_if(~ok).alias("rows_rejected"),
+        F.count_if(ok & F.coalesce(anomaly, F.lit(False))).alias("anomalies"),
+    ]
+
+
+def metrics_record(counters: dict) -> dict:
+    """batch_counters' values plus the validation failure rate."""
+    out = {k: counters[k] for k in ("rows_in", "rows_valid", "rows_rejected", "anomalies")}
+    out["validation_failure_rate"] = (out["rows_rejected"] / out["rows_in"]) if out["rows_in"] else 0.0
+    return out
 
 
 def batch_metrics(df_valid: DataFrame, df_rejected: DataFrame) -> dict:
     """Per-batch pipeline metrics (§2.11): rows in/valid/rejected/anomalous.
 
-    ONE aggregation job per batch: the valid/rejected split partitions
-    the input (validate_readings' contract), so rows_in is their sum and
-    all four counters come from a single `agg` over a 2-column union of
-    the two frames — not one count() action per metric. In foreachBatch
-    the frames are localCheckpointed by the caller, so this pass reads
-    materialized blocks, not re-executed lineage."""
+    ONE aggregation job: the valid/rejected split partitions the input
+    (validate_readings' contract), so rows_in is their sum and all four
+    counters come from a single `agg` over a 2-column union of the two
+    frames — not one count() action per metric. The streaming ingest
+    body runs no job for them at all: it observes batch_counters on the
+    micro-batch's one materialization."""
     anomaly = (
         F.col("is_anomaly") if "is_anomaly" in df_valid.columns else F.lit(False)
     )
@@ -54,19 +68,7 @@ def batch_metrics(df_valid: DataFrame, df_rejected: DataFrame) -> dict:
     ).unionAll(
         df_rejected.select(F.lit(False).alias("ok"), F.lit(False).alias("anom"))
     )
-    row = tagged.agg(
-        F.count(F.lit(1)).alias("rows_in"),
-        F.count_if(F.col("ok")).alias("rows_valid"),
-        F.count_if(~F.col("ok")).alias("rows_rejected"),
-        F.count_if(F.col("ok") & F.coalesce(F.col("anom"), F.lit(False))).alias("anomalies"),
-    ).first()
-    return {
-        "rows_in": row["rows_in"],
-        "rows_valid": row["rows_valid"],
-        "rows_rejected": row["rows_rejected"],
-        "anomalies": row["anomalies"],
-        "validation_failure_rate": (row["rows_rejected"] / row["rows_in"]) if row["rows_in"] else 0.0,
-    }
+    return metrics_record(tagged.agg(*batch_counters(F.col("ok"), F.col("anom"))).first().asDict())
 
 
 def expectations_report(

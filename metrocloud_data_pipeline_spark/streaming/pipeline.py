@@ -26,13 +26,13 @@ Structured Streaming:
   the streaming twin of operators/temporal.sessionize.
 
 The ingest chain itself is the SAME code as batch
-(operators.ingest.normalize_raw) — pure DataFrame transforms applied
-inside foreachBatch.
+(operators.ingest.normalize / normalize_raw) — pure DataFrame transforms
+applied inside foreachBatch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -67,15 +67,29 @@ def run_ingest_stream(
     With metrics_path set, each batch also appends one row of
     data-quality counters (rows in/valid/rejected/anomalous + failure
     rate) to a pipeline_metrics table — the queryable replacement for
-    the reference's Prometheus counters (metrics.py:41-165; §2.11)."""
+    the reference's Prometheus counters (metrics.py:41-165; §2.11).
+
+    Job shape: the micro-batch is computed ONCE — one eager
+    localCheckpoint of the reject_reasons-tagged frame, before the
+    valid/rejected split — and an Observation on that checkpoint
+    carries the batch facts: the four counters and the event days of
+    the valid rows (after the OP-T11 clamp). Every sink then reads the
+    checkpoint; the day set goes to idempotent_append(days=...), so
+    nothing is recomputed to learn a count or a target partition. A
+    batch with no valid rows skips the append: no rows, no write."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        valid, rejected = ingest.normalize_raw(batch, anchor=anchor)
-        if metrics_path is not None:
-            valid = valid.localCheckpoint(eager=True)  # one computation for write + counters
-            rejected = rejected.localCheckpoint(eager=True)
-        maintenance.idempotent_append(spark, valid, table_path)
+        facts = Observation()
+        tagged = ingest.normalize(batch, anchor=anchor).observe(
+            facts,
+            *quality.batch_counters(ingest.is_valid(), F.col("is_anomaly")),
+            F.collect_set(F.when(ingest.is_valid(), F.to_date("timestamp"))).alias("days"),
+        ).localCheckpoint(eager=True)
+        observed = facts.get
+        valid, rejected = ingest.split_normalized(tagged)
+        if observed["rows_valid"]:
+            maintenance.idempotent_append(spark, valid, table_path, days=observed["days"])
         # rejects + metrics are effectively-once like the data store
         # (r14): batch_id-keyed dynamic partition overwrite, so a
         # re-delivered micro-batch rewrites its own partition instead
@@ -83,7 +97,7 @@ def run_ingest_stream(
         if rejects_path is not None:
             maintenance.overwrite_batch_partition(rejected, rejects_path, batch_id)
         if metrics_path is not None:
-            m = quality.batch_metrics(valid, rejected)
+            m = quality.metrics_record(observed)
             metrics_row = spark.createDataFrame(
                 [(m["rows_in"], m["rows_valid"], m["rows_rejected"], m["anomalies"], m["validation_failure_rate"])],
                 "rows_in long, rows_valid long, rows_rejected long, anomalies long, validation_failure_rate double",

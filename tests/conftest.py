@@ -34,6 +34,17 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Close the run with what the default tier left out and how to run it."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    n = sum("slow tier" in str(r.longrepr) for r in skipped)
+    if n:
+        terminalreporter.write_line(
+            f"slow tier: {n} tests skipped; run them with "
+            "SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = (

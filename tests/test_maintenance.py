@@ -661,6 +661,21 @@ def test_idempotent_append_refuses_null_natural_keys(spark, tmp_path):
              "device_type", "value")
     with _pytest.raises(ValueError, match="NULL natural-key"):
         idempotent_append(spark, bad, str(tmp_path / "t"))
+    # the caller-supplied day set skips discovery, not the refusal
+    with _pytest.raises(ValueError, match="NULL natural-key"):
+        idempotent_append(spark, bad, str(tmp_path / "t"), days=[datetime(2025, 1, 1).date()])
+
+
+def test_idempotent_append_empty_batch_writes_nothing(spark, tmp_path):
+    """No rows, no write, on both paths: an empty batch returns 0 and
+    creates no store root."""
+    import os
+
+    empty = _readings(spark, [1]).limit(0)
+    path = str(tmp_path / "t")
+    assert M.idempotent_append(spark, empty, path) == 0
+    assert M.idempotent_append(spark, empty, path, days=[]) == 0
+    assert not os.path.exists(path)
 
 
 def test_read_store_or_none_error_taxonomy(spark, tmp_path):

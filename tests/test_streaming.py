@@ -1555,3 +1555,126 @@ def test_corpus_ingest_stream_decontam_gate(spark, tmp_path, mode):
             stream, table, str(tmp_path / "ck4"),
             decontam_mode="bloom", benchmark=bench,
         )
+
+
+# --------------------------------------------------------------------------
+# the ingest write path: one materialization per micro-batch
+# --------------------------------------------------------------------------
+
+
+def _raw_rows(*readings):
+    """Raw RuuviTag messages carrying one temperature reading each:
+    (mac, timestamp string, temperature)."""
+    return [(mac, "ruuvitag", ts, temp) + (None,) * 9 for mac, ts, temp in readings]
+
+
+def _drain(spark, raw_rows, root, table, **sinks):
+    """Land `raw_rows` as one file and run the ingest stream over it."""
+    raw = str(root / "raw")
+    spark.createDataFrame(raw_rows, schema=RAW_FIXTURE_SCHEMA).coalesce(1).write.parquet(raw)
+    q = streaming.run_ingest_stream(
+        streaming.stream_raw_files(spark, raw), table, str(root / "ck"), anchor=ANCHOR, **sinks
+    )
+    q.awaitTermination(120)
+
+
+def test_ingest_stream_all_invalid_first_batch_writes_no_store(spark, tmp_path):
+    """No rows, no write: a first micro-batch whose readings are all
+    rejected lands its rejects and metrics but creates no store root
+    (an empty append would leave a root holding only _SUCCESS)."""
+    import os
+
+    table = str(tmp_path / "bronze")
+    rows = _raw_rows((None, "2025-09-26T10:00:00Z", 20.0), (None, "2025-09-26T11:00:00Z", 21.0))
+    _drain(spark, rows, tmp_path, table,
+           rejects_path=str(tmp_path / "rejects"), metrics_path=str(tmp_path / "metrics"))
+    assert not os.path.exists(table)
+    assert spark.read.parquet(str(tmp_path / "rejects")).count() == 2
+    m = spark.read.parquet(str(tmp_path / "metrics")).collect()
+    assert [(r.rows_in, r.rows_valid, r.rows_rejected) for r in m] == [(2, 0, 2)]
+
+
+def test_ingest_stream_all_redelivered_batch_adds_no_partition(spark, tmp_path, raw_dir):
+    """A micro-batch whose every row is already stored inserts nothing
+    and leaves the store's directory set as it was."""
+    import os
+
+    table = str(tmp_path / "bronze")
+    for ck in ("ck1", "ck2"):  # fresh checkpoint == the same rows as NEW files
+        before = sorted(os.listdir(table)) if os.path.exists(table) else None
+        streaming.run_ingest_stream(
+            streaming.stream_raw_files(spark, raw_dir), table, str(tmp_path / ck), anchor=ANCHOR
+        ).awaitTermination(120)
+    after = sorted(os.listdir(table))
+    parts = lambda names: [n for n in names if n.startswith(maintenance.PARTITION_COL)]  # noqa: E731
+    assert parts(after) == parts(before) and parts(after)
+    assert maintenance.read_table(spark, table).count() == 20
+
+
+def test_ingest_stream_observed_days_match_discovered_days(spark, tmp_path):
+    """The stream body hands idempotent_append the event days it observed
+    on the materialized batch (after the ±24 h clamp). They must target
+    the same partitions as days=None discovery: a previous-day reading
+    already in the store must be anti-joined away, and clamped readings
+    land on the anchor's day. Both paths land identical stores."""
+    from datetime import date
+
+    late = ("aa:00:00:00:00:01", "2025-09-25T20:00:00Z", 19.5)  # previous day, inside the window
+    rows = _raw_rows(
+        late,
+        ("aa:00:00:00:00:02", "2025-09-26T09:00:00Z", 20.0),
+        ("aa:00:00:00:00:03", "2025-09-20T10:00:00Z", 21.0),  # too old -> clamped to the anchor
+        ("aa:00:00:00:00:04", "2025-09-28T10:00:00Z", 22.0),  # too new -> clamped to the anchor
+    )
+    streamed, discovered = str(tmp_path / "streamed"), str(tmp_path / "discovered")
+    seed, _ = ingest.normalize_raw(spark.createDataFrame(_raw_rows(late), schema=RAW_FIXTURE_SCHEMA), anchor=ANCHOR)
+    for store in (streamed, discovered):
+        assert maintenance.idempotent_append(spark, seed, store) == 1
+
+    _drain(spark, rows, tmp_path, streamed)
+    valid, _ = ingest.normalize_raw(spark.createDataFrame(rows, schema=RAW_FIXTURE_SCHEMA), anchor=ANCHOR)
+    assert maintenance.idempotent_append(spark, valid, discovered) == 3
+
+    assert maintenance.list_partitions(streamed) == [date(2025, 9, 25), date(2025, 9, 26)]
+    assert maintenance.list_partitions(discovered) == maintenance.list_partitions(streamed)
+    key = ["device_id", "timestamp", "device_type"]
+    got = maintenance.read_table(spark, streamed).orderBy(*key).collect()
+    assert got == maintenance.read_table(spark, discovered).orderBy(*key).collect()
+    assert len(got) == 4
+
+
+def test_ingest_job_budget(spark, tmp_path):
+    """Tripwire on the write path's job shape: each micro-batch is
+    computed once (one checkpoint whose Observation carries the counters
+    and day set), and the refresh observes its own write. A new eager
+    count/collect anywhere on this path breaks the budget loudly."""
+    import os
+
+    assert not spark.streams.active, "another streaming query would add jobs to the count"
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    src, table, agg = (str(tmp_path / d) for d in ("src", "table", "agg"))
+    os.makedirs(src)
+    q = streaming.run_ingest_stream(
+        streaming.stream_raw_files(spark, src, 1), table, str(tmp_path / "ck"),
+        rejects_path=str(tmp_path / "rejects"), metrics_path=str(tmp_path / "metrics"),
+        anchor=ANCHOR, available_now=False, processing_time="50 milliseconds",
+    )
+    per_batch = []
+    try:
+        for i in range(2):  # the second batch anti-joins against the first's partition
+            staged = str(tmp_path / f"raw{i}")
+            spark.createDataFrame(RAW_FIXTURE_ROWS, schema=RAW_FIXTURE_SCHEMA).coalesce(1).write.parquet(staged)
+            part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
+            j0 = jobs()
+            os.rename(os.path.join(staged, part), os.path.join(src, f"{i}.parquet"))
+            q.processAllAvailable()
+            per_batch.append(jobs() - j0)
+    finally:
+        q.stop()
+    j0 = jobs()
+    maintenance.refresh_bucket_aggregate(spark, table, agg)
+    refresh_jobs = jobs() - j0
+
+    assert maintenance.read_table(spark, table).count() == 20
+    assert max(per_batch) <= 8, per_batch
+    assert refresh_jobs <= 3, refresh_jobs
