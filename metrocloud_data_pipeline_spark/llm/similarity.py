@@ -853,8 +853,17 @@ def knn_join_ivf(
         # spreads — full width kept (the post-join cosine kernel is
         # ~31k pairs/task at 32, real work, and at-scale the scan is
         # wide anyway); no rows_per_task hint.
+        # list_id must be non-nullable: for a nullable key the probe
+        # join infers isnotnull(nearest_lists(...)[1]), which Spark
+        # evaluates below the round-robin, running the kernel a second
+        # time, serially on the scan split. nearest_lists always returns
+        # at least one id and no list is numbered -1, so the coalesce
+        # fallback never fires.
         listed = fan_out_scan(embeddings).select(
-            "*", F.element_at(nearest_lists(F.col("embedding")), 1).alias("list_id")
+            "*",
+            F.coalesce(
+                F.element_at(nearest_lists(F.col("embedding")), 1), F.lit(-1).cast("long")
+            ).alias("list_id"),
         )
 
     if corpus_filter is not None:

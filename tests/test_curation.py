@@ -3,8 +3,11 @@ packing, cleaning, quality filtering (llm/curation.py)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from __spark_entry__ import SF0001_DIR
 from metrocloud_data_pipeline_spark.llm import curation
 
 
@@ -1156,3 +1159,31 @@ def test_contamination_max_gram_df_cuts_hot_grams(spark):
         if fn is curation.contamination_check:
             # the exact probe has no FP term at all post-cut
             assert {d for d, f in got.items() if f > 0} == {100}, got
+
+
+# Build-time jobs a warm builder call may start: only its own
+# localCheckpoint chain. kn_trigram_surprisal checkpoints its gram rows,
+# type counts and suffix pairs (6 jobs); dedup_exact and knn_join_ivf
+# build lazily once the table schemas and the trained codebook are known.
+CURATION_BUILD_JOBS = {"kn_trigram_surprisal": 6, "dedup_exact": 0, "knn_join_ivf": 0}
+
+
+@pytest.mark.skipif(not os.path.isdir(SF0001_DIR), reason=f"testdata dir {SF0001_DIR} not present")
+def test_curation_build_job_budget(spark):
+    """Tripwire on the curation builders' eager work, the counterpart of
+    test_ingest_job_budget: after one warm call, a second builder call
+    starts no job beyond its checkpoints. A new eager count/collect, or
+    a schema inference in sources.load, breaks the budget loudly."""
+    from metrocloud_data_pipeline_spark.queries import get_queries
+
+    assert not spark.streams.active, "another streaming query would add jobs to the count"
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    qs = get_queries()
+    for key in CURATION_BUILD_JOBS:
+        qs[key](spark, SF0001_DIR)
+    spent = {}
+    for key in CURATION_BUILD_JOBS:
+        j0 = jobs()
+        qs[key](spark, SF0001_DIR)
+        spent[key] = jobs() - j0
+    assert all(spent[k] <= n for k, n in CURATION_BUILD_JOBS.items()), spent

@@ -50,7 +50,10 @@ SENTINEL_BOUNDS: dict[str, tuple[int, int, int]] = {
     # the corpus side (present only when the scan is narrower than the
     # session parallelism — it parallelizes the assignment AND cosine
     # Arrow kernels, which otherwise ran at the single-split scan width)
-    "knn_join_ivf": (2, 4, 0),            # 4 Arrow stages = the IVF probe path
+    # 3 Arrow stages = query-side probe lists, corpus assignment and the
+    # post-join cosine; a 4th is the corpus assignment run again below
+    # the round-robin (a nullable list_id, see knn_join_ivf)
+    "knn_join_ivf": (2, 3, 0),
     "kn_trigram_surprisal": (5, 0, 0),    # downstream of checkpointed type frame
     # r12: full five-level C&G recursion — +2 continuation frames
     # (pairs3/pairs2 + their normalizers), all joins stay broadcast
@@ -193,3 +196,25 @@ def test_sentinel_plan_shape_live(spark, name):
     assert s["exchanges"] <= max_ex, (name, s)
     assert s["python_stages"] <= max_py, (name, s)
     assert s["joins"].get("SortMergeJoin", 0) <= max_smj, (name, s)
+
+
+def test_knn_join_ivf_assigns_each_side_once(spark):
+    """The IVF assignment kernel runs once per side: one nearest_lists
+    stage for the query probes, one for the corpus. A nullable corpus
+    list_id lets the join infer isnotnull(nearest_lists(...)[1]), which
+    Spark evaluates below fan_out_scan's round-robin, so the corpus side
+    ran the kernel twice, the first time serially on the scan's single
+    split."""
+    sys.path.insert(0, str(REPO / "tools"))
+    from dump_plans import plan_string
+
+    from __spark_entry__ import SF0001_DIR
+    from metrocloud_data_pipeline_spark.queries import get_queries
+
+    df = get_queries()["knn_join_ivf"](spark, SF0001_DIR)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = plan_string(df)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert len(re.findall(r"^Arguments: \[nearest_lists\(", plan, re.M)) == 2, plan

@@ -1,13 +1,19 @@
-"""Source tests: JSON raw messages (OP-S3), gated Avro IO (OP-S1/S2)."""
+"""Source tests: JSON raw messages (OP-S3), gated Avro IO (OP-S1/S2),
+and the star-schema loader's per-snapshot schema map."""
 
 from __future__ import annotations
 
 import json
+import os
+import shutil
+from datetime import datetime
 
 import pytest
 
+from __spark_entry__ import SF0001_DIR
+from metrocloud_data_pipeline_spark.functions.partitioning import _estimated_rows
 from metrocloud_data_pipeline_spark.operators import ingest
-from metrocloud_data_pipeline_spark.sources import avro_io, raw_json
+from metrocloud_data_pipeline_spark.sources import avro_io, raw_json, star_schema
 from metrocloud_data_pipeline_spark.tests_fixtures import RAW_FIXTURE_ROWS, RAW_FIXTURE_SCHEMA
 
 
@@ -462,3 +468,74 @@ def test_avro_reader_schema_resolution():
     }))
     with pytest.raises(ValueError, match="absent from writer schema and has no default"):
         ac.decode_record(old, wire, reader_schema=required)
+
+
+def _jobs(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+@pytest.mark.skipif(not os.path.isdir(SF0001_DIR), reason=f"testdata dir {SF0001_DIR} not present")
+def test_load_reuses_schema_per_snapshot(spark):
+    """Only the first load of a table file infers its schema (a one-task
+    footer job); a second load of every table starts no Spark job."""
+    first = {t: star_schema.load(spark, SF0001_DIR, t).schema for t in star_schema.TABLES}
+    j0 = _jobs(spark)
+    again = {t: star_schema.load(spark, SF0001_DIR, t).schema for t in star_schema.TABLES}
+    assert _jobs(spark) - j0 == 0
+    assert again == first
+
+
+def test_load_reinfers_rewritten_file(spark, tmp_path):
+    """A rewritten file is a new snapshot: its new schema is inferred."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert star_schema.load(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"], "r_comment": ["x", "y"]}), path
+    )
+    df = star_schema.load(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(r.r_comment for r in df.collect()) == ["x", "y"]
+
+
+def test_load_normalizes_timestamps_on_both_paths(spark, tmp_path):
+    """The NANOS-as-long and TIMESTAMP_NTZ normalizations hold whether
+    the schema was just inferred or came from the map."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    ts = [datetime(2025, 9, 26, 12, 0, 0, 123456), datetime(2025, 9, 27, 0, 0, 1)]
+    pq.write_table(
+        pa.table({
+            "ts": pa.array(ts, pa.timestamp("ns")),
+            "seen": pa.array(ts[::-1], pa.timestamp("us")),
+            "value": [1.0, 2.0],
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    inferred = star_schema.load(spark, str(tmp_path), "events")
+    j0 = _jobs(spark)
+    cached = star_schema.load(spark, str(tmp_path), "events")
+    assert _jobs(spark) - j0 == 0, "second load did not take the recorded schema"
+    for df in (inferred, cached):
+        assert isinstance(df.schema["ts"].dataType, TimestampType)
+        assert isinstance(df.schema["seen"].dataType, TimestampType)
+    rows = sorted(tuple(r) for r in inferred.collect())
+    assert rows == sorted(tuple(r) for r in cached.collect())
+    assert [r[0] for r in rows] == ts
+
+
+@pytest.mark.skipif(not os.path.isdir(SF0001_DIR), reason=f"testdata dir {SF0001_DIR} not present")
+def test_estimated_rows_on_loaded_scan(spark, tmp_path):
+    """The plan-statistics estimate behind every fan_out_scan width cap
+    and the KN broadcast gate is a number, not the swallowed-exception
+    None, on an inferred and on a map-resolved scan."""
+    shutil.copy(os.path.join(SF0001_DIR, "documents.parquet"), tmp_path)
+    inferred = _estimated_rows(star_schema.load(spark, str(tmp_path), "documents"))
+    cached = _estimated_rows(star_schema.load(spark, str(tmp_path), "documents"))
+    assert isinstance(inferred, int) and inferred > 0
+    assert cached == inferred
