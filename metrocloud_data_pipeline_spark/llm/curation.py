@@ -795,7 +795,6 @@ def dsir_importance_weights(
     docs: DataFrame,
     target,
     alpha: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling" — the published
@@ -819,9 +818,7 @@ def dsir_importance_weights(
     oracle-checkability (the plan is unchanged).
 
     Returns (doc_id, n_tokens, bits_per_token)."""
-    rows = lm_token_rows(docs, target)
-    if materialize:
-        rows = rows.localCheckpoint()
+    rows = lm_token_rows(docs, target).localCheckpoint()
     return dsir_score_rows(rows, lm_token_counts(rows), alpha=alpha)
 
 
@@ -830,7 +827,6 @@ def dsir_importance_weights_hashed(
     target,
     alpha: float = 0.5,
     hash_bits: int = 18,
-    materialize: bool = True,
 ) -> DataFrame:
     """DSIR importance weights over HASHED n-gram features — the form
     Xie et al. 2023 actually run at scale: each token maps to
@@ -853,9 +849,7 @@ def dsir_importance_weights_hashed(
         "doc_id",
         "is_target",
         F.pmod(F.xxhash64("token"), F.lit(2 ** int(hash_bits))).alias("token"),
-    )
-    if materialize:
-        rows = rows.localCheckpoint()
+    ).localCheckpoint()
     return dsir_score_rows(rows, lm_token_counts(rows), alpha=alpha)
 
 
@@ -1493,7 +1487,6 @@ def quality_quantile_filter(
     docs: DataFrame,
     q: float = 0.25,
     target_chars: float = 400.0,
-    materialize_scores: bool = True,
 ) -> DataFrame:
     """Corpus-relative quality gate: score every document (the same
     deterministic length x diversity heuristic as text.quality_score),
@@ -1505,7 +1498,7 @@ def quality_quantile_filter(
     Two passes over the scores, not the corpus: the per-doc score frame
     feeds both the 1-row exact-percentile aggregate (broadcast back via
     crossJoin — no driver collect) and the filter, so it is checkpointed
-    once by default (16-byte rows; re-reading them beats re-tokenizing
+    once (16-byte rows; re-reading them beats re-tokenizing
     the corpus per consumer, and Spark plans the two consumers as
     independent subtrees otherwise). The quantile is
     interpolated from round6-ed scores and itself round6-ed before the
@@ -1515,9 +1508,11 @@ def quality_quantile_filter(
     fallback if the score cardinality ever explodes."""
     from .text import quality_score
 
-    scored = quality_score(docs, target_chars=target_chars).select("doc_id", "quality_score")
-    if materialize_scores:
-        scored = scored.localCheckpoint()
+    scored = (
+        quality_score(docs, target_chars=target_chars)
+        .select("doc_id", "quality_score")
+        .localCheckpoint()
+    )
     thr = scored.select(
         round6(F.expr(f"percentile(quality_score, {q})")).alias("threshold")
     )

@@ -1162,10 +1162,21 @@ def test_contamination_max_gram_df_cuts_hot_grams(spark):
 
 
 # Build-time jobs a warm builder call may start: only its own
-# localCheckpoint chain. kn_trigram_surprisal checkpoints its gram rows,
-# type counts and suffix pairs (6 jobs); dedup_exact and knn_join_ivf
-# build lazily once the table schemas and the trained codebook are known.
-CURATION_BUILD_JOBS = {"kn_trigram_surprisal": 6, "dedup_exact": 0, "knn_join_ivf": 0}
+# localCheckpoint chain. The KN builders checkpoint their gram rows, type
+# counts and continuation levels (the exact ones also measure the
+# broadcast gate when plan statistics cannot prove it); the ccnet
+# bucketings add the exact rank form's eager passes to their scorer's.
+# dedup_exact and knn_join_ivf build lazily once the table schemas and
+# the trained codebook are known.
+CURATION_BUILD_JOBS = {
+    "kn_bigram_surprisal": 4,
+    "kn_trigram_surprisal": 6,
+    "kn5_surprisal_hashed": 10,
+    "ccnet_perplexity_buckets_kn3": 23,
+    "ccnet_perplexity_buckets_kn5": 33,
+    "dedup_exact": 0,
+    "knn_join_ivf": 0,
+}
 
 
 @pytest.mark.skipif(not os.path.isdir(SF0001_DIR), reason=f"testdata dir {SF0001_DIR} not present")

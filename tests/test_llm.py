@@ -3064,9 +3064,9 @@ def test_kn_discount_penalises_single_template_pairs(spark):
 def test_kn_word_stats_broadcast_gate(spark, monkeypatch):
     """r16: the word-stats broadcast hint is gated on a known-small key
     count (VERDICT r15 #5). The gate must (a) prove tiny frames small
-    for free, (b) measure when the estimate cannot prove it, (c) refuse
-    to measure un-materialized lineage, and (d) leave the query output
-    IDENTICAL when the hint is withheld (plan strategy only)."""
+    for free, (b) measure when the estimate cannot prove it, and (c)
+    leave the query output IDENTICAL when the hint is withheld (plan
+    strategy only)."""
     rows = [(i, f"w{i % 7} w{(i + 1) % 7} w{(i + 2) % 7}", "en", "s0", 8)
             for i in range(40)]
     docs = spark.createDataFrame(
@@ -3087,11 +3087,7 @@ def test_kn_word_stats_broadcast_gate(spark, monkeypatch):
     # ...and over the bound the hint is withheld
     monkeypatch.setattr(text, "_WORD_STATS_BROADCAST_MAX", 1)
     assert text._word_stats_fit_broadcast(frame, "prev") is False
-    # (c) unprovable + measure=False -> withheld, never recomputed
-    assert (
-        text._word_stats_fit_broadcast(frame, "prev", measure=False) is False
-    )
-    # (d) withheld hint (bound still 1) changes the join strategy,
+    # (c) withheld hint (bound still 1) changes the join strategy,
     # never the values
     gated = {r["doc_id"]: r for r in text.kn_bigram_surprisal(docs).collect()}
     assert gated == baseline

@@ -54,7 +54,10 @@ SENTINEL_BOUNDS: dict[str, tuple[int, int, int]] = {
     # post-join cosine; a 4th is the corpus assignment run again below
     # the round-robin (a nullable list_id, see knn_join_ivf)
     "knn_join_ivf": (2, 3, 0),
-    "kn_trigram_surprisal": (5, 0, 0),    # downstream of checkpointed type frame
+    # downstream of the checkpointed type frame: the stats aggregates,
+    # the 1-row type total and the per-doc fold
+    "kn_bigram_surprisal": (4, 0, 0),
+    "kn_trigram_surprisal": (5, 0, 0),
     # r12: full five-level C&G recursion — +2 continuation frames
     # (pairs3/pairs2 + their normalizers), all joins stay broadcast
     "kn5_surprisal_hashed": (7, 0, 0),

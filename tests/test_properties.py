@@ -735,7 +735,7 @@ def test_repetition_panel_matches_naive(spark, texts):
         assert got[i] == want, (i, t, got[i], want)
 
 
-# --- Kneser-Ney trigram surprisal vs a naive reference ----------------------
+# --- Kneser-Ney surprisal vs a naive reference, every registered order -----
 
 _kn_corpus = st.lists(
     st.lists(st.sampled_from("a b c d aa bb".split()), min_size=0, max_size=8),
@@ -744,63 +744,70 @@ _kn_corpus = st.lists(
 )
 
 
-def _naive_kn3(rows, D=0.75):
-    """Direct transcription of the interpolated-KN order-3 formula from
-    kn_trigram_surprisal's docstring — dict arithmetic, no frames."""
+def _naive_kn(rows, order, D=0.75):
+    """Direct transcription of the interpolated-KN recursion in
+    kn_surprisal's docstring at any order — dict arithmetic, no frames."""
     import math
     from collections import Counter
 
-    tris_per_doc, all_tris = {}, []
+    grams_per_doc, counts = {}, Counter()
     for doc_id, toks in rows:
-        ts = [tuple(toks[i:i + 3]) for i in range(len(toks) - 2)]
-        if ts:
-            tris_per_doc[doc_id] = ts
-            all_tris += ts
-    ct = Counter(all_tris)
-    ch, nfwd, cc = Counter(), Counter(), Counter()
-    for (a, b, c), n in ct.items():
-        ch[(a, b)] += n
-        nfwd[(a, b)] += 1
-    for (a, b, c) in ct:
-        cc[(b, c)] += 1
-    ccsum, nfwd_mid, nback = Counter(), Counter(), Counter()
-    for (b, c), n in cc.items():
-        ccsum[b] += n
-        nfwd_mid[b] += 1
-        nback[c] += 1
-    B = len(cc)
-    out = {}
-    for doc_id, ts in tris_per_doc.items():
-        bits = 0.0
-        for (a, b, c) in ts:
-            pmid = (
-                max(cc[(b, c)] - D, 0) / ccsum[b]
-                + D * nfwd_mid[b] / ccsum[b] * nback[c] / B
-            )
-            p = (
-                max(ct[(a, b, c)] - D, 0) / ch[(a, b)]
-                + D * nfwd[(a, b)] / ch[(a, b)] * pmid
-            )
-            bits += -math.log2(p)
-        out[doc_id] = (len(ts), bits / len(ts))
-    return out
+        gs = [tuple(toks[i:i + order]) for i in range(len(toks) - order + 1)]
+        if gs:
+            grams_per_doc[doc_id] = gs
+            counts.update(gs)
+    # raw counts at the top order; below it, continuation counts: the
+    # distinct words ahead of each suffix among the level-above types
+    level = {order: counts}
+    for k in range(order - 1, 1, -1):
+        level[k] = Counter(g[1:] for g in level[k + 1])
+    csum = {k: Counter() for k in level}
+    nfwd = {k: Counter() for k in level}
+    for k, cnt in level.items():
+        for g, c in cnt.items():
+            csum[k][g[:-1]] += c
+            nfwd[k][g[:-1]] += 1
+    nback = Counter(g[-1] for g in level[2])
+    B = len(level[2])
+
+    def prob(g):
+        k, h = len(g), g[:-1]
+        head = max(level[k][g] - D, 0) / csum[k][h]
+        w = D * nfwd[k][h] / csum[k][h]
+        return head + (w * nback[g[-1]] / B if k == 2 else w * prob(g[1:]))
+
+    return {
+        doc_id: (len(gs), sum(-math.log2(prob(g)) for g in gs) / len(gs))
+        for doc_id, gs in grams_per_doc.items()
+    }
 
 
+# builder -> (order, kwargs, count column, bits column); kn5 at 2^62
+# buckets is effectively exact, so it answers to the same reference
+_KN_BUILDERS = {
+    "kn_bigram_surprisal": (2, {}, "bigram_count", "kn_bits_per_bigram"),
+    "kn_trigram_surprisal": (3, {}, "trigram_count", "kn3_bits_per_trigram"),
+    "kn5_surprisal_hashed": (5, {"n_buckets": 1 << 62}, "gram5_count", "kn5h_bits_per_gram"),
+}
+
+
+@pytest.mark.parametrize("builder", list(_KN_BUILDERS))
 @settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(corpus=_kn_corpus)
-def test_kn_trigram_matches_naive_reference(spark, corpus):
+def test_kn_matches_naive_reference(spark, builder, corpus):
     from metrocloud_data_pipeline_spark.llm import text as llm_text
 
+    order, kwargs, n_col, bits_col = _KN_BUILDERS[builder]
     rows = [(i, toks) for i, toks in enumerate(corpus)]
     docs = spark.createDataFrame(
         [(i, " ".join(toks), "en", "s0", len(" ".join(toks))) for i, toks in rows],
         "doc_id long, text string, lang string, source string, n_chars long",
     ).where(F.length(F.trim("text")) > 0)
     got = {
-        r["doc_id"]: (r["trigram_count"], r["kn3_bits_per_trigram"])
-        for r in llm_text.kn_trigram_surprisal(docs).collect()
+        r["doc_id"]: (r[n_col], r[bits_col])
+        for r in getattr(llm_text, builder)(docs, **kwargs).collect()
     }
-    want = _naive_kn3(rows)
+    want = _naive_kn(rows, order)
     assert set(got) == set(want)
     for doc_id, (n, bits) in want.items():
         assert got[doc_id][0] == n
