@@ -11,15 +11,16 @@ times (default 3) and reports the per-query MEDIAN — single-shot
 timings on this box vary ±13% run-to-run, so n=1 cannot distinguish a
 real regression from noise. The suite total is the sum of medians.
 
-BASELINE POLICY (VERDICT r12 #4): BENCH_LOCAL.json is the BUILDER-HOST
-archive — every run of this script overwrites it, including the
-driver's per-round run on its (slower, noisier) host. Before closing a
-round the builder re-archives it from a clean runs=3 run on the builder
-host, so the next round's vs_prev table always normalizes against a
-known-clean baseline; a driver overwrite mid-round is expected and
-harmless because the sentinel-normalized ratios are host-independent to
-first order (the r12 seq_pack_summary flag was exactly this: driver-host
-in-suite state, isolated builder-host re-measure norm 0.29-0.63).
+BASELINE POLICY: BENCH_LOCAL.json (and BENCH_FULL_LOCAL.json for
+--all) is the only baseline. Every run compares against the archive the
+previous run left next to this script, then overwrites it. Each archive
+records the scale factor (`sf`) and the core count (`cpus`, Spark's
+defaultParallelism) and `master` it ran with. A baseline whose sf or
+cpus differs from this run's, or that records no cpus, is refused: the
+run reports `"vs_prev": {}` and says why in `vs_prev_reason`.
+Sentinel-normalized ratios absorb host speed to first order, but not a
+different scale factor (superlinear queries) or core count (parallel
+stages), so such a comparison would flag phantom regressions.
 """
 
 from __future__ import annotations
@@ -375,32 +376,22 @@ def main_all() -> None:
     sentinel_sec = timings[SENTINEL]
     normalized = {n: round(s / sentinel_sec, 3) for n, s in timings.items()}
     sf_val = _sf_value()
-    here = os.path.dirname(os.path.abspath(__file__))
-    prev_path = os.path.join(here, "BENCH_FULL_LOCAL.json")
+    cpus = spark.sparkContext.defaultParallelism
+    prev, reason = _baseline("BENCH_FULL_LOCAL.json", sf_val, cpus)
     vs: dict = {}
-    if os.path.exists(prev_path):
-        try:
-            with open(prev_path) as f:
-                prev = json.load(f)
-            prev_norm = prev.get("queries_norm") or {}
-            # same SF gate as the HEADLINE bench: a baseline at a
-            # different scale factor is not a baseline
-            if prev.get("sf") == sf_val and prev_norm:
-                vs = _ratio_table(
-                    normalized, prev_norm, "BENCH_FULL_LOCAL.json(prev)"
-                )
-                del vs["norm_ratio"]  # bulky; the archive keeps queries_norm
-            prev_deg = prev.get("degenerate_sf001", {}).get("queries", {})
-            if prev_deg and degenerate:
-                vs_deg = {
-                    n: round(degenerate[n] / prev_deg[n], 3)
-                    for n in degenerate
-                    if prev_deg.get(n, 0) > 0
-                }
-                if vs_deg:
-                    vs["degenerate_sf001_raw_ratio"] = vs_deg
-        except Exception:
-            vs = {}
+    if prev is not None:
+        vs = _ratio_table(
+            normalized, prev["queries_norm"], "BENCH_FULL_LOCAL.json(prev)"
+        )
+        del vs["norm_ratio"]  # bulky; the archive keeps queries_norm
+        prev_deg = prev.get("degenerate_sf001", {}).get("queries", {})
+        vs_deg = {
+            n: round(degenerate[n] / prev_deg[n], 3)
+            for n in degenerate
+            if prev_deg.get(n, 0) > 0
+        }
+        if vs_deg:
+            vs["degenerate_sf001_raw_ratio"] = vs_deg
     out = {
         "queries": timings,
         "queries_norm": normalized,
@@ -408,6 +399,8 @@ def main_all() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf_val,
+        "cpus": cpus,
+        "master": spark.sparkContext.master,
         "runs": 1,
         "n_queries": len(timings),
         "degenerate_sf001": {
@@ -422,8 +415,10 @@ def main_all() -> None:
             sorted(normalized.items(), key=lambda kv: kv[1], reverse=True)[:5]
         ),
         "vs_prev": vs,
+        "vs_prev_reason": reason,
     }
-    with open(prev_path, "w") as f:
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "BENCH_FULL_LOCAL.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps({k: v for k, v in out.items() if k != "queries_norm"}))
 
@@ -479,8 +474,13 @@ def main() -> None:
     # FIRST; everything a reader needs without re-running — suite
     # total, sentinel seconds, worst-5 normalized, both regression
     # tables — goes LAST so it always survives the truncation window.
-    vs = _vs_prev(normalized, sf_val)
-    vs_full = vs.get("vs_prev", {})
+    cpus = spark.sparkContext.defaultParallelism
+    prev, reason = _baseline("BENCH_LOCAL.json", sf_val, cpus)
+    vs_full = (
+        _ratio_table(normalized, prev["queries_norm"], "BENCH_LOCAL.json")
+        if prev is not None
+        else {}
+    )
     worst5 = dict(
         sorted(normalized.items(), key=lambda kv: kv[1], reverse=True)[:5]
     )
@@ -494,6 +494,8 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf_val,
+        "cpus": cpus,
+        "master": spark.sparkContext.master,
         "runs": runs,
         "n_queries": len(timings),
         "sentinel": {"name": SENTINEL, "sec": sentinel_sec},
@@ -501,11 +503,11 @@ def main() -> None:
         "vs_prev": {
             k: v for k, v in vs_full.items() if k != "norm_ratio"
         },
+        "vs_prev_reason": reason,
     }
     # self-archive the FULL document next to the script: the driver
     # artifact keeps the summary, this file keeps every per-query
-    # number (and is the _vs_prev fallback when the newest BENCH_r*.json
-    # is a truncated tail)
+    # number and is the next run's baseline
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
         json.dump(out, f, indent=1)
@@ -527,101 +529,30 @@ def main() -> None:
     )
 
 
-def _norm_pairs_from_tail(tail: str) -> dict[str, float]:
-    """Recover queries_norm pairs from the driver's truncated bench
-    tail. Anchored on the literal `"queries_norm": {` key: if the
-    truncation window cut that key away, BAIL with {} rather than
-    guess — under the r8+ layout a left-truncated tail ends with the
-    vs_prev ratio tables, and the old rindex('{') heuristic would
-    mis-parse a regression table as queries_norm and poison the drift
-    ratios. Best-effort by construction: the result is only used for
-    the round-over-round drift table, never for the primary metrics."""
-    import re
-
-    key = '"queries_norm": {'
-    idx = tail.find(key)
-    if idx < 0:
-        return {}
-    seg = tail[idx + len(key):].split("}", 1)[0]
-    pairs = re.findall(r'"([a-z0-9_]+)": ([0-9.]+)', seg)
-    return {k: float(v) for k, v in pairs}
-
-
-def _tail_sf(tail: str):
-    """Scale factor recorded in a truncated driver tail (the compact
-    summary keys sit LAST in the artifact contract, so `"sf"` survives
-    truncation whenever anything does). None when unparseable."""
-    import re
-
-    m = re.search(r'"sf": ([0-9.]+)', tail)
-    return float(m.group(1)) if m else None
-
-
-def _vs_prev(normalized: dict[str, float], sf_val) -> dict:
-    """Round-over-round drift gate on the SENTINEL-NORMALIZED medians
-    (the only cross-round-comparable number on this host — absolute
-    totals swing ±30% with host load): against the newest BENCH_r*.json
-    next to this script, report each common query's norm ratio and
-    flag anything past the 1.3x regression line for plan-level review.
-    Purely additive metadata — the primary metrics are unchanged."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    # discovery must be crash-proof too: a stray BENCH_rX.json matches
-    # the glob but not the number pattern — skip it rather than lose
-    # the whole suite's results to an AttributeError after measuring
-    numbered = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            numbered.append((int(m.group(1)), p))
-    if not numbered:
-        return {}
-    prior = [p for _, p in sorted(numbered)]
-    path = prior[-1]
+def _baseline(name: str, sf_val, cpus: int):
+    """(previous archive, None) when `name` next to this script is a
+    comparable baseline for this run — same sf, same cpus, per-query
+    norms present — else (None, the reason it is refused). Never
+    raises: a malformed archive must not cost the suite's results."""
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), name)
     try:
         with open(path) as f:
-            raw = f.read().strip()
-        try:
-            prev = json.loads(raw)  # driver record: one pretty-printed doc
-        except json.JSONDecodeError:
-            prev = json.loads(raw.splitlines()[-1])  # raw bench.py line
-        # the driver wraps bench's JSON line ("parsed" when it fit,
-        # else a TRUNCATED "tail" fragment); a direct bench.py output
-        # is unwrapped
-        if isinstance(prev.get("parsed"), dict):
-            prev = prev["parsed"]
-        # SF GATE (r8 judge: a sf0.1 pass ratio'd against a sf0.001
-        # BENCH_LOCAL archive produced 21 phantom ">1.3x regressions" —
-        # just superlinear queries at 100x the data). A baseline whose
-        # scale factor differs from this run's is NOT a baseline.
-        prev_norm = prev.get("queries_norm")
-        if prev_norm is not None and prev.get("sf") != sf_val:
-            prev_norm = None
-        if not prev_norm:
-            # r8+ layout: the driver tail keeps only the compact
-            # summary; the full per-query document self-archives to
-            # BENCH_LOCAL.json on every bench run — prefer the most
-            # recent sf-MATCHED full local pass over tail-scraping
-            local = os.path.join(here, "BENCH_LOCAL.json")
-            if os.path.exists(local):
-                with open(local) as f:
-                    loc = json.load(f)
-                if loc.get("sf") == sf_val and loc.get("queries_norm"):
-                    prev_norm = loc["queries_norm"]
-                    path = local
-        if not prev_norm and isinstance(prev.get("tail"), str):
-            # last resort: scrape the truncated driver tail — only if
-            # its recorded sf matches this run's
-            if _tail_sf(prev["tail"]) == sf_val:
-                prev_norm = _norm_pairs_from_tail(prev["tail"])
-                path = prior[-1]
-        if not prev_norm:
-            return {}
-        return {"vs_prev": _ratio_table(normalized, prev_norm, os.path.basename(path))}
-    except Exception:  # pragma: no cover - a malformed prior file never blocks the bench
-        return {}
+            prev = json.load(f)
+    except FileNotFoundError:
+        return None, f"no {name}"
+    except (OSError, ValueError) as e:
+        return None, f"{name} unreadable: {e}"
+    if not isinstance(prev, dict):
+        return None, f"{name} is not a JSON object"
+    if prev.get("sf") != sf_val:
+        return None, f"{name} ran at sf {prev.get('sf')}, this run at sf {sf_val}"
+    if prev.get("cpus") is None:
+        return None, f"{name} records no cpus"
+    if prev["cpus"] != cpus:
+        return None, f"{name} ran on {prev['cpus']} cpus, this run on {cpus}"
+    if not prev.get("queries_norm"):
+        return None, f"{name} has no queries_norm"
+    return prev, None
 
 
 if __name__ == "__main__":

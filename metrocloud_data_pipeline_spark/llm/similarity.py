@@ -269,6 +269,14 @@ def cosine_near_dup_exact(
     return scored.where(F.col("cosine_sim") >= threshold)
 
 
+def _stride_sample(embeddings: DataFrame, stride: int) -> DataFrame:
+    """The training-free centroid frame (list_id, c_emb): a deterministic
+    1-in-stride sample of the corpus, each centroid named by its vec_id."""
+    return embeddings.where(F.col("vec_id") % stride == 0).select(
+        F.col("vec_id").alias("list_id"), F.col("embedding").alias("c_emb")
+    )
+
+
 def _collect_codebook(centroids: DataFrame):
     """Driver-side (list_ids, unit-normalized codebook matrix) from the
     centroid frame — tiny by construction (1-in-stride sample)."""
@@ -281,12 +289,47 @@ def _collect_codebook(centroids: DataFrame):
     return ids, code
 
 
-# Cap for the auto-trained coarse quantizer. PROBE_r06: on clustered
-# corpora the training-free stride sample ties list count to corpus
-# SIZE and recall@10 collapses (0.41 avg / 0.00 min at 100k vectors),
-# while a k-means codebook sized near the natural cluster count holds
-# 1.00 at both 1x and 10x — list structure should track cluster
-# structure, not corpus size.
+def _unit_codebook(code):
+    """Row-normalize a centroid matrix; an all-zero centroid stays zero."""
+    import numpy as np
+
+    norms = np.linalg.norm(code, axis=1, keepdims=True)
+    norms[norms == 0.0] = 1.0
+    return code / norms
+
+
+def _list_ranker():
+    """The list-ranking kernel of every coarse-quantizer consumer:
+    rank_lists(vectors, list_ids, code, n) -> [rows, n] list_ids, each
+    row's n nearest lists by cosine against the unit-normalized
+    codebook `code`, ties to the smaller list_id (every codebook is
+    sorted by list_id, so a stable sort on -similarity does it).
+
+    Built in a closure so the pandas UDFs that call it ship it to the
+    Python workers by value: a module-level function pickles by
+    reference, and the workers need not be able to import this
+    package."""
+    import numpy as np
+
+    def rank_lists(vectors, list_ids, code, n):
+        a = np.vstack(vectors).astype(np.float64)
+        # zero-norm guard (failed-encoder rows): dividing by a 0 norm
+        # makes the row all-NaN and the sort below pick a list by NaN
+        # accident (plus a numpy warning per batch); a zero row instead
+        # dots to 0 with every centroid and lands in the first lists
+        # deterministically — its cosine is NULL downstream either way,
+        # so it can never rank as a neighbor
+        norms = np.linalg.norm(a, axis=1, keepdims=True)
+        norms[norms == 0.0] = 1.0
+        sims = (a / norms) @ code.T
+        return list_ids[np.argsort(-sims, axis=1, kind="stable")[:, :n]]
+
+    return rank_lists
+
+
+# Cap for the auto-trained coarse quantizer: list structure should
+# track cluster structure, not corpus size (PROBE_r06, see
+# coarse_quantizer).
 DEFAULT_TRAIN_K = 32
 
 # Minimum training points per centroid when auto-sizing (FAISS's
@@ -307,43 +350,51 @@ def _auto_train_k(embeddings: DataFrame) -> int:
     return max(1, min(DEFAULT_TRAIN_K, n // TRAIN_POINTS_PER_LIST))
 
 
-def _resolve_quantizer(fn: str, quantizer: str | None, stride: int | None):
-    """Resolve the (quantizer, stride) pair for a coarse-quantizer
-    consumer. stride= names a SPECIFIC training-free sample, while
-    quantizer="trained" takes no stride — so an explicit stride with
-    quantizer unset IMPLIES quantizer="stride" (the caller asked for
-    that sample), and an explicit stride WITH quantizer="trained"
-    CONFLICTS and raises: silently ignoring the stride would hand back
-    a different index than the caller asked for, with no signal
-    (ADVICE r7 — tests passing stride=7 were getting auto-trained
-    codebooks)."""
-    if quantizer is None:
-        quantizer = "stride" if stride is not None else "trained"
-    elif quantizer == "trained" and stride is not None:
-        raise ValueError(
-            f"{fn}: stride={stride} was passed together with "
-            "quantizer='trained', which takes no stride — pass "
-            "quantizer='stride' for the training-free sample, or drop "
-            "stride= to train"
-        )
-    if quantizer not in ("trained", "stride"):
+def coarse_quantizer(
+    embeddings: DataFrame,
+    codebook=None,
+    quantizer: str | None = None,
+    stride: int | None = None,
+    train_k: int | None = None,
+    n_iter: int = 4,
+    fn: str = "coarse_quantizer",
+):
+    """Resolve the coarse quantizer of an IVF index: (list_ids sorted
+    ascending, unit-normalized [n_lists, dim] codebook). Every IVF
+    entry point resolves its codebook here, once, and probes with it.
+
+    Policy. The default is a k-means TRAINED codebook
+    (trained_codebook, n_iter shuffle-free corpus scans), auto-sized by
+    _auto_train_k (one count) unless `train_k` is given. PROBE_r06
+    measured the training-free stride sample collapsing to recall@10
+    0.41 avg / 0.00 min at 100k clustered vectors (its list count is
+    tied to corpus SIZE and over-segments every natural cluster) while
+    the trained codebook holds 1.00 at 1x and 10x. `quantizer="stride"`
+    gives the training-free 1-in-`stride` sample back (default 31; for
+    uniform corpora, where list count should track size). A caller's
+    `codebook` is returned as is: train once at deploy, serve forever.
+
+    Conflicts raise instead of being silently resolved (ADVICE r7/r8:
+    callers passing stride=7 got auto-trained codebooks, with no
+    signal): `stride=` alone implies quantizer="stride"; `stride=`
+    together with quantizer="trained" or with an explicit `codebook`
+    raises, since neither takes a stride; an unknown quantizer raises.
+    `fn` names the calling entry point in the message."""
+    if quantizer not in (None, "trained", "stride"):
         raise ValueError(f"{fn}: unknown quantizer {quantizer!r}")
-    return quantizer, 31 if stride is None else stride
-
-
-def _reject_stride_with_codebook(fn: str, stride, param: str) -> None:
-    """The codebook-path twin of _resolve_quantizer's conflict check
-    (ADVICE r8): an explicit stride= together with a caller-supplied
-    codebook used to be SILENTLY ignored — the caller got a different
-    index than asked for, with no signal. The supplied codebook IS the
-    coarse quantizer, so the stride sample it names cannot apply."""
-    if stride is not None:
+    if stride is not None and (codebook is not None or quantizer == "trained"):
+        given = "an explicit codebook" if codebook is not None else "quantizer='trained'"
         raise ValueError(
-            f"{fn}: stride={stride} was passed together with an explicit "
-            f"{param}= — the supplied {param} IS the coarse quantizer, so "
-            "the training-free sample stride names would be silently "
-            "ignored; drop one of the two"
+            f"{fn}: stride={stride} was passed together with {given}, which "
+            "takes no stride — the training-free sample stride names would "
+            "be silently ignored; drop one of the two"
         )
+    if codebook is not None:
+        return codebook
+    if quantizer == "stride" or stride is not None:
+        return _collect_codebook(_stride_sample(embeddings, 31 if stride is None else stride))
+    k = train_k if train_k is not None else _auto_train_k(embeddings)
+    return trained_codebook(embeddings, k=k, n_iter=n_iter)
 
 
 def quantizer_fingerprint(ids, code) -> str:
@@ -408,42 +459,30 @@ def ivf_assignments(
     """IVF coarse index: (centroids, list assignments).
 
     Centroids are a deterministic 1-in-stride sample of the corpus
-    (vec_id % stride == 0) — a training-free quantizer that scales the
-    list count with corpus size. The codebook is collected and broadcast
+    (_stride_sample) — a training-free quantizer that scales the list
+    count with corpus size. The codebook is collected and broadcast
     as one dense matrix (the FAISS pattern — fine up to ~1M centroids at
     these dims) and assignment is a single narrow pass: per Arrow batch,
     one BLAS matmul against the codebook + argmax. No candidate join, no
     shuffle — the earlier corpus x centroids join + max_by materialized
     N*C pair rows and shuffled them, which is exactly what dies at
-    100 TB. Ties break to the smallest list_id (codebook sorted, argmax
-    takes the first maximum). At scale this runs once at ingest and the
-    corpus is written bucketed by list_id, so probes prune to nprobe
-    buckets. Pass a precollected `codebook` (from _collect_codebook) to
-    share one driver-side collect across consumers."""
-    import numpy as np
+    100 TB. Ties break to the smallest list_id (_list_ranker). At scale
+    this runs once at ingest and the corpus is written bucketed by
+    list_id, so probes prune to nprobe buckets. Pass a precollected
+    `codebook` (from coarse_quantizer) to share one driver-side resolve
+    across consumers."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    centroids = embeddings.where(F.col("vec_id") % stride == 0).select(
-        F.col("vec_id").alias("list_id"), F.col("embedding").alias("c_emb")
-    )
+    centroids = _stride_sample(embeddings, stride)
     ids, code = codebook if codebook is not None else _collect_codebook(centroids)
     bc = embeddings.sparkSession.sparkContext.broadcast((ids, code))
+    rank_lists = _list_ranker()
 
     @pandas_udf("long")
     def nearest_list(emb):
         list_ids, codebook = bc.value
-        a = np.vstack(emb.values).astype(np.float64)
-        # zero-norm guard (failed-encoder rows): dividing by a 0 norm
-        # makes the row all-NaN and the argmax/argsort below pick a
-        # list by NaN accident (plus a numpy warning per batch); a
-        # zero row instead dots to 0 with every centroid and lands in
-        # the first list deterministically — its cosine is NULL
-        # downstream either way, so it can never rank as a neighbor
-        n = np.linalg.norm(a, axis=1, keepdims=True)
-        n[n == 0.0] = 1.0
-        a /= n
-        return pd.Series(list_ids[np.argmax(a @ codebook.T, axis=1)])
+        return pd.Series(rank_lists(emb.values, list_ids, codebook, 1)[:, 0])
 
     # attach_cols rides extra columns (e.g. the vector itself) through
     # the SAME narrow projection, so consumers that need the listed
@@ -624,7 +663,6 @@ def ivf_corpus_table(
     codebook=None,
     quantizer: str | None = None,
     train_k: int | None = None,
-    train_iter: int = 4,
 ) -> str:
     """Materialize the IVF-listed corpus — (list_id, vec_id, label,
     embedding) — as a table BUCKETED on list_id, the build-at-ingest
@@ -634,28 +672,22 @@ def ivf_corpus_table(
     exchange — at 100 TB the corpus shuffle is the join's dominant
     cost, and it disappears (measured by tools/scale_probe.py).
 
-    The coarse quantizer defaults to the k-means TRAINED codebook
-    (PROBE_r06: the stride sample's recall collapses with corpus size
-    on clustered data; trained holds 1.0). Pass `quantizer="stride"`
-    for the training-free sample — an explicit `stride=` alone implies
-    it, and stride= with quantizer="trained" raises rather than being
-    silently ignored — or `codebook` to reuse one fit.
-    Whichever is used, it is persisted alongside as
-    `<table>_quantizer` with a byte fingerprint — reload it with
-    load_ivf_quantizer and hand (codebook, fingerprint) to
-    knn_join_ivf, which REFUSES a pre-listed corpus without the
-    matching quantizer (probing a table with a different codebook's
-    list_ids returns silently wrong neighbors)."""
+    The coarse quantizer is `codebook`, or resolved from `quantizer`,
+    `stride` and `train_k` by coarse_quantizer (trained by default).
+    It is persisted alongside as `<table>_quantizer` with a byte
+    fingerprint — reload it with load_ivf_quantizer and hand
+    (codebook, fingerprint) to knn_join_ivf, which REFUSES a pre-listed
+    corpus without the matching quantizer (probing a table with a
+    different codebook's list_ids returns silently wrong neighbors)."""
     from ..operators.maintenance import _fs_delete, write_bucketed
 
-    # validate EVERY argument before touching the existing index
-    # (ADVICE r8: validation used to run AFTER the drop loop, so the
-    # rejected call this check exists for destroyed a previously
-    # persisted serving index and THEN raised, leaving nothing behind)
-    if codebook is not None:
-        _reject_stride_with_codebook("ivf_corpus_table", stride, "codebook")
-    else:
-        quantizer, stride = _resolve_quantizer("ivf_corpus_table", quantizer, stride)
+    # resolve (and so validate) the quantizer before touching the
+    # existing index (ADVICE r8: validation used to run AFTER the drop
+    # loop, so the rejected call this check exists for destroyed a
+    # previously persisted serving index and THEN raised)
+    codebook = coarse_quantizer(
+        embeddings, codebook, quantizer, stride, train_k, fn="ivf_corpus_table"
+    )
 
     # a previous session may have left the managed location behind
     # without a catalog entry (saveAsTable then refuses the name even
@@ -666,19 +698,6 @@ def ivf_corpus_table(
         wh = spark.conf.get("spark.sql.warehouse.dir")
         _fs_delete(f"{wh.rstrip('/')}/{t.lower()}")
 
-    if codebook is None:
-        if quantizer == "trained":
-            codebook = trained_codebook(
-                embeddings,
-                k=train_k if train_k is not None else _auto_train_k(embeddings),
-                n_iter=train_iter,
-            )
-        else:
-            codebook = _collect_codebook(
-                embeddings.where(F.col("vec_id") % stride == 0).select(
-                    F.col("vec_id").alias("list_id"), F.col("embedding").alias("c_emb")
-                )
-            )
     _, assign = ivf_assignments(embeddings, codebook=codebook)
     listed = assign.join(embeddings, "vec_id")
     write_bucketed(listed, table_name, "list_id", num_buckets=num_buckets)
@@ -697,7 +716,6 @@ def knn_join_ivf(
     codebook=None,
     quantizer: str | None = None,
     train_k: int | None = None,
-    train_iter: int = 4,
     codebook_fingerprint: str | None = None,
     corpus_filter=None,
     exclude_self: bool = False,
@@ -742,20 +760,11 @@ def knn_join_ivf(
     query frame is a SUBSET of the corpus (escalate_underfilled's
     re-probe of starved self-ANN queries), harmless otherwise.
 
-    The coarse quantizer DEFAULTS to a k-means trained codebook
-    (auto-fit here when neither `codebook` nor `listed` is given) —
-    PROBE_r06 measured the training-free stride sample collapsing to
-    recall@10 0.41 avg / 0.00 min at 100k clustered vectors (list count
-    tied to corpus size over-segments every natural cluster) while the
-    trained codebook holds 1.00 at 1x AND 10x; the fit is n_iter
-    shuffle-free corpus scans (kmeans_fit mapInPandas partials).
-    Pass `quantizer="stride"` to get the training-free sample back
-    (uniform corpora where list count should track size) — an explicit
-    `stride=` alone implies it, and stride= combined with
-    quantizer="trained" raises rather than being silently ignored — or
-    `codebook` ((list_ids, unit-normalized [n_lists, dim] matrix),
-    e.g. from trained_codebook) to reuse a fit — train once at deploy,
-    serve forever.
+    The coarse quantizer is `codebook` ((list_ids, unit-normalized
+    [n_lists, dim] matrix), e.g. from coarse_quantizer) or resolved here
+    from `quantizer`, `stride` and `train_k` by coarse_quantizer
+    (trained by default); one driver-side resolve serves both the
+    assignment and the per-query probe selection.
 
     A pre-built `listed` corpus REQUIRES the quantizer it was bucketed
     by: pass `codebook` + `codebook_fingerprint` from
@@ -768,66 +777,35 @@ def knn_join_ivf(
     it cannot know which table a bare DataFrame came from — pair the
     halves through knn_join_ivf_table, which loads both from one table
     name, to close that by construction."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.window import Window
 
-    if codebook is not None:
-        _reject_stride_with_codebook("knn_join_ivf", stride, "codebook")
-    if listed is not None:
-        if codebook is None:
-            raise ValueError(
-                "knn_join_ivf: a pre-listed corpus must come with the quantizer "
-                "it was built with — load_ivf_quantizer(spark, f'{table}_quantizer') "
-                "and pass codebook=(ids, code), codebook_fingerprint=fp"
-            )
-        ids, code = codebook
-        if codebook_fingerprint is None or (
-            quantizer_fingerprint(ids, code) != codebook_fingerprint
-        ):
-            raise ValueError(
-                "knn_join_ivf: codebook does not match the fingerprint persisted "
-                "with the listed corpus table — probing a layout with a different "
-                "quantizer's list_ids returns silently wrong neighbors"
-            )
-    elif codebook is None:
-        quantizer, stride = _resolve_quantizer("knn_join_ivf", quantizer, stride)
-        if quantizer == "trained":
-            ids, code = trained_codebook(
-                embeddings,
-                k=train_k if train_k is not None else _auto_train_k(embeddings),
-                n_iter=train_iter,
-            )
-        else:
-            # one driver-side centroid collect serves BOTH passes
-            # (assignment and per-query probe selection)
-            cent_frame = embeddings.where(F.col("vec_id") % stride == 0).select(
-                F.col("vec_id").alias("list_id"), F.col("embedding").alias("c_emb")
-            )
-            ids, code = _collect_codebook(cent_frame)
-    else:
-        ids, code = codebook
+    if listed is not None and codebook is None:
+        raise ValueError(
+            "knn_join_ivf: a pre-listed corpus must come with the quantizer "
+            "it was built with — load_ivf_quantizer(spark, f'{table}_quantizer') "
+            "and pass codebook=(ids, code), codebook_fingerprint=fp"
+        )
+    ids, code = coarse_quantizer(
+        embeddings, codebook, quantizer, stride, train_k, fn="knn_join_ivf"
+    )
+    if listed is not None and (
+        codebook_fingerprint is None
+        or quantizer_fingerprint(ids, code) != codebook_fingerprint
+    ):
+        raise ValueError(
+            "knn_join_ivf: codebook does not match the fingerprint persisted "
+            "with the listed corpus table — probing a layout with a different "
+            "quantizer's list_ids returns silently wrong neighbors"
+        )
     bc = embeddings.sparkSession.sparkContext.broadcast((ids, code, nprobe))
+    rank_lists = _list_ranker()
 
     @pandas_udf("array<long>")
     def nearest_lists(emb):
         list_ids, codebook, npr = bc.value
-        a = np.vstack(emb.values).astype(np.float64)
-        # zero-norm guard (failed-encoder rows): dividing by a 0 norm
-        # makes the row all-NaN and the argmax/argsort below pick a
-        # list by NaN accident (plus a numpy warning per batch); a
-        # zero row instead dots to 0 with every centroid and lands in
-        # the first list deterministically — its cosine is NULL
-        # downstream either way, so it can never rank as a neighbor
-        n = np.linalg.norm(a, axis=1, keepdims=True)
-        n[n == 0.0] = 1.0
-        a /= n
-        sims = a @ codebook.T
-        # top-npr lists per row; ties break to the smaller list_id via
-        # stable argsort on (-sim, list index)
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :npr]
-        return pd.Series(list(list_ids[order]))
+        return pd.Series(list(rank_lists(emb.values, list_ids, codebook, npr)))
 
     if listed is None:
         # assignment is a pure per-row map: attach it as a COLUMN
@@ -1390,9 +1368,7 @@ def trained_codebook(embeddings: DataFrame, k: int = 256, n_iter: int = 4):
     import numpy as np
 
     code, _ = kmeans_fit(embeddings, k=k, n_iter=n_iter)
-    norms = np.linalg.norm(code, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    return np.arange(code.shape[0], dtype=np.int64), code / norms
+    return np.arange(code.shape[0], dtype=np.int64), _unit_codebook(code)
 
 
 def knn_recall_report(
@@ -1458,8 +1434,6 @@ def escalate_underfilled(
     listed: DataFrame | None = None,
     codebook=None,
     codebook_fingerprint: str | None = None,
-    quantizer: str | None = None,
-    stride: int | None = None,
 ) -> DataFrame:
     """Self-correct UNDERFILLED ANN results — the closing half of the
     filtered-search loop (VERDICT r11 #2): a query whose filtered true
@@ -1475,7 +1449,8 @@ def escalate_underfilled(
     - re-answer those queries with `mode="brute"` (exact filtered scan,
       knn_join_brute — recall 1.0 by construction, cost |starved| x
       |filtered corpus|) or `mode="reprobe"` (knn_join_ivf at a widened
-      `nprobe` — bounded cost, recall improves but is not guaranteed);
+      `nprobe` against the first pass's `codebook` — bounded cost,
+      recall improves but is not guaranteed);
     - REPLACE the starved queries' first-pass rows with the escalated
       answer (ranks are per-query, so the splice is seam-free), leaving
       every well-filled query's rows byte-identical.
@@ -1493,9 +1468,10 @@ def escalate_underfilled(
     its own query): the re-probe then keeps self-match exclusion active
     (exclude_self) so an escalated query cannot return itself. Pass the
     same `max_queries` / `corpus_filter` / layout kwargs (`listed`,
-    `codebook`, `codebook_fingerprint`, `quantizer`) as the first pass
-    — a reprobe against a DIFFERENT layout than the one that starved
-    would answer a different question."""
+    `codebook`, `codebook_fingerprint`) as the first pass. A reprobe
+    REQUIRES the first pass's `codebook`: a reprobe against a freshly
+    resolved, DIFFERENT layout than the one that starved would answer a
+    different question."""
     if mode not in ("brute", "reprobe"):
         raise ValueError(
             f"escalate_underfilled: mode must be 'brute' or 'reprobe', got {mode!r}"
@@ -1504,6 +1480,12 @@ def escalate_underfilled(
         raise ValueError(
             "escalate_underfilled: mode='reprobe' needs the widened nprobe — "
             "pass the first-pass value scaled by the escalation factor"
+        )
+    if mode == "reprobe" and codebook is None:
+        raise ValueError(
+            "escalate_underfilled: mode='reprobe' needs the codebook the first "
+            "pass probed with — a reprobe on another layout answers a "
+            "different question"
         )
     q_side = queries if queries is not None else embeddings
     q_side = q_side.select("vec_id", "embedding")
@@ -1530,8 +1512,6 @@ def escalate_underfilled(
             listed=listed,
             codebook=codebook,
             codebook_fingerprint=codebook_fingerprint,
-            quantizer=quantizer,
-            stride=stride,
             exclude_self=queries is None,
         )
     keep = first_pass.join(
@@ -1567,14 +1547,16 @@ def knn_filtered_recall_report(
     n_hits_escalated, recall_escalated) — so the audit shows exactly
     what the serving tier's underfill self-correction buys at this
     operating point. With escalation unset the 3-column raw report is
-    unchanged."""
+    unchanged. Both passes probe the same codebook, resolved once."""
+    codebook = coarse_quantizer(
+        embeddings, codebook, train_k=train_k, fn="knn_filtered_recall_report"
+    )
     first = knn_join_ivf(
         embeddings,
         k=k,
         nprobe=nprobe,
         max_queries=max_queries,
         codebook=codebook,
-        train_k=train_k,
         corpus_filter=corpus_filter,
     )
     ivf = first.select("q_id", "vec_id")
@@ -1933,64 +1915,35 @@ def ivfpq_topk(
     planted-cluster behavior pytest-gated, same contract as knn_ivf."""
     import numpy as np
 
-    if coarse is not None:
-        _reject_stride_with_codebook("ivfpq_topk", stride, "coarse")
+    if codes is not None and coarse is None:
+        raise ValueError(
+            "ivfpq_topk: a pre-encoded codes frame must come with the coarse "
+            "quantizer it was listed by — load_ivf_quantizer(spark, "
+            "f'{table}_coarse') and pass coarse=(ids, code)"
+        )
+    vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
+    coarse = coarse_quantizer(
+        vecs, coarse, quantizer, stride, train_k, n_iter, fn="ivfpq_topk"
+    )
+    cent_ids, cent_code = coarse
     q = np.asarray(query_vec, dtype=np.float64)
     if codebooks is None:
         codebooks = pq_fit(embeddings, m=m, k=pq_k, n_iter=n_iter, id_col=id_col, vec_col=vec_col)[0]
     cb = np.asarray(codebooks, dtype=np.float64)
     mm, kk, dd = cb.shape
     if codes is None:
-        # same trained-by-default coarse quantizer as ivfpq_corpus_table
-        # (stride= alone implies the sample; stride + "trained" raises)
-        if coarse is None:
-            cq, stride = _resolve_quantizer("ivfpq_topk", quantizer, stride)
-            if cq == "trained":
-                coarse = trained_codebook(
-                    embeddings.select(
-                        F.col(id_col).alias("vec_id"),
-                        F.col(vec_col).alias("embedding"),
-                    ),
-                    k=train_k if train_k is not None else _auto_train_k(embeddings),
-                    n_iter=n_iter,
-                )
-            else:
-                coarse = _collect_codebook(
-                    embeddings.where(F.col(id_col) % stride == 0).select(
-                        F.col(id_col).alias("list_id"),
-                        F.col(vec_col).alias("c_emb"),
-                    )
-                )
-        _, listed = ivf_assignments(
-            embeddings.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-            ),
-            codebook=coarse,
-            attach_cols=["embedding"],
-        )
+        _, listed = ivf_assignments(vecs, codebook=coarse, attach_cols=["embedding"])
         listed = listed.select(
             F.col("vec_id").alias(id_col), F.col("embedding").alias(vec_col), "list_id"
         )
         enc = pq_encode(listed.select(id_col, vec_col, "list_id"), cb, id_col=id_col, vec_col=vec_col)
         codes = enc.join(listed.select(id_col, "list_id"), id_col)
-        cent_ids, cent_code = coarse
-    elif coarse is None:
-        raise ValueError(
-            "ivfpq_topk: a pre-encoded codes frame must come with the coarse "
-            "quantizer it was listed by — load_ivf_quantizer(spark, "
-            "f'{table}_coarse') and pass coarse=(ids, code)"
-        )
-    else:
-        cent_ids, cent_code = coarse
 
     # coarse probe: nprobe nearest centroid lists against the SAME
     # quantizer the codes were listed by (driver-side, k rows)
-    qn = q / (np.linalg.norm(q) or 1.0)  # zero-norm query: probe by 0-dots, deterministic
-    norms = np.linalg.norm(cent_code, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    sims_v = (cent_code / norms) @ qn
-    order = sorted(range(len(cent_ids)), key=lambda i: (-float(sims_v[i]), int(cent_ids[i])))
-    probe = [int(cent_ids[i]) for i in order[:nprobe]]
+    probe = _list_ranker()(
+        [q], np.asarray(cent_ids, dtype=np.int64), _unit_codebook(cent_code), nprobe
+    )[0]
 
     # ADC lookup table for the query
     lut = np.stack(
@@ -2028,7 +1981,6 @@ def ivfpq_corpus_table(
     quantizer: str | None = None,
     coarse_codebook=None,
     train_k: int | None = None,
-    train_iter: int = 4,
     attach_cols: list[str] | None = None,
 ):
     """Materialize the COMPRESSED ANN corpus — (vec_id, list_id, codes)
@@ -2048,23 +2000,16 @@ def ivfpq_corpus_table(
     in a later session with load_pq_codebook(spark, table_name) and
     the coarse quantizer with
     load_ivf_quantizer(spark, f"{table_name}_coarse")."""
-    import numpy as np
-
     from ..operators.maintenance import _fs_delete, write_bucketed
 
     spark = embeddings.sparkSession
-    # the COARSE quantizer follows the same default as every other ANN
-    # surface since r7: k-means TRAINED, auto-k (PROBE_r06/r07 — the
-    # stride sample's recall collapses with corpus size on clustered
-    # data). stride= alone implies quantizer="stride"; stride= with
-    # quantizer="trained" raises (_resolve_quantizer). All argument
-    # validation runs BEFORE the destructive drop of a previous index
-    # (ADVICE r8: a rejected call used to delete the persisted tables
-    # and THEN raise).
-    if coarse_codebook is not None:
-        _reject_stride_with_codebook("ivfpq_corpus_table", stride, "coarse_codebook")
-    else:
-        cq, stride = _resolve_quantizer("ivfpq_corpus_table", quantizer, stride)
+    # the COARSE quantizer is resolved like every other ANN surface's
+    # (coarse_quantizer: trained by default), and BEFORE the destructive
+    # drop of a previous index (ADVICE r8: a rejected call used to
+    # delete the persisted tables and THEN raise)
+    coarse_codebook = coarse_quantizer(
+        embeddings, coarse_codebook, quantizer, stride, train_k, fn="ivfpq_corpus_table"
+    )
 
     for t in (table_name, f"{table_name}_codebook", f"{table_name}_coarse"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -2072,20 +2017,6 @@ def ivfpq_corpus_table(
         _fs_delete(f"{wh.rstrip('/')}/{t.lower()}")
 
     cb, _ = pq_fit(embeddings, m=m, k=pq_k, n_iter=n_iter)
-    if coarse_codebook is None:
-        if cq == "trained":
-            coarse_codebook = trained_codebook(
-                embeddings,
-                k=train_k if train_k is not None else _auto_train_k(embeddings),
-                n_iter=train_iter,
-            )
-        else:
-            coarse_codebook = _collect_codebook(
-                embeddings.where(F.col("vec_id") % stride == 0).select(
-                    F.col("vec_id").alias("list_id"),
-                    F.col("embedding").alias("c_emb"),
-                )
-            )
     # attach_cols (e.g. ["label"]) ride the codes rows so
     # ivfpq_topk_batch(codes_filter=...) can serve FILTERED search
     # straight off the compressed layout — metadata is part of the
@@ -2192,30 +2123,17 @@ def ivfpq_topk_batch(
     from pyspark.sql.window import Window
 
     cent_ids, cent_code = coarse
-    norms = np.linalg.norm(cent_code, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
     sc = queries.sparkSession.sparkContext
     bc_coarse = sc.broadcast(
-        (np.asarray(cent_ids, dtype=np.int64), cent_code / norms, int(nprobe))
+        (np.asarray(cent_ids, dtype=np.int64), _unit_codebook(cent_code), int(nprobe))
     )
     bc_pq = sc.broadcast(np.asarray(codebooks, dtype=np.float64))
+    rank_lists = _list_ranker()
 
     @pandas_udf("array<long>")
     def nearest_lists(emb):
         ids, code, npr = bc_coarse.value
-        a = np.vstack(emb.values).astype(np.float64)
-        # zero-norm guard (failed-encoder rows): dividing by a 0 norm
-        # makes the row all-NaN and the argmax/argsort below pick a
-        # list by NaN accident (plus a numpy warning per batch); a
-        # zero row instead dots to 0 with every centroid and lands in
-        # the first list deterministically — its cosine is NULL
-        # downstream either way, so it can never rank as a neighbor
-        n = np.linalg.norm(a, axis=1, keepdims=True)
-        n[n == 0.0] = 1.0
-        a /= n
-        sims = a @ code.T
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :npr]
-        return pd.Series(list(ids[order]))
+        return pd.Series(list(rank_lists(emb.values, ids, code, npr)))
 
     probes = queries.select(
         F.col("vec_id").alias("q_id"),
@@ -2343,12 +2261,9 @@ def _derive_ivfpq_index(
 
     if codebooks is None:
         codebooks = pq_fit(embeddings, m=m, k=pq_k, n_iter=n_iter)[0]
-    if coarse is None:
-        coarse = trained_codebook(
-            embeddings,
-            k=train_k if train_k is not None else _auto_train_k(embeddings),
-            n_iter=n_iter,
-        )
+    coarse = coarse_quantizer(
+        embeddings, coarse, train_k=train_k, n_iter=n_iter, fn="_derive_ivfpq_index"
+    )
     _, listed = ivf_assignments(
         embeddings, codebook=coarse, attach_cols=["embedding"]
     )

@@ -2944,10 +2944,7 @@ _TRAINED_CB: dict[str, tuple] = {}
 
 def _corpus_codebook(spark, sf_dir):
     if sf_dir not in _TRAINED_CB:
-        emb = load(spark, sf_dir, "embeddings")
-        _TRAINED_CB[sf_dir] = similarity.trained_codebook(
-            emb, k=similarity._auto_train_k(emb)
-        )
+        _TRAINED_CB[sf_dir] = similarity.coarse_quantizer(load(spark, sf_dir, "embeddings"))
     return _TRAINED_CB[sf_dir]
 
 

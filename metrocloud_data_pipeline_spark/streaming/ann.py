@@ -8,11 +8,10 @@ into Structured Streaming the same way corpus ingest does: a file
 source of query batches feeds foreachBatch, and each micro-batch is
 scored against the pre-built corpus layout:
 
-- the coarse quantizer defaults to a k-means TRAINED codebook fit ONCE
-  at stream start (PROBE_r06: the training-free stride sample's recall
-  collapses with corpus size on clustered data — 0.41@10x vs trained
-  1.00 — so the default operating point is the measured-good one);
-  every micro-batch probes the same lists the corpus was listed by;
+- the coarse quantizer is resolved ONCE at stream start
+  (similarity.coarse_quantizer: k-means trained by default, the
+  measured-good operating point); every micro-batch probes the same
+  lists the corpus was listed by;
 - with `corpus_table` a bucketed ivf_corpus_table, the corpus side of
   the probe join reads bucket-to-bucket — per batch the only moving
   data is the (small) query band: batch rows broadcast, corpus rows
@@ -40,15 +39,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..llm.similarity import (
-    _auto_train_k,
-    _reject_stride_with_codebook,
-    _resolve_quantizer,
+    coarse_quantizer,
     escalate_underfilled,
     ivfpq_topk_batch,
     knn_join_ivf,
     load_ivf_quantizer,
     load_pq_codebook,
-    trained_codebook,
 )
 
 QUERY_SCHEMA = "vec_id long, embedding array<float>"
@@ -186,12 +182,10 @@ def run_ann_serving_stream(
     pathological tail it should be). A re-delivered batch escalates
     identically, so the dynamic-partition sink stays effectively-once.
 
-    With no `codebook`, a k-means coarse quantizer is TRAINED from the
-    corpus once, here, before the stream starts (train once at deploy,
-    serve forever — the per-batch cost is identical to stride, and on
-    clustered corpora recall holds ~1.0 where stride degrades with
-    corpus size, PROBE_r06). Pass quantizer="stride" for the
-    training-free sample.
+    With no `codebook`, the coarse quantizer is resolved from the
+    corpus once, here, before the stream starts (coarse_quantizer:
+    trained by default, quantizer="stride" or stride= for the
+    training-free sample; train once at deploy, serve forever).
 
     Pass corpus_table (a bucketed ivf_corpus_table) to skip per-batch
     corpus re-listing AND make the corpus side of every batch's probe
@@ -204,11 +198,6 @@ def run_ann_serving_stream(
             "run_ann_serving_stream: underfill_escalation must be None, "
             f"'reprobe' or 'brute', got {underfill_escalation!r}"
         )
-    if codebook is not None:
-        # refuse at stream START: the same stride-vs-codebook conflict
-        # knn_join_ivf raises on would otherwise kill the stream inside
-        # its first micro-batch
-        _reject_stride_with_codebook("run_ann_serving_stream", stride, "codebook")
     if corpus_table is not None and (codebook is None or codebook_fingerprint is None):
         # refuse at stream START (not inside the first micro-batch,
         # where the same knn_join_ivf guard would kill the stream
@@ -219,20 +208,11 @@ def run_ann_serving_stream(
             "with its persisted quantizer — load_ivf_quantizer(spark, "
             "f'{table}_quantizer') and pass codebook + codebook_fingerprint"
         )
-    if codebook is None:
-        # an explicit stride implies the sample quantizer; stride with
-        # quantizer="trained" raises (never silently ignored)
-        quantizer, stride = _resolve_quantizer(
-            "run_ann_serving_stream", quantizer, stride
-        )
-        if quantizer == "trained":
-            codebook = trained_codebook(
-                corpus, k=train_k if train_k is not None else _auto_train_k(corpus)
-            )
-            # the trained codebook IS the quantizer now — the
-            # resolver's default stride fill (31) must not reach
-            # knn_join_ivf's stride-vs-codebook conflict guard
-            stride = None
+    # resolve (and validate) the quantizer at stream START, not inside
+    # the first micro-batch; every batch then probes this one codebook
+    codebook = coarse_quantizer(
+        corpus, codebook, quantizer, stride, train_k, fn="run_ann_serving_stream"
+    )
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         import time
@@ -244,12 +224,10 @@ def run_ann_serving_stream(
             corpus,
             k=k,
             nprobe=nprobe,
-            stride=stride,
             listed=corpus_table,
             queries=batch.select("vec_id", "embedding"),
             codebook=codebook,
             codebook_fingerprint=codebook_fingerprint,
-            quantizer=quantizer,
             corpus_filter=corpus_filter,
         )
         # a NULL cosine is an undefined similarity (zero-norm query or
@@ -278,8 +256,6 @@ def run_ann_serving_stream(
                 listed=corpus_table,
                 codebook=codebook,
                 codebook_fingerprint=codebook_fingerprint,
-                quantizer=quantizer,
-                stride=stride,
                 # escalated rows obey the same undefined-similarity
                 # contract as the first pass
             ).where(F.col("cosine_sim").isNotNull())

@@ -1283,22 +1283,45 @@ def test_knn_join_ivf_recall_vs_brute(spark):
     assert sum(recalls) / len(recalls) >= 0.8
 
 
-def test_quantizer_stride_trained_conflict_raises(spark):
-    """An explicit stride= with quantizer='trained' must raise, not be
-    silently ignored (r7 ADVICE: callers got a different index than
-    they asked for with no signal); stride= alone implies the sample
+def test_quantizer_stride_trained_conflict_raises(spark, tmp_path):
+    """Every entry point that resolves a coarse quantizer refuses, at
+    call time and before any side effect, an explicit stride= with
+    quantizer='trained' or with an explicit codebook (r7/r8 ADVICE:
+    callers got a different index than they asked for with no signal),
+    and an unknown quantizer; stride= alone implies the sample
     quantizer — list_ids are then vec_id multiples, not 0..k-1."""
     import pytest
+
+    from metrocloud_data_pipeline_spark.streaming import ann
 
     rows = [(v, [float(v % 3 == i) for i in range(4)]) for v in range(30)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     emb = emb.withColumn("label", F.lit(0))
-    with pytest.raises(ValueError, match="stride"):
-        similarity.knn_join_ivf(emb, k=2, stride=7, quantizer="trained")
-    with pytest.raises(ValueError, match="stride"):
-        similarity.ivf_corpus_table(emb, "conflict_tbl", stride=7, quantizer="trained")
-    with pytest.raises(ValueError, match="stride"):
-        similarity.ivfpq_corpus_table(emb, "conflict_tbl", stride=7, quantizer="trained")
+    cb = similarity.trained_codebook(emb, k=3)
+    entry_points = {
+        "knn_join_ivf": lambda **kw: similarity.knn_join_ivf(emb, k=2, **kw),
+        "ivf_corpus_table": lambda **kw: similarity.ivf_corpus_table(
+            emb, "conflict_tbl", **kw
+        ),
+        "ivfpq_corpus_table": lambda codebook=None, **kw: similarity.ivfpq_corpus_table(
+            emb, "conflict_tbl", coarse_codebook=codebook, **kw
+        ),
+        "ivfpq_topk": lambda codebook=None, **kw: similarity.ivfpq_topk(
+            emb, [1.0, 0.0, 0.0, 0.0], coarse=codebook, **kw
+        ),
+        "run_ann_serving_stream": lambda **kw: ann.run_ann_serving_stream(
+            emb, emb, str(tmp_path / "out"), str(tmp_path / "ckpt"), **kw
+        ),
+    }
+    for name, call in entry_points.items():
+        with pytest.raises(ValueError, match=f"{name}: stride=7 .*quantizer='trained'"):
+            call(stride=7, quantizer="trained")
+        with pytest.raises(ValueError, match=f"{name}: stride=7 .*explicit codebook"):
+            call(stride=7, codebook=cb)
+        with pytest.raises(ValueError, match=f"{name}: unknown quantizer 'kmeans'"):
+            call(quantizer="kmeans")
+    assert not (tmp_path / "out").exists()
+    assert "conflict_tbl" not in {t.name for t in spark.catalog.listTables()}
     # stride alone -> the sample quantizer: probing every list must
     # reproduce the stride-sample seeds (vec_id multiples of 10)
     out = similarity.knn_join_ivf(emb, k=2, nprobe=3, stride=10)
@@ -3847,8 +3870,55 @@ def test_escalate_underfilled_reprobe_requires_nprobe_and_known_mode(spark):
     first = similarity.knn_join_ivf(emb, k=5, nprobe=1, max_queries=6, train_k=3)
     with pytest.raises(ValueError, match="reprobe.*nprobe"):
         similarity.escalate_underfilled(first, emb, k=5, mode="reprobe")
+    # a reprobe must probe the first pass's layout, never a fresh one
+    with pytest.raises(ValueError, match="reprobe.*codebook"):
+        similarity.escalate_underfilled(first, emb, k=5, mode="reprobe", nprobe=3)
     with pytest.raises(ValueError, match="mode"):
         similarity.escalate_underfilled(first, emb, k=5, mode="exhaustive")
+
+
+def test_knn_filtered_recall_report_reprobe_uses_first_pass_codebook(spark, monkeypatch):
+    """escalation="reprobe" must re-probe the layout whose first pass
+    starved: the codebook is fit exactly once (train_k=3), and the
+    escalated columns equal escalate_underfilled run by hand against
+    that same codebook. The report used to hand the reprobe no
+    codebook, so it trained a second, auto-sized one."""
+    from pyspark.sql import functions as F
+
+    emb = _three_cluster_corpus(spark)
+    flt = F.col("label") == 2
+    fits = []
+    real_fit = similarity.trained_codebook
+
+    def counting_fit(*args, **kwargs):
+        fits.append(kwargs.get("k"))
+        return real_fit(*args, **kwargs)
+
+    monkeypatch.setattr(similarity, "trained_codebook", counting_fit)
+    rep = similarity.knn_filtered_recall_report(
+        emb, k=5, nprobe=1, max_queries=30, corpus_filter=flt, train_k=3,
+        escalation="reprobe",
+    ).toPandas().set_index("q_id").sort_index()
+    assert fits == [3], fits
+
+    cb = real_fit(emb, k=3)
+    first = similarity.knn_join_ivf(
+        emb, k=5, nprobe=1, max_queries=30, corpus_filter=flt, codebook=cb
+    )
+    esc = similarity.escalate_underfilled(
+        first, emb, k=5, max_queries=30, corpus_filter=flt,
+        mode="reprobe", nprobe=4, codebook=cb,
+    )
+    brute = similarity.knn_join_brute(emb, k=5, max_queries=30, corpus_filter=flt)
+    hits = {
+        r["q_id"]: r["n"]
+        for r in esc.join(brute.select("q_id", "vec_id"), ["q_id", "vec_id"])
+        .groupBy("q_id").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert len(rep) == 30
+    for qid in range(30):
+        assert rep.loc[qid, "n_hits_escalated"] == hits.get(qid, 0), qid
+        assert rep.loc[qid, "recall_escalated"] == round(hits.get(qid, 0) / 5, 6), qid
 
 
 def test_escalate_underfilled_skips_zero_norm_queries(spark):

@@ -1,12 +1,12 @@
-"""Per-query drill-down for the r16 optimization round.
+"""Per-query drill-down: median wall time, Spark job/stage/task counts
+and, with --timeline, a STAGE TIMELINE: for each named query's final
+run, every stage's (submission, completion) window from the status
+tracker — the view that separates "many jobs, serialized" from "many
+jobs, overlapped" and shows where a job-count-bound query's wall time
+goes.
 
-r15_probe plus a STAGE TIMELINE: for each named query's final run, every
-stage's (submission, completion) window from the status tracker — the
-view that separates "many jobs, serialized" from "many jobs, overlapped"
-(guide §2.6) and shows where a job-count-bound query's wall time goes.
-
-Usage: python tools/r16_probe.py [--runs N] [--sf DIR] [--timeline]
-                                 name [name ...]
+Usage: python tools/probe.py [--runs N] [--sf DIR] [--timeline]
+                             name [name ...]
 Always probes the sentinel h1_pricing_summary FIRST so every invocation
 carries its own normalization anchor.
 """
@@ -118,7 +118,7 @@ def main() -> None:
     from metrocloud_data_pipeline_spark.queries import get_queries
     from metrocloud_data_pipeline_spark.session import get_spark
 
-    spark = get_spark("r16-probe")
+    spark = get_spark("probe")
     spark.sparkContext.setLogLevel("ERROR")
     qs = get_queries()
 
@@ -133,7 +133,7 @@ def main() -> None:
         meta = None
         for i in range(runs):
             c = Counter(spark)
-            spark.sparkContext.setJobDescription(f"r16probe:{name}")
+            spark.sparkContext.setJobDescription(f"probe:{name}")
             t0 = time.perf_counter()
             qs[name](spark, sf).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
