@@ -32,6 +32,42 @@ def pct(numer: Column, denom: Column) -> Column:
     return F.lit(100.0) * numer.cast("double") / denom.cast("double")
 
 
+def iterate_partials(name, frame, kernel, schema, update, state=None, n_iter=1):
+    """The driver-reduced training loop of the iterative fits (k-means,
+    PQ, PCA, logistic regression): the map-side partial-aggregate
+    iteration of MLlib (Meng et al., JMLR 2016). Returns the final state.
+
+    Each of the n_iter iterations broadcasts `state`, runs one narrow
+    mapInPandas pass in which `kernel(state, batches)` yields
+    per-Arrow-batch partial rows of `schema`, collects them, and sets
+    `state = update(state, sorted(rows))`: one Spark job per iteration.
+
+    Deterministic: the driver reduces the partial rows in the total
+    order of their tuples, independent of partition placement, so every
+    schema lists its fields in sort-key order and repeated fits are
+    bit-identical. Scale shape: the partials are the map-side combine
+    for vector sums that groupBy cannot express JVM-side, so only
+    ~partitions x (rows per batch) tiny rows reach the driver; frame
+    rows never shuffle and the frame is scanned n_iter times, so
+    callers at scale persist it first.
+
+    Every schema has a count field `n`; a pass that counts no rows
+    raises ValueError("<name>: empty input frame")."""
+    sc = frame.sparkSession.sparkContext
+    for _ in range(n_iter):
+        bc = sc.broadcast(state)
+
+        def run(batches):
+            return kernel(bc.value, batches)
+
+        rows = frame.mapInPandas(run, schema).collect()
+        bc.destroy()
+        if not any(r.n for r in rows):
+            raise ValueError(f"{name}: empty input frame")
+        state = update(state, sorted(rows))
+    return state
+
+
 # --- exact money aggregation via paired-long sums ---------------------------
 #
 # Spark's decimal SUM is exact but slow: every row routes through

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.numeric import round6
+from ..functions.numeric import iterate_partials, round6
 from .text import tokens_col
 
 # --- n-gram contamination ----------------------------------------------------
@@ -918,6 +918,34 @@ def dsir_score_rows(
     )
 
 
+def _standardizer(frame: DataFrame, feature_cols: list[str], label_col: str, label_type: str):
+    """The LR fits' inputs: the (x array<double>, y label_type) frame
+    their kernels read, and the per-feature (mean, population std) from
+    one aggregate, a zero std read as 1. The fits train on standardized
+    features so one learning rate fits unscaled inputs."""
+    import numpy as np
+
+    d = len(feature_cols)
+    stats = frame.agg(
+        *[F.avg(c).alias(f"m{i}") for i, c in enumerate(feature_cols)],
+        *[F.stddev_pop(c).alias(f"s{i}") for i, c in enumerate(feature_cols)],
+    ).first()
+    mu = np.array([stats[f"m{i}"] for i in range(d)], dtype=np.float64)
+    sd = np.array([stats[f"s{i}"] or 0.0 for i in range(d)], dtype=np.float64)
+    sd[sd == 0.0] = 1.0
+    vecs = frame.select(
+        F.array(*[F.col(c).cast("double") for c in feature_cols]).alias("x"),
+        F.col(label_col).cast(label_type).alias("y"),
+    )
+    return vecs, mu, sd
+
+
+def _raw_space(wb, mu, sd):
+    """Fold the standardization back into raw-space (weights, bias):
+    z = w·(x-mu)/sd + b  ->  (w/sd)·x + (b - w·(mu/sd))."""
+    return wb[:-1] / sd, float(wb[-1] - (wb[:-1] * (mu / sd)).sum())
+
+
 def lr_fit(
     frame: DataFrame,
     feature_cols: list[str],
@@ -933,74 +961,59 @@ def lr_fit(
     verdicts), and the fitted scorer generalizes the seed to the whole
     corpus as one codegen expression (lr_score_col).
 
-    Deterministic by the kmeans_fit construction: full-batch gradient,
-    zero-init weights, per-Arrow-batch partial (gradient-sum, loss,
-    count) rows reduced on the driver in total order — repeated fits
-    are bit-identical, so the fitted weights are a reproducible
-    artifact of the corpus snapshot. Scale shape per iteration: one
-    broadcast of the (d+1)-vector, one narrow mapInPandas pass, ~
-    partitions x 1 tiny rows to the driver; the corpus never shuffles
-    and is scanned n_iter times (persist upstream, same contract as
-    kmeans_fit). Features are standardized internally (mean/std from
-    one aggregate) so one learning rate fits unscaled inputs; returned
-    weights are FOLDED BACK to raw feature space.
+    Deterministic: full-batch gradient, zero-init weights, and each
+    iteration one iterate_partials pass whose per-Arrow-batch
+    (count, loss, gradient-sum) partials reduce in total order —
+    repeated fits are bit-identical, so the fitted weights are a
+    reproducible artifact of the corpus snapshot. Features are
+    standardized internally (mean/std from one aggregate) so one
+    learning rate fits unscaled inputs; returned weights are FOLDED
+    BACK to raw feature space.
 
     Returns (weights [d], bias, loss trace)."""
     import numpy as np
 
-    d = len(feature_cols)
-    stats = frame.agg(
-        *[F.avg(c).alias(f"m{i}") for i, c in enumerate(feature_cols)],
-        *[F.stddev_pop(c).alias(f"s{i}") for i, c in enumerate(feature_cols)],
-    ).first()
-    mu = np.array([stats[f"m{i}"] for i in range(d)], dtype=np.float64)
-    sd = np.array([stats[f"s{i}"] or 0.0 for i in range(d)], dtype=np.float64)
-    sd[sd == 0.0] = 1.0
+    vecs, mu, sd = _standardizer(frame, feature_cols, label_col, "double")
 
-    sc = frame.sparkSession.sparkContext
-    vecs = frame.select(
-        F.array(*[F.col(c).cast("double") for c in feature_cols]).alias("x"),
-        F.col(label_col).cast("double").alias("y"),
-    )
-    w = np.zeros(d + 1)  # [weights..., bias] in standardized space
+    def kernel(wb, batches):
+        import pandas as pd
+
+        for pdf in batches:
+            x = (np.vstack(pdf["x"].values).astype(np.float64) - mu) / sd
+            y = pdf["y"].values.astype(np.float64)
+            z = x @ wb[:-1] + wb[-1]
+            p = 1.0 / (1.0 + np.exp(-z))
+            g = np.concatenate([(p - y) @ x, [(p - y).sum()]])
+            eps = 1e-12
+            loss = -(y * np.log(p + eps) + (1 - y) * np.log(1 - p + eps)).sum()
+            yield pd.DataFrame(
+                {"n": [len(y)], "loss": [float(loss)], "g": [g.tolist()]}
+            )
+
     trace: list[float] = []
-    for _ in range(n_iter):
-        bc = sc.broadcast((w, mu, sd))
 
-        def partials(batches):
-            import pandas as pd
-
-            wb, m, s = bc.value
-            for pdf in batches:
-                x = (np.vstack(pdf["x"].values).astype(np.float64) - m) / s
-                y = pdf["y"].values.astype(np.float64)
-                z = x @ wb[:-1] + wb[-1]
-                p = 1.0 / (1.0 + np.exp(-z))
-                g = np.concatenate([(p - y) @ x, [(p - y).sum()]])
-                eps = 1e-12
-                loss = -(y * np.log(p + eps) + (1 - y) * np.log(1 - p + eps)).sum()
-                yield pd.DataFrame(
-                    {"g": [g.tolist()], "loss": [float(loss)], "n": [len(y)]}
-                )
-
-        part = vecs.mapInPandas(
-            partials, "g array<double>, loss double, n long"
-        ).collect()
-        grad = np.zeros(d + 1)
+    def update(w, rows):
+        grad = np.zeros(len(w))
         loss = 0.0
         n = 0
-        # total order so the float reduction is partition-placement-proof
-        for r in sorted(part, key=lambda r: (r.n, r.loss, r.g)):
+        for r in rows:
             grad += np.array(r.g)
             loss += r.loss
             n += r.n
-        trace.append(loss / max(n, 1))
-        w = w - lr * grad / max(n, 1)
-        bc.destroy()
-    # fold standardization back into raw-space weights:
-    # z = w·(x-mu)/sd + b  ->  (w/sd)·x + (b - w·(mu/sd))
-    raw_w = w[:-1] / sd
-    raw_b = float(w[-1] - (w[:-1] * (mu / sd)).sum())
+        trace.append(loss / n)
+        return w - lr * grad / n
+
+    # w: [weights..., bias] in standardized space
+    w = iterate_partials(
+        "lr_fit",
+        vecs,
+        kernel,
+        "n long, loss double, g array<double>",
+        update,
+        np.zeros(len(feature_cols) + 1),
+        n_iter,
+    )
+    raw_w, raw_b = _raw_space(w, mu, sd)
     return raw_w, raw_b, trace
 
 
@@ -1017,70 +1030,54 @@ def lr_fit_ovr(
     (fastText's training shape: the K sigmoid heads share every
     feature computation). K independent lr_fit calls cost K x n_iter
     corpus passes; this costs n_iter, with the per-batch partial a
-    K x (d+1) gradient matrix instead of a vector. Same determinism
-    construction as lr_fit: zero init, full-batch gradient,
-    total-ordered driver reduce of per-batch partials, standardization
-    folded back to raw space. Measured on langid_trained_report at
-    sf0.1: 30.6 s -> ~7 s (5 classes).
+    K x (d+1) gradient matrix instead of a vector. Same construction
+    as lr_fit: zero init, full-batch gradient, iterate_partials'
+    total-ordered reduce, standardization folded back to raw space.
+    Measured on langid_trained_report at sf0.1: 30.6 s -> ~7 s
+    (5 classes).
 
     Returns {class: (weights [d], bias)} in raw feature space."""
     import numpy as np
 
-    d = len(feature_cols)
-    k = len(classes)
-    stats = frame.agg(
-        *[F.avg(c).alias(f"m{i}") for i, c in enumerate(feature_cols)],
-        *[F.stddev_pop(c).alias(f"s{i}") for i, c in enumerate(feature_cols)],
-    ).first()
-    mu = np.array([stats[f"m{i}"] for i in range(d)], dtype=np.float64)
-    sd = np.array([stats[f"s{i}"] or 0.0 for i in range(d)], dtype=np.float64)
-    sd[sd == 0.0] = 1.0
-
-    sc = frame.sparkSession.sparkContext
+    vecs, mu, sd = _standardizer(frame, feature_cols, label_col, "string")
     class_idx = {c: i for i, c in enumerate(classes)}
-    vecs = frame.select(
-        F.array(*[F.col(c).cast("double") for c in feature_cols]).alias("x"),
-        F.col(label_col).cast("string").alias("y"),
-    )
-    w = np.zeros((k, d + 1))  # per class: [weights..., bias], standardized
-    for _ in range(n_iter):
-        bc = sc.broadcast((w, mu, sd, class_idx))
 
-        def partials(batches):
-            import pandas as pd
+    def kernel(wb, batches):
+        import pandas as pd
 
-            wb, m, s, cidx = bc.value
-            kk = wb.shape[0]
-            for pdf in batches:
-                x = (np.vstack(pdf["x"].values).astype(np.float64) - m) / s
-                y = np.zeros((len(pdf), kk))
-                for r, lab in enumerate(pdf["y"].values):
-                    j = cidx.get(lab)
-                    if j is not None:
-                        y[r, j] = 1.0
-                z = x @ wb[:, :-1].T + wb[:, -1]
-                p = 1.0 / (1.0 + np.exp(-z))
-                err = p - y  # n x k
-                g = np.hstack([err.T @ x, err.sum(axis=0)[:, None]])  # k x (d+1)
-                yield pd.DataFrame(
-                    {"g": [g.ravel().tolist()], "n": [len(pdf)]}
-                )
+        kk = wb.shape[0]
+        for pdf in batches:
+            x = (np.vstack(pdf["x"].values).astype(np.float64) - mu) / sd
+            y = np.zeros((len(pdf), kk))
+            for r, lab in enumerate(pdf["y"].values):
+                j = class_idx.get(lab)
+                if j is not None:
+                    y[r, j] = 1.0
+            z = x @ wb[:, :-1].T + wb[:, -1]
+            p = 1.0 / (1.0 + np.exp(-z))
+            err = p - y  # n x k
+            g = np.hstack([err.T @ x, err.sum(axis=0)[:, None]])  # k x (d+1)
+            yield pd.DataFrame({"n": [len(pdf)], "g": [g.ravel().tolist()]})
 
-        part = vecs.mapInPandas(partials, "g array<double>, n long").collect()
-        grad = np.zeros((k, d + 1))
+    def update(w, rows):
+        grad = np.zeros(w.shape)
         n = 0
-        # total order so the float reduction is partition-placement-proof
-        for r in sorted(part, key=lambda r: (r.n, r.g)):
-            grad += np.array(r.g).reshape(k, d + 1)
+        for r in rows:
+            grad += np.array(r.g).reshape(w.shape)
             n += r.n
-        w = w - lr * grad / max(n, 1)
-        bc.destroy()
-    out = {}
-    for c, i in class_idx.items():
-        raw_w = w[i, :-1] / sd
-        raw_b = float(w[i, -1] - (w[i, :-1] * (mu / sd)).sum())
-        out[c] = (raw_w, raw_b)
-    return out
+        return w - lr * grad / n
+
+    # per class: [weights..., bias] in standardized space
+    w = iterate_partials(
+        "lr_fit_ovr",
+        vecs,
+        kernel,
+        "n long, g array<double>",
+        update,
+        np.zeros((len(classes), len(feature_cols) + 1)),
+        n_iter,
+    )
+    return {c: _raw_space(w[i], mu, sd) for c, i in class_idx.items()}
 
 
 def lr_score_col(feature_cols: list[str], weights, bias: float) -> F.Column:
@@ -1125,10 +1122,16 @@ def quality_lr_score(docs: DataFrame, n_iter: int = 50, lr: float = 0.5) -> Data
         F.expr("percentile(quality_score, 0.25)").alias("lo"),
         F.expr("percentile(quality_score, 0.75)").alias("hi"),
     ).first()
-    seed = feats.where(
-        (F.col("quality_score") <= qs["lo"]) | (F.col("quality_score") >= qs["hi"])
-    ).withColumn("y", (F.col("quality_score") >= qs["hi"]).cast("int"))
-    w, b, _ = lr_fit(seed, cols, "y", n_iter=n_iter, lr=lr)
+    if qs["lo"] is None:
+        # no doc has a quality score, so the seed is empty and lr_fit
+        # would raise: score with an untrained model (zero weights, NaN
+        # bias), so each quality_prob is NaN or NULL, never made up
+        w, b = [0.0] * len(cols), float("nan")
+    else:
+        seed = feats.where(
+            (F.col("quality_score") <= qs["lo"]) | (F.col("quality_score") >= qs["hi"])
+        ).withColumn("y", (F.col("quality_score") >= qs["hi"]).cast("int"))
+        w, b, _ = lr_fit(seed, cols, "y", n_iter=n_iter, lr=lr)
     return feats.select(
         "doc_id",
         "token_count",

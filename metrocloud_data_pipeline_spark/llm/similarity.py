@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.numeric import round6
+from ..functions.numeric import iterate_partials, round6
 
 
 def _dot(a, b) -> Column:
@@ -937,7 +937,92 @@ def ivf_topk(
 # --- distributed k-means (Lloyd's) ------------------------------------------
 
 
-_KMEANS_PARTIALS_SCHEMA = "cluster long, psum array<double>, n long, pinertia double"
+def _nearest_centroid():
+    """The nearest-centroid kernel of k-means training and assignment:
+    nearest(a, cb) -> (labels [n], d2 [n, k]) for rows a [n, d] against
+    the codebook cb [k, d], where d2 = ||c||^2 - 2 a.c is the squared
+    distance less the row's own ||a||^2 (constant per row, so the
+    argmin is the same). Built in a closure so the kernels that call it
+    ship it to the Python workers by value (see _list_ranker)."""
+    import numpy as np
+
+    def nearest(a, cb):
+        d2 = (cb * cb).sum(axis=1)[None, :] - 2.0 * (a @ cb.T)
+        return np.argmin(d2, axis=1), d2
+
+    return nearest
+
+
+def _lloyd(name: str, embeddings: DataFrame, seeds, m: int, n_iter: int, vec_col: str):
+    """Lloyd's iterations over an [m, k, dim//m] codebook tensor, all m
+    subspaces in the same pass (m=1 is plain k-means); returns
+    (codebooks, inertia trace per iteration). Subspace j of centroid i
+    is seeded from the j-th slice of seeds[i]. Each iteration is one
+    iterate_partials pass whose (subspace, cluster, count, vector-sum,
+    inertia) partials are reduced on the driver. Empty clusters keep
+    their previous centroid (standard Lloyd fallback)."""
+    import numpy as np
+
+    k, dim = len(seeds), len(seeds[0][vec_col])
+    code = np.ascontiguousarray(
+        np.asarray([r[vec_col] for r in seeds], dtype=np.float64)
+        .reshape(k, m, dim // m)
+        .transpose(1, 0, 2)
+    )
+    nearest = _nearest_centroid()
+
+    def kernel(cb, batches):
+        import pandas as pd
+
+        mm, kk, dd = cb.shape
+        for pdf in batches:
+            a = np.vstack(pdf["v"].values).astype(np.float64)  # [n, dim]
+            rows = []
+            for j in range(mm):
+                s = a[:, j * dd:(j + 1) * dd]  # [n, d_sub]
+                lab, d2 = nearest(s, cb[j])
+                sn2 = (s * s).sum(axis=1)
+                for c in np.unique(lab):
+                    msk = lab == c
+                    rows.append(
+                        (
+                            j,
+                            int(c),
+                            int(msk.sum()),
+                            s[msk].sum(axis=0).tolist(),
+                            float((sn2[msk] + d2[msk, c]).sum()),
+                        )
+                    )
+            yield pd.DataFrame(
+                rows, columns=["subspace", "cluster", "n", "psum", "pinertia"]
+            )
+
+    trace: list[float] = []
+
+    def update(code, rows):
+        sums = np.zeros(code.shape)
+        counts = np.zeros(code.shape[:2], dtype=np.int64)
+        inertia = 0.0
+        for r in rows:
+            sums[r.subspace, r.cluster] += np.array(r.psum)
+            counts[r.subspace, r.cluster] += r.n
+            inertia += r.pinertia
+        trace.append(inertia)
+        code = code.copy()
+        nz = counts > 0
+        code[nz] = sums[nz] / counts[nz][:, None]
+        return code
+
+    code = iterate_partials(
+        name,
+        embeddings.select(F.col(vec_col).alias("v")),
+        kernel,
+        "subspace int, cluster long, n long, psum array<double>, pinertia double",
+        update,
+        code,
+        n_iter,
+    )
+    return code, trace
 
 
 def kmeans_fit(
@@ -948,83 +1033,21 @@ def kmeans_fit(
     vec_col: str = "embedding",
 ):
     """Distributed Lloyd's k-means over an embedding column; returns
-    (codebook ndarray [k, dim], inertia trace per iteration).
+    (codebook ndarray [k, dim], inertia trace per iteration). The m=1
+    case of pq_fit's training loop (_lloyd over iterate_partials).
 
-    Deterministic: seeds are the k smallest-id vectors; every update is
-    an exact sum of the same values in a fixed reduction order (partial
-    sums are reduced on the driver in (cluster, count, partial-sum)
-    total order, independent of partition placement), so
-    repeated runs converge identically.
-
-    Scale shape per iteration: broadcast the [k, dim] codebook, one
-    narrow mapInPandas pass emits per-Arrow-batch partial rows
-    (cluster, vector-sum, count, inertia) — the map-side combine for
-    vector means that groupBy cannot express JVM-side — and only
-    ~num_partitions*k tiny rows reach the driver for the final reduce.
-    Corpus rows never shuffle; the corpus is scanned n_iter times, so
-    callers at scale persist/cache the input frame first (the registered
-    query does). Empty clusters keep their previous centroid (standard
-    Lloyd fallback)."""
-    import numpy as np
-
+    Deterministic: seeds are the k smallest-id vectors, and the
+    iterate_partials reduction is total-ordered, so repeated runs
+    converge identically."""
     seeds = (
         embeddings.select(id_col, vec_col).orderBy(F.col(id_col)).limit(k).collect()
     )
     if not seeds:
         raise ValueError("kmeans_fit: empty input frame")
-    if len(seeds) < k:
-        # fewer vectors than clusters: fit what exists (every vector its
-        # own centroid) rather than fabricating empty clusters
-        k = len(seeds)
-    code = np.vstack([r[vec_col] for r in seeds]).astype(np.float64)
-    dim = code.shape[1]
-    sc = embeddings.sparkSession.sparkContext
-    vecs = embeddings.select(F.col(vec_col).alias("v"))
-    trace: list[float] = []
-
-    for _ in range(n_iter):
-        bc = sc.broadcast(code)
-
-        def partials(batches):
-            import pandas as pd
-
-            cb = bc.value  # [k, dim]
-            sq = (cb * cb).sum(axis=1)  # ||c||^2, [k]
-            for pdf in batches:
-                a = np.vstack(pdf["v"].values).astype(np.float64)  # [m, dim]
-                # argmin ||a - c||^2 = argmin (||c||^2 - 2 a.c); per-row
-                d2 = sq[None, :] - 2.0 * (a @ cb.T)  # [m, k] (+ ||a||^2 const)
-                lab = np.argmin(d2, axis=1)
-                an2 = (a * a).sum(axis=1)
-                rows = []
-                for c in np.unique(lab):
-                    m = lab == c
-                    rows.append(
-                        (
-                            int(c),
-                            (a[m].sum(axis=0)).tolist(),
-                            int(m.sum()),
-                            float((an2[m] + d2[m, c]).sum()),
-                        )
-                    )
-                yield pd.DataFrame(rows, columns=["cluster", "psum", "n", "pinertia"])
-
-        part = vecs.mapInPandas(partials, _KMEANS_PARTIALS_SCHEMA).collect()
-        sums = np.zeros((k, dim))
-        counts = np.zeros(k, dtype=np.int64)
-        inertia = 0.0
-        # total order (cluster, n, psum) so the float reduction is
-        # bit-identical regardless of which partition produced which row
-        for r in sorted(part, key=lambda r: (r.cluster, r.n, r.psum)):
-            sums[r.cluster] += np.array(r.psum)
-            counts[r.cluster] += r.n
-            inertia += r.pinertia
-        trace.append(inertia)
-        nonempty = counts > 0
-        code = code.copy()
-        code[nonempty] = sums[nonempty] / counts[nonempty, None]
-        bc.destroy()
-    return code, trace
+    # fewer vectors than clusters: fit the len(seeds) < k that exist
+    # (every vector its own centroid) rather than fabricating empty ones
+    code, trace = _lloyd("kmeans_fit", embeddings, seeds, 1, n_iter, vec_col)
+    return code[0], trace
 
 
 def kmeans_assign(
@@ -1045,14 +1068,12 @@ def kmeans_assign(
     from pyspark.sql.functions import pandas_udf
 
     bc = embeddings.sparkSession.sparkContext.broadcast(np.asarray(codebook, dtype=np.float64))
+    nearest_centroid = _nearest_centroid()
 
     @pandas_udf("struct<cluster_id: long, sq_dist: double>")
     def nearest(emb):
-        cb = bc.value
-        sq = (cb * cb).sum(axis=1)
         a = np.vstack(emb.values).astype(np.float64)
-        d2 = sq[None, :] - 2.0 * (a @ cb.T)
-        lab = np.argmin(d2, axis=1)
+        lab, d2 = nearest_centroid(a, bc.value)
         an2 = (a * a).sum(axis=1)
         return pd.DataFrame(
             {"cluster_id": lab, "sq_dist": an2 + d2[np.arange(len(lab)), lab]}
@@ -1094,61 +1115,61 @@ def kmeans_cluster_stats(
 
 # --- distributed PCA --------------------------------------------------------
 
-_PCA_PARTIALS_SCHEMA = "psum array<double>, pouter array<double>, n long"
-
-
 def pca_fit(embeddings: DataFrame, k: int = 8, vec_col: str = "embedding"):
     """PCA over an embedding column; returns (components [k, dim],
     mean [dim], explained_variance_ratio [k]).
 
-    One narrow mapInPandas pass emits per-Arrow-batch partial sums of
-    the vectors and their Gram matrix (dim + dim^2 doubles per batch,
-    flattened) — the same map-side combine shape as kmeans_fit — and
-    only ~num_partitions tiny rows reach the driver, which assembles
-    the covariance and eigendecomposes it (dim x dim, trivial at
-    embedding dims; the corpus never shuffles and is scanned once).
-    Deterministic: partials reduce in a fixed order and each
+    One iterate_partials pass (no state) emits per-Arrow-batch
+    partial sums of the vectors and their Gram matrix (dim + dim^2
+    doubles per batch, flattened); the driver assembles the covariance
+    and eigendecomposes it (dim x dim, trivial at embedding dims; the
+    corpus never shuffles and is scanned once). Deterministic: each
     component's sign is fixed by making its largest-|loading| entry
     positive (eigenvectors are otherwise sign-ambiguous)."""
     import numpy as np
 
-    vecs = embeddings.select(F.col(vec_col).alias("v"))
-
-    def partials(batches):
+    def kernel(_, batches):
         import pandas as pd
 
         for pdf in batches:
             a = np.vstack(pdf["v"].values).astype(np.float64)
             yield pd.DataFrame(
                 {
+                    "n": [len(a)],
                     "psum": [a.sum(axis=0).tolist()],
                     "pouter": [(a.T @ a).ravel().tolist()],
-                    "n": [len(a)],
                 }
             )
 
-    part = vecs.mapInPandas(partials, _PCA_PARTIALS_SCHEMA).collect()
-    part = sorted(part, key=lambda r: (r.n, r.psum))
-    dim = len(part[0].psum)
-    s = np.zeros(dim)
-    g = np.zeros((dim, dim))
-    n = 0
-    for r in part:
-        s += np.array(r.psum)
-        g += np.array(r.pouter).reshape(dim, dim)
-        n += r.n
-    mean = s / n
-    cov = g / n - np.outer(mean, mean)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order].T  # [k, dim]
-    # sign convention: largest-|loading| coordinate positive
-    for i in range(comps.shape[0]):
-        j = int(np.argmax(np.abs(comps[i])))
-        if comps[i, j] < 0:
-            comps[i] = -comps[i]
-    ratio = evals[order] / evals.sum()
-    return comps, mean, ratio
+    def update(_, rows):
+        dim = len(rows[0].psum)
+        s = np.zeros(dim)
+        g = np.zeros((dim, dim))
+        n = 0
+        for r in rows:
+            s += np.array(r.psum)
+            g += np.array(r.pouter).reshape(dim, dim)
+            n += r.n
+        mean = s / n
+        cov = g / n - np.outer(mean, mean)
+        evals, evecs = np.linalg.eigh(cov)  # ascending
+        order = np.argsort(evals)[::-1][:k]
+        comps = evecs[:, order].T  # [k, dim]
+        # sign convention: largest-|loading| coordinate positive
+        for i in range(comps.shape[0]):
+            j = int(np.argmax(np.abs(comps[i])))
+            if comps[i, j] < 0:
+                comps[i] = -comps[i]
+        ratio = evals[order] / evals.sum()
+        return comps, mean, ratio
+
+    return iterate_partials(
+        "pca_fit",
+        embeddings.select(F.col(vec_col).alias("v")),
+        kernel,
+        "n long, psum array<double>, pouter array<double>",
+        update,
+    )
 
 
 def pca_project(
@@ -1360,11 +1381,10 @@ def semdedup_keep_list(
 def trained_codebook(embeddings: DataFrame, k: int = 256, n_iter: int = 4):
     """K-means-trained IVF coarse quantizer in the shape knn_join_ivf's
     `codebook` expects: (list_ids 0..k-1, unit-normalized [k, dim]
-    centroid matrix). The training pass is kmeans_fit's mapInPandas
-    partial-sum shape (corpus never shuffles, n_iter scans); size k
-    near the corpus's natural cluster count — the stride sample is the
-    training-free default, this is the recall upgrade for clustered
-    corpora (FAISS's IVF-train step)."""
+    centroid matrix). The training pass is kmeans_fit (corpus never
+    shuffles, n_iter scans); size k near the corpus's natural cluster
+    count — the stride sample is the training-free default, this is the
+    recall upgrade for clustered corpora (FAISS's IVF-train step)."""
     import numpy as np
 
     code, _ = kmeans_fit(embeddings, k=k, n_iter=n_iter)
@@ -1671,11 +1691,6 @@ def embed_quantize_stats(embeddings: DataFrame) -> DataFrame:
 
 # --- product quantization (FAISS PQ; Jegou et al., TPAMI 2011) --------------
 
-_PQ_PARTIALS_SCHEMA = (
-    "subspace int, cluster long, psum array<double>, n long, pinertia double"
-)
-
-
 def pq_fit(
     embeddings: DataFrame,
     m: int = 4,
@@ -1693,13 +1708,11 @@ def pq_fit(
     Returns codebooks ndarray [m, k, dim//m] + per-iteration inertia.
 
     Scale shape: ALL m subspaces train in the SAME pass — one
-    mapInPandas per iteration emits (subspace, cluster, vector-sum,
-    count) partials for every subspace from each Arrow batch, so the
-    corpus is scanned n_iter times total, never m x n_iter, and only
-    ~partitions x m x k tiny rows reach the driver reduce. Seeding and
-    reduction order are deterministic exactly like kmeans_fit."""
-    import numpy as np
-
+    iterate_partials pass per iteration emits (subspace, cluster,
+    count, vector-sum) partials for every subspace from each Arrow
+    batch, so the corpus is scanned n_iter times total, never
+    m x n_iter, and only ~partitions x m x k tiny rows reach the driver
+    reduce. Seeds are the k smallest-id vectors, as in kmeans_fit."""
     seeds = (
         embeddings.select(id_col, vec_col).orderBy(F.col(id_col)).limit(k).collect()
     )
@@ -1708,65 +1721,7 @@ def pq_fit(
     dim = len(seeds[0][vec_col])
     if dim % m != 0:
         raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    # [m, k, d_sub]: subspace j seeded from the k smallest-id vectors' j-th slice
-    code = np.stack(
-        [
-            np.vstack([np.asarray(r[vec_col], dtype=np.float64)[j * d_sub:(j + 1) * d_sub] for r in seeds])
-            for j in range(m)
-        ]
-    )
-    sc = embeddings.sparkSession.sparkContext
-    vecs = embeddings.select(F.col(vec_col).alias("v"))
-    trace: list[float] = []
-
-    for _ in range(n_iter):
-        bc = sc.broadcast(code)
-
-        def partials(batches):
-            import pandas as pd
-
-            cb = bc.value  # [m, k, d_sub]
-            mm, kk, dd = cb.shape
-            for pdf in batches:
-                a = np.vstack(pdf["v"].values).astype(np.float64)  # [n, dim]
-                rows = []
-                for j in range(mm):
-                    s = a[:, j * dd:(j + 1) * dd]  # [n, d_sub]
-                    cj = cb[j]  # [k, d_sub]
-                    d2 = (cj * cj).sum(axis=1)[None, :] - 2.0 * (s @ cj.T)
-                    lab = np.argmin(d2, axis=1)
-                    sn2 = (s * s).sum(axis=1)
-                    for c in np.unique(lab):
-                        msk = lab == c
-                        rows.append(
-                            (
-                                int(j),
-                                int(c),
-                                s[msk].sum(axis=0).tolist(),
-                                int(msk.sum()),
-                                float((sn2[msk] + d2[msk, c]).sum()),
-                            )
-                        )
-                yield pd.DataFrame(
-                    rows, columns=["subspace", "cluster", "psum", "n", "pinertia"]
-                )
-
-        part = vecs.mapInPandas(partials, _PQ_PARTIALS_SCHEMA).collect()
-        sums = np.zeros((m, k, d_sub))
-        counts = np.zeros((m, k), dtype=np.int64)
-        inertia = 0.0
-        for r in sorted(part, key=lambda r: (r.subspace, r.cluster, r.n, r.psum)):
-            sums[r.subspace, r.cluster] += np.array(r.psum)
-            counts[r.subspace, r.cluster] += r.n
-            inertia += r.pinertia
-        trace.append(inertia)
-        code = code.copy()
-        for j in range(m):
-            nz = counts[j] > 0
-            code[j, nz] = sums[j, nz] / counts[j, nz, None]
-        bc.destroy()
-    return code, trace
+    return _lloyd("pq_fit", embeddings, seeds, m, n_iter, vec_col)
 
 
 def pq_encode(

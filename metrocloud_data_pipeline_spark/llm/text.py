@@ -1588,7 +1588,9 @@ def langid_trained_report(
     # fits to float-noise (OvR gradients are class-independent under
     # full-batch GD + zero init; pytest pins 1e-9 agreement and
     # bit-exact refit determinism)
-    fitted = lr_fit_ovr(feats, cols, "lang", langs, n_iter=n_iter, lr=lr)
+    # no language means no document (every doc has a lang, '' at
+    # worst): nothing to fit, and no document to label
+    fitted = lr_fit_ovr(feats, cols, "lang", langs, n_iter=n_iter, lr=lr) if langs else {}
     scores = []
     for lang in langs:
         w, b = fitted[lang]
@@ -1598,11 +1600,10 @@ def langid_trained_report(
         scores.append(F.struct(z.alias("z"), F.lit(lang).alias("l")))
     # argmax over per-class linear scores (sigmoid is monotone); ties
     # break toward the lexically-larger language name, deterministically
-    trained = feats.select(
-        "doc_id",
-        "lang",
-        F.array_max(F.array(*scores)).getField("l").alias("trained_lang"),
+    trained_lang = (
+        F.array_max(F.array(*scores)).getField("l") if scores else F.lit(None).cast("string")
     )
+    trained = feats.select("doc_id", "lang", trained_lang.alias("trained_lang"))
     heur = language_id(docs).select("doc_id", "predicted_lang")
     both = trained.join(heur, "doc_id")
     return both.groupBy("lang").agg(

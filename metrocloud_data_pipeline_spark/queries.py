@@ -16,6 +16,7 @@ Determinism contract (both sides, by construction):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,6 +29,7 @@ from .operators import ingest, observability as OBS, temporal
 from .plans import star_queries as H
 from .session import tune
 from .sources import load
+from .sources.star_schema import _snapshot
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -2937,15 +2939,18 @@ def embed_pq_stats(spark, sf_dir):
 # train-once-per-corpus-snapshot cache for the registered ANN queries:
 # the production posture is fit at ingest, serve forever (the bench's
 # warm-cache methodology note) — re-fitting per query call would bill
-# the one-time train cost to every probe. Keyed by sf_dir; the fit is
-# deterministic, so a cached codebook is bit-identical to a fresh one.
-_TRAINED_CB: dict[str, tuple] = {}
+# the one-time train cost to every probe. Keyed by sf_dir and the
+# embeddings file snapshot (a driver-side os.stat, no Spark job), so a
+# rewritten file is fit again; the fit is deterministic, so a cached
+# codebook is bit-identical to a fresh one.
+_TRAINED_CB: dict[tuple, tuple] = {}
 
 
 def _corpus_codebook(spark, sf_dir):
-    if sf_dir not in _TRAINED_CB:
-        _TRAINED_CB[sf_dir] = similarity.coarse_quantizer(load(spark, sf_dir, "embeddings"))
-    return _TRAINED_CB[sf_dir]
+    key = (sf_dir, _snapshot(os.path.join(sf_dir, "embeddings.parquet")))
+    if key not in _TRAINED_CB:
+        _TRAINED_CB[key] = similarity.coarse_quantizer(load(spark, sf_dir, "embeddings"))
+    return _TRAINED_CB[key]
 
 
 @q("knn_join_ivf")
@@ -5768,9 +5773,9 @@ def quality_lr_score(spark, sf_dir):
     pipelines run after the heuristic gates — GPT-3's quality LR,
     CCNet's scored filtering): cheap per-doc features, a weak seed
     labeled from the heuristic's own extremes, a DETERMINISTIC
-    full-batch logistic regression (kmeans_fit's partial-sum shape:
-    broadcast weights, one narrow Arrow pass per iteration, corpus
-    never shuffles), and corpus-wide scoring as one codegen sigmoid
+    full-batch logistic regression (numeric.iterate_partials: broadcast
+    weights, one narrow Arrow pass per iteration, corpus never
+    shuffles), and corpus-wide scoring as one codegen sigmoid
     expression. Rows-only by design (iterative fit); determinism,
     separability and heuristic-agreement invariants pytest-gated."""
     return curation.quality_lr_score(load(spark, sf_dir, "documents"))

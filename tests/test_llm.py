@@ -1674,6 +1674,126 @@ def test_kmeans_inertia_monotone_and_assignment_argmin(spark):
     assert sizes == [30, 30, 30]
 
 
+def _naive_lloyd(x, code, n_iter):
+    """Plain Lloyd's on an [n, d] array from seed centroids [k, d]:
+    (centroids, inertia trace); an empty cluster keeps its centroid."""
+    import numpy as np
+
+    code, trace = code.copy(), []
+    for _ in range(n_iter):
+        d = ((x[:, None, :] - code[None, :, :]) ** 2).sum(axis=2)
+        lab = d.argmin(axis=1)
+        trace.append(d[np.arange(len(x)), lab].sum())
+        for c in range(len(code)):
+            if (lab == c).any():
+                code[c] = x[lab == c].mean(axis=0)
+    return code, trace
+
+
+def _naive_lr(x, y, n_iter, lr):
+    """Full-batch GD logistic regression on standardized features from
+    zero weights, one column of y per class: raw-space (weights [K, d],
+    biases [K], mean-loss trace of class 0)."""
+    import numpy as np
+
+    mu, sd = x.mean(axis=0), x.std(axis=0)
+    xs = (x - mu) / sd
+    w, b, trace = np.zeros((y.shape[1], x.shape[1])), np.zeros(y.shape[1]), []
+    for _ in range(n_iter):
+        p = 1.0 / (1.0 + np.exp(-(xs @ w.T + b)))
+        loss = -(y * np.log(p + 1e-12) + (1 - y) * np.log(1 - p + 1e-12))
+        trace.append(loss[:, 0].mean())
+        w, b = w - lr * (p - y).T @ xs / len(x), b - lr * (p - y).sum(axis=0) / len(x)
+    return w / sd, b - (w * (mu / sd)).sum(axis=1), trace
+
+
+@pytest.mark.parametrize("fit", ["kmeans", "pq", "pca", "lr", "ovr"])
+def test_iterative_fits_match_naive_reference(spark, fit):
+    """Naive-reference sweep of the five iterate_partials fits on a
+    one-partition frame (one Arrow batch): each agrees to 1e-12 with a
+    plain numpy implementation of the same algorithm."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    x = np.vstack([c + rng.randn(20, 4) for c in ([4.0, 0, 0, 1], [-4.0, 0, 2, 0], [0, 6.0, 0, 0])])
+    x = x * np.array([1.0, 2.0, 0.5, 0.2])  # distinct variances for PCA
+    x = x[rng.permutation(len(x))]
+    lab = np.array(["a", "b", "c"])[np.argmax(x[:, :3] * [1.0, 1.0, -1.0], axis=1)]
+    y = (x[:, 0] + 0.5 * rng.randn(len(x)) > 0).astype(int)
+    frame = spark.createDataFrame(
+        [(i, [float(v) for v in x[i]], float(x[i, 0]), float(x[i, 1]), int(y[i]), str(lab[i]))
+         for i in range(len(x))],
+        "vec_id long, embedding array<double>, f0 double, f1 double, y int, lab string",
+    ).coalesce(1)
+    close = dict(rtol=1e-12, atol=1e-12)
+
+    if fit == "kmeans":
+        code, trace = similarity.kmeans_fit(frame, k=3, n_iter=3)
+        ref, ref_trace = _naive_lloyd(x, x[:3], 3)
+        assert np.allclose(code, ref, **close) and np.allclose(trace, ref_trace, **close)
+        # kmeans_fit is pq_fit's m=1 case, bit for bit
+        assert np.array_equal(code, similarity.pq_fit(frame, m=1, k=3, n_iter=3)[0][0])
+    elif fit == "pq":
+        code, trace = similarity.pq_fit(frame, m=2, k=3, n_iter=3)
+        refs = [_naive_lloyd(x[:, 2 * j:2 * j + 2], x[:3, 2 * j:2 * j + 2], 3) for j in range(2)]
+        assert np.allclose(code, [r[0] for r in refs], **close)
+        assert np.allclose(trace, np.add(refs[0][1], refs[1][1]), **close)
+    elif fit == "pca":
+        comps, mean, ratio = similarity.pca_fit(frame, k=3)
+        evals, evecs = np.linalg.eigh(np.cov(x.T, bias=True))
+        order = np.argsort(evals)[::-1][:3]
+        ref = evecs[:, order].T
+        ref *= np.sign(ref[np.arange(3), np.abs(ref).argmax(axis=1)])[:, None]
+        assert np.allclose(comps, ref, **close) and np.allclose(mean, x.mean(axis=0), **close)
+        assert np.allclose(ratio, evals[order] / evals.sum(), **close)
+    elif fit == "lr":
+        w, b, trace = curation.lr_fit(frame, ["f0", "f1"], "y", n_iter=3, lr=0.5)
+        rw, rb, rtrace = _naive_lr(x[:, :2], y[:, None].astype(float), 3, 0.5)
+        assert np.allclose(w, rw[0], **close) and np.isclose(b, rb[0], **close)
+        assert np.allclose(trace, rtrace, **close)
+    else:
+        fitted = curation.lr_fit_ovr(frame, ["f0", "f1"], "lab", ["a", "b", "c"], n_iter=3, lr=0.5)
+        onehot = (lab[:, None] == np.array(["a", "b", "c"])).astype(float)
+        rw, rb, _ = _naive_lr(x[:, :2], onehot, 3, 0.5)
+        for i, c in enumerate(["a", "b", "c"]):
+            assert np.allclose(fitted[c][0], rw[i], **close) and np.isclose(fitted[c][1], rb[i], **close)
+
+
+def test_corpus_codebook_refits_rewritten_embeddings(spark, tmp_path, monkeypatch):
+    """The registered ANN queries cache their trained codebook per
+    embeddings file snapshot: rewriting embeddings.parquet in the same
+    process refits instead of probing the stale codebook."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from metrocloud_data_pipeline_spark import queries
+    from metrocloud_data_pipeline_spark.sources import load
+
+    monkeypatch.setattr(queries, "_TRAINED_CB", {})
+    rng = np.random.RandomState(9)
+    sf_dir = str(tmp_path)
+
+    def write(pts):
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(range(len(pts)), pa.int64()),
+                "embedding": pa.array([[float(v) for v in p] for p in pts], pa.list_(pa.float32())),
+                "label": pa.array([0] * len(pts), pa.int32()),
+            }),
+            str(tmp_path / "embeddings.parquet"),
+        )
+
+    write(rng.randn(120, 4))
+    ids, first = queries._corpus_codebook(spark, sf_dir)
+    assert queries._corpus_codebook(spark, sf_dir)[1] is first  # same snapshot: cached
+    write(rng.randn(120, 4) + [0.0, 0.0, 9.0, 0.0])
+    ids, second = queries._corpus_codebook(spark, sf_dir)
+    assert not np.array_equal(second, first)
+    fresh = similarity.coarse_quantizer(load(spark, sf_dir, "embeddings"))[1]
+    assert np.array_equal(second, fresh)
+
+
 def test_unigram_surprisal_rare_words_score_higher(docs):
     out = {r["doc_id"]: r for r in text.unigram_surprisal(docs).collect()}
     # docs 0-2 normalize to the same text -> identical scores
@@ -1790,11 +1910,21 @@ def test_curation_ops_on_empty_and_tiny_inputs(spark):
     assert code.shape == (2, 2)
     assert np.allclose(sorted(code.tolist()), [[0.0, 1.0], [1.0, 0.0]])
 
+    empty_emb = spark.createDataFrame([], "vec_id long, embedding array<float>, label int")
     with pytest.raises(ValueError, match="empty input"):
-        similarity.kmeans_fit(
-            spark.createDataFrame([], "vec_id long, embedding array<float>, label int"),
-            k=3,
-        )
+        similarity.kmeans_fit(empty_emb, k=3)
+    # every iterate_partials fit rejects an empty frame on its first pass
+    # (pca_fit used to raise IndexError, the LR fits to return a NaN bias)
+    with pytest.raises(ValueError, match="pca_fit: empty input frame"):
+        similarity.pca_fit(empty_emb, k=2)
+    feats = spark.createDataFrame([], "x double, z double, y int, lab string")
+    with pytest.raises(ValueError, match="lr_fit: empty input frame"):
+        curation.lr_fit(feats, ["x", "z"], "y", n_iter=2)
+    with pytest.raises(ValueError, match="lr_fit_ovr: empty input frame"):
+        curation.lr_fit_ovr(feats, ["x", "z"], "lab", ["a", "b"], n_iter=2)
+    # ...and the registered reports built on the LR fits stay empty
+    assert curation.quality_lr_score(empty, n_iter=2).count() == 0
+    assert text.langid_trained_report(empty, n_iter=2).count() == 0
 
 
 def test_media_dedup_exact_groups_by_payload(docs):
