@@ -12,7 +12,8 @@ Scale design (the whole point of these at 100 TB):
   signatures at small Hamming distance, bucketed by 4x16-bit chunks.
 - n-gram (token-set) Jaccard: exact pair similarity via token explode +
   self-join; quadratic in the worst case, so use LSH candidates first at
-  scale (`jaccard_verify` runs on candidate pairs only).
+  scale (`token_jaccard_pairs_lsh` runs its exact Jaccard verify step on
+  the candidate pairs only).
 """
 
 from __future__ import annotations

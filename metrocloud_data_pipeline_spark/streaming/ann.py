@@ -23,17 +23,23 @@ scored against the pre-built corpus layout:
   the persisted ivfpq_corpus_table codes (4 B/vector) + its codebook
   tables are the only thing read per batch — the float corpus is never
   touched after ingest, which is the 100 TB serving tier;
-- results land in parquet partitioned by batch_id with DYNAMIC
-  partition overwrite: a re-delivered micro-batch rewrites exactly its
-  own partition with identical (deterministic) content, so the sink is
-  effectively-once without any read-back — stronger than the
-  append+anti-join shape corpus ingest needs, because here the
-  partition key (batch_id) fully identifies the write.
+- both runners share one per-batch body (_serve: start clock,
+  empty-batch guard, write, metrics) and differ only in the scorer;
+  they start through pipeline._start_micro_batches like every runner;
+- results land through maintenance.overwrite_batch_partition — parquet
+  partitioned by batch_id with DYNAMIC partition overwrite: a
+  re-delivered micro-batch rewrites exactly its own partition with
+  identical (deterministic) content, so the sink is effectively-once
+  without any read-back — stronger than the append+anti-join shape
+  corpus ingest needs, because here the partition key (batch_id)
+  fully identifies the write.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import time
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -46,6 +52,8 @@ from ..llm.similarity import (
     load_ivf_quantizer,
     load_pq_codebook,
 )
+from ..operators.maintenance import overwrite_batch_partition, read_store_or_none
+from .pipeline import _parquet_stream, _start_micro_batches
 
 QUERY_SCHEMA = "vec_id long, embedding array<float>"
 
@@ -55,26 +63,7 @@ def stream_query_vectors(
 ) -> DataFrame:
     """File-based query-vector stream (stands in for the request bus;
     swap for a Kafka reader in a deployed serving tier)."""
-    reader = spark.readStream.schema(QUERY_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def _write_effectively_once(result: DataFrame, batch_id: int, output_path: str) -> None:
-    """Dynamic partition overwrite keyed by batch_id: a re-delivered
-    batch rewrites exactly its own partition with the same
-    deterministic rows — effectively-once with no read-back."""
-    from ..operators.maintenance import dynamic_partition_overwrite
-
-    with dynamic_partition_overwrite(result.sparkSession):
-        (
-            result.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(output_path)
-        )
-
+    return _parquet_stream(spark, QUERY_SCHEMA, path, max_files_per_trigger)
 
 
 def _write_serving_metrics(
@@ -97,27 +86,19 @@ def _write_serving_metrics(
     guard below. Effectively-once like the result sink (r14): one row
     per batch_id via dynamic partition overwrite — a re-delivered
     batch rewrites its own row instead of appending a second one."""
-    import time
-
-    from ..operators.maintenance import overwrite_batch_partition
-
     q_ids = batch.select(F.col("vec_id").alias("q_id")).distinct()
     n_queries = q_ids.count()
-    try:
-        written = spark.read.parquet(output_path).where(
-            F.col("batch_id") == batch_id
-        )
-        n_results = written.count()
-    except AnalysisException:
-        # a batch whose every result row was dropped (all zero-norm
-        # queries, or a fully starved corpus/codes filter) writes NO
-        # parquet files — when it is also the FIRST batch there is
-        # nothing at output_path to infer a schema from, and an
-        # unguarded read would kill the stream exactly on the
-        # degenerate batch the metrics exist to surface (ADVICE r11)
-        written = None
-        n_results = 0
-    if written is None or n_results == 0:
+    # a batch whose every result row was dropped (all zero-norm
+    # queries, or a fully starved corpus/codes filter) writes NO
+    # parquet files — when it is also the FIRST batch there is nothing
+    # at output_path to infer a schema from, and an unguarded read
+    # would kill the stream exactly on the degenerate batch the metrics
+    # exist to surface (ADVICE r11). read_store_or_none reads exactly
+    # that case as None and raises on any other read failure.
+    store = read_store_or_none(spark, output_path)
+    written = None if store is None else store.where(F.col("batch_id") == batch_id)
+    n_results = 0 if written is None else written.count()
+    if n_results == 0:
         # every query got 0 < k neighbors
         n_underfilled = n_queries
     else:
@@ -139,6 +120,35 @@ def _write_serving_metrics(
     overwrite_batch_partition(metrics_row, metrics_path, batch_id)
 
 
+def _serve(
+    query_stream: DataFrame,
+    score,
+    output_path: str,
+    checkpoint_path: str,
+    k: int,
+    metrics_path: str | None,
+) -> StreamingQuery:
+    """The one per-batch body of both serving runners: start the clock,
+    skip an empty batch, write what `score` yields through the
+    batch_id-keyed sink, then the metrics row. `score(queries)` is a
+    context manager yielding the result frame; whatever it pins lives
+    until the write has finished or failed."""
+
+    def _process(batch: DataFrame, batch_id: int) -> None:
+        t_start = time.monotonic()
+        if not batch.head(1):
+            return
+        with score(batch.select("vec_id", "embedding")) as result:
+            overwrite_batch_partition(result, output_path, batch_id)
+        if metrics_path is not None:
+            _write_serving_metrics(
+                result.sparkSession, metrics_path, batch, batch_id,
+                output_path, k, t_start,
+            )
+
+    return _start_micro_batches(query_stream, _process, checkpoint_path)
+
+
 def run_ann_serving_stream(
     query_stream: DataFrame,
     corpus: DataFrame,
@@ -148,7 +158,6 @@ def run_ann_serving_stream(
     nprobe: int = 4,
     stride: int | None = None,
     corpus_table: DataFrame | None = None,
-    available_now: bool = True,
     codebook=None,
     codebook_fingerprint: str | None = None,
     quantizer: str | None = None,
@@ -214,18 +223,14 @@ def run_ann_serving_stream(
         corpus, codebook, quantizer, stride, train_k, fn="run_ann_serving_stream"
     )
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        import time
-
-        t_start = time.monotonic()
-        if not batch.head(1):
-            return
+    @contextmanager
+    def _score(queries: DataFrame):
         result = knn_join_ivf(
             corpus,
             k=k,
             nprobe=nprobe,
             listed=corpus_table,
-            queries=batch.select("vec_id", "embedding"),
+            queries=queries,
             codebook=codebook,
             codebook_fingerprint=codebook_fingerprint,
             corpus_filter=corpus_filter,
@@ -237,17 +242,23 @@ def run_ann_serving_stream(
         # zero-norm query yields NO rows rather than k arbitrary ones
         # ranked by NULL-tie accident (streaming edge-parity, r11).
         result = result.where(F.col("cosine_sim").isNotNull())
-        if underfill_escalation is not None:
-            # the splice reads the first pass three times (underfill
-            # counts, anti-join, union) — pin and materialize it so the
-            # probe join runs once per trigger, not three times
-            first = result.persist()
+        if underfill_escalation is None:
+            yield result
+            return
+        # the splice reads the first pass three times (underfill
+        # counts, anti-join, union) — pin and materialize it so the
+        # probe join runs once per trigger, not three times. Released
+        # in the finally: a raise in the escalation or the write would
+        # otherwise leave the entry in the shared CacheManager across
+        # the crash-replay restart
+        first = result.persist()
+        try:
             first.count()
-            result = escalate_underfilled(
+            yield escalate_underfilled(
                 first,
                 corpus,
                 k=k,
-                queries=batch.select("vec_id", "embedding"),
+                queries=queries,
                 corpus_filter=corpus_filter,
                 mode=underfill_escalation,
                 nprobe=(
@@ -259,22 +270,10 @@ def run_ann_serving_stream(
                 # escalated rows obey the same undefined-similarity
                 # contract as the first pass
             ).where(F.col("cosine_sim").isNotNull())
-            _write_effectively_once(result, batch_id, output_path)
+        finally:
             first.unpersist()
-        else:
-            _write_effectively_once(result, batch_id, output_path)
-        if metrics_path is not None:
-            _write_serving_metrics(
-                result.sparkSession, metrics_path, batch, batch_id,
-                output_path, k, t_start,
-            )
 
-    writer = query_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _serve(query_stream, _score, output_path, checkpoint_path, k, metrics_path)
 
 
 def run_ann_serving_stream_pq(
@@ -285,7 +284,6 @@ def run_ann_serving_stream_pq(
     checkpoint_path: str,
     k: int = 10,
     nprobe: int = 4,
-    available_now: bool = True,
     refine_factor: int | None = None,
     corpus: DataFrame | None = None,
     codes_filter=None,
@@ -333,15 +331,11 @@ def run_ann_serving_stream_pq(
     cent_ids, cent_code, _fp = load_ivf_quantizer(spark, f"{table_name}_coarse")
     codes = spark.table(table_name)
 
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        import time
-
-        t_start = time.monotonic()
-        if not batch.head(1):
-            return
+    @contextmanager
+    def _score(queries: DataFrame):
         if refine_factor is not None:
             result = ivfpq_topk_batch_refined(
-                batch.select("vec_id", "embedding"),
+                queries,
                 codes,
                 codebooks,
                 (cent_ids, cent_code),
@@ -359,7 +353,7 @@ def run_ann_serving_stream_pq(
             result = result.where(F.col("cosine_sim").isNotNull())
         else:
             result = ivfpq_topk_batch(
-                batch.select("vec_id", "embedding"),
+                queries,
                 codes,
                 codebooks,
                 (cent_ids, cent_code),
@@ -367,16 +361,6 @@ def run_ann_serving_stream_pq(
                 nprobe=nprobe,
                 codes_filter=codes_filter,
             )
-        _write_effectively_once(result, batch_id, output_path)
-        if metrics_path is not None:
-            _write_serving_metrics(
-                result.sparkSession, metrics_path, batch, batch_id,
-                output_path, k, t_start,
-            )
+        yield result
 
-    writer = query_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _serve(query_stream, _score, output_path, checkpoint_path, k, metrics_path)

@@ -35,20 +35,16 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..llm.curation import quality_filter
 from ..llm.dedup import _norm_text
+from ..operators.maintenance import (
+    overwrite_batch_partition,
+    read_store_or_none,
+    recover_store,
+)
+from .pipeline import _parquet_stream, _start_micro_batches
 
 DOCUMENT_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
-
-def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a standing store, or None ONLY when no committed data
-    exists yet (first batch / killed-first-write debris). One shared
-    implementation with the media sink — see
-    operators.maintenance.read_store_or_none for the error taxonomy."""
-    from ..operators.maintenance import read_store_or_none
-
-    return read_store_or_none(spark, path)
-
 
 # MinHash parameters shared by the in-batch screen and the persisted
 # band index — they MUST match, or stored band rows are meaningless.
@@ -89,7 +85,7 @@ def _ensure_band_index(
     all-or-nothing, so partial per-doc band sets do not occur."""
     from ..llm.dedup import _band_buckets, minhash_signatures
 
-    idx = _read_parquet_or_none(spark, band_index_path)
+    idx = read_store_or_none(spark, band_index_path)
     store_ids = store.select("doc_id")
     if idx is not None:
         idx_ids = idx.select("doc_id").distinct()
@@ -137,10 +133,7 @@ def stream_document_files(
 ) -> DataFrame:
     """File-based document stream (stands in for the crawl-delivery
     bus; swap for a Kafka reader in a deployed pipeline)."""
-    reader = spark.readStream.schema(DOCUMENT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _parquet_stream(spark, DOCUMENT_SCHEMA, path, max_files_per_trigger)
 
 
 def curate_batch(
@@ -406,7 +399,6 @@ def run_corpus_ingest_stream(
     metrics_path: str | None = None,
     min_tokens: int = 3,
     quality_mode: str = "basic",
-    available_now: bool = True,
     near_dup_screen: bool = False,
     near_dup_threshold: float = 0.95,
     band_index_path: str | None = None,
@@ -521,15 +513,10 @@ def run_corpus_ingest_stream(
     def _process(batch: DataFrame, batch_id: int) -> None:
         # the inline compaction below swaps stores via swap_store — if a
         # prior run died mid-swap, restore the aside copy before reading
-        from ..operators.maintenance import (
-            overwrite_batch_partition,
-            recover_store,
-        )
-
         recover_store(table_path)
         if band_index_path is not None:
             recover_store(band_index_path)
-        store = _read_parquet_or_none(spark, table_path)
+        store = read_store_or_none(spark, table_path)
         if store is not None:
             existing = store.select("digest")
             # near-dup screen reads (doc_id, text) only — the store scan
@@ -722,9 +709,4 @@ def run_corpus_ingest_stream(
             )
             overwrite_batch_partition(metrics_row, metrics_path, batch_id)
 
-    writer = doc_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_micro_batches(doc_stream, _process, checkpoint_path)

@@ -27,7 +27,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.maintenance import recover_store, scd2_merge, swap_store
+from ..operators.maintenance import (
+    dynamic_partition_overwrite,
+    overwrite_batch_partition,
+    recover_store,
+    scd2_merge,
+    swap_store,
+)
+from .pipeline import _start_micro_batches
 
 
 def latest_per_key(updates: DataFrame, key_col: str, effective_col: str) -> DataFrame:
@@ -62,8 +69,6 @@ def _split_null_keys(
     if rejects_path is not None and invalid.head(1):
         # effectively-once like the dim store itself (r14): redelivery
         # rewrites this batch's rejects partition, never duplicates it
-        from ..operators.maintenance import overwrite_batch_partition
-
         overwrite_batch_partition(
             invalid.withColumn("reason", F.lit("null_business_key")),
             rejects_path,
@@ -79,7 +84,6 @@ def run_scd2_stream(
     key_col: str,
     attr_cols: list[str],
     effective_col: str = "effective_ts",
-    available_now: bool = True,
     rejects_path: str | None = None,
 ) -> StreamingQuery:
     """Apply each micro-batch of updates to the versioned dimension at
@@ -108,12 +112,7 @@ def run_scd2_stream(
         merged.write.mode("overwrite").parquet(staging)
         swap_store(dim_path, staging)
 
-    writer = update_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_micro_batches(update_stream, _process, checkpoint_path)
 
 
 # --- partition-scoped SCD2 (large-dimension upgrade) -------------------------
@@ -145,7 +144,6 @@ def run_scd2_stream_bucketed(
     attr_cols: list[str],
     effective_col: str = "effective_ts",
     n_buckets: int = 32,
-    available_now: bool = True,
     rejects_path: str | None = None,
 ) -> StreamingQuery:
     """Partition-scoped SCD2 MERGE — the large-dimension upgrade over
@@ -191,17 +189,10 @@ def run_scd2_stream_bucketed(
             attr_cols,
             effective_col=effective_col,
         ).withColumn(BUCKET_COL, _key_bucket(key_col, n_buckets))
-        from ..operators.maintenance import dynamic_partition_overwrite
-
         # merged.sparkSession IS the micro-batch's cloned session (the
         # local `spark` above is batch-bound too); spelled through the
         # frame so the registry lint gate can verify it statically
         with dynamic_partition_overwrite(merged.sparkSession):
             merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(dim_path)
 
-    writer = update_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_micro_batches(update_stream, _process, checkpoint_path)

@@ -45,19 +45,18 @@ serving do:
   partitioned side table written through the same effectively-once
   shape, and its read excludes the current batch_id so redelivery
   cannot self-match;
-- the features sink is effectively-once via dynamic partition
-  overwrite keyed by batch_id (the ANN-serving shape: the partition
-  key fully identifies the write, so a re-delivered micro-batch
-  rewrites exactly its own partition with identical rows — the mode
-  is set on the micro-batch's OWN cloned session, the r13 fix that
-  made this true for multi-batch streams);
-- rejects and per-batch metrics land through the SAME effectively-once
-  shape as the features sink (overwrite_batch_partition: batch_id
-  dynamic partition overwrite, r14) — a crash-replay rewrites exactly
-  its own partition in every table, so the accounting law (each input
-  row in exactly one of features/rejects, one metrics row per batch)
-  holds across redelivery, not just per clean run; metrics columns
-  appended at the END of the schema per the r12 discipline.
+- every sink — features, print index, rejects and per-batch metrics —
+  lands through maintenance.overwrite_batch_partition (batch_id dynamic
+  partition overwrite, the ANN-serving shape: the partition key fully
+  identifies the write, and the mode is set on the micro-batch's OWN
+  cloned session, the r13 fix that made this true for multi-batch
+  streams) — a crash-replay rewrites exactly its own partition in
+  every table, so the accounting law (each input row in exactly one of
+  features/rejects, one metrics row per batch) holds across
+  redelivery, not just per clean run; metrics columns appended at the
+  END of the schema per the r12 discipline;
+- the stream starts through pipeline._start_micro_batches (availableNow,
+  like every runner in the package).
 
 At 100 TB the decode work is map-only over Arrow batches (bytes cross
 the JVM<->Python boundary once per batch), there is no shuffle
@@ -76,6 +75,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructField, StructType
 
 from ..llm.multimodal import MEDIA_SCHEMA, extract_features
+from ..operators.maintenance import overwrite_batch_partition, read_store_or_none
+from .pipeline import _parquet_stream, _start_micro_batches
 
 REJECT_SCHEMA = "media_id long, media_type string, reason string"
 
@@ -92,10 +93,7 @@ def stream_media_items(
 ) -> DataFrame:
     """File-based media-item stream (stands in for the upload bus;
     swap for a Kafka reader in a deployed tier)."""
-    reader = spark.readStream.schema(MEDIA_STREAM_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _parquet_stream(spark, MEDIA_STREAM_SCHEMA, path, max_files_per_trigger)
 
 
 def featurize_media_batch(
@@ -353,7 +351,6 @@ def run_media_feature_stream(
     decode_stub: bool = False,
     dim: int = 8,
     max_files_per_trigger: int | None = None,
-    once: bool = True,
     dedup: bool = False,
     near_dup_screen: bool = False,
     print_index_path: str | None = None,
@@ -396,11 +393,6 @@ def run_media_feature_stream(
     exclusion argument applied to prints, so a crash between the
     index write and the metrics write cannot make a replayed batch
     near-dup-match its own prints and reject itself forever."""
-    from ..operators.maintenance import (
-        dynamic_partition_overwrite,
-        overwrite_batch_partition,
-    )
-
     if near_dup_screen and (not dedup or print_index_path is None):
         raise ValueError(
             "run_media_feature_stream: near_dup_screen=True requires "
@@ -420,8 +412,6 @@ def run_media_feature_stream(
             # as None — any other failure must kill the batch, or
             # store-level dedup silently turns off and duplicates land
             # permanently (review r13; shared helper with corpus ingest)
-            from ..operators.maintenance import read_store_or_none
-
             store = read_store_or_none(spark, output_path)
             if store is not None:
                 existing = store.where(F.col("batch_id") != batch_id).select(
@@ -429,8 +419,6 @@ def run_media_feature_stream(
                 )
         existing_prints = None
         if near_dup_screen:
-            from ..operators.maintenance import read_store_or_none
-
             index = read_store_or_none(spark, print_index_path)
             if index is not None:
                 # exclude the current batch_id: a replayed batch must
@@ -461,20 +449,12 @@ def run_media_feature_stream(
         # then FAILED_READ_FILE on the vanished old files). kept is
         # already frozen: it filters the checkpointed decode frame.
         rejected = rejected.localCheckpoint()
-        # conf must be set on the CLONED session the micro-batch frame
-        # is bound to (kept.sparkSession), not the outer `spark`:
-        # foreachBatch executes against an isolated session clone, so a
-        # mode set on the outer session silently leaves the write
-        # STATIC and every micro-batch wipes all prior partitions
-        # (found by the first multi-batch media test, r13 — the ann and
-        # corpus sinks already used the batch-bound session)
-        with dynamic_partition_overwrite(kept.sparkSession):
-            (
-                kept.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(output_path)
-            )
+        # overwrite_batch_partition sets the overwrite mode on the
+        # CLONED session kept is bound to, not the outer `spark`: a mode
+        # set on the outer session silently leaves the write STATIC and
+        # every micro-batch wipes all prior partitions (found by the
+        # first multi-batch media test, r13)
+        overwrite_batch_partition(kept, output_path, batch_id)
         if near_dup_screen:
             # maintain the print index: the KEPT rows' prints join the
             # standing side table through the shared effectively-once
@@ -559,9 +539,4 @@ def run_media_feature_stream(
             # as the partition key (r14)
             overwrite_batch_partition(metrics_row, metrics_path, batch_id)
 
-    writer = items.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if once:
-        return writer.trigger(availableNow=True).start()
-    return writer.start()
+    return _start_micro_batches(items, _process, checkpoint_dir)

@@ -7,7 +7,11 @@ Structured Streaming:
 - OP-ST1 micro-batch trigger: processingTime/availableNow trigger +
   foreachBatch. (Spark has no row-count trigger; the time trigger
   subsumes the reference's `>=100 rows OR >=5 s` rule — documented
-  deviation.)
+  deviation.) Every runner in this package (sensor ingest and alerts,
+  corpus ingest, ANN serving, SCD2, media) starts through the one
+  helper `_start_micro_batches` and reads its file source through
+  `_parquet_stream`; every batch_id-keyed sink lands through
+  `maintenance.overwrite_batch_partition`.
 - OP-ST2 per-device ordering: the batch pipeline repartitions by
   device before stateful ops; sinks write device-keyed.
 - OP-ST3 stateful last-reading store: streaming max_by aggregate per
@@ -40,14 +44,38 @@ from .. import schema as S
 from ..operators import ingest, maintenance, quality
 
 
+def _parquet_stream(spark: SparkSession, schema, path: str, max_files_per_trigger: int | None) -> DataFrame:
+    """The one body of the package's parquet file sources: a fixed
+    schema (no inference on a stream), optionally capped files per
+    trigger."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+def _start_micro_batches(
+    stream: DataFrame, process, checkpoint_path: str, trigger: dict | None = None
+) -> StreamingQuery:
+    """OP-ST1/ST6: the one start path of every runner — foreachBatch
+    `process` behind a checkpoint, fired by `trigger` (DataStreamWriter
+    .trigger keywords; None is availableNow). The foreachBatch method
+    is looked up on each call, so a patched
+    DataStreamWriter.foreachBatch (perfbench's batch tracing) wraps the
+    stream started next."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
 def stream_raw_files(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-based raw-message stream (stands in for the MQTT/Kafka source,
     OP-S1/S3; swap for spark.readStream.format('kafka') + from_avro in a
     Kafka deployment)."""
-    reader = spark.readStream.schema(S.RAW_RUUVITAG_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _parquet_stream(spark, S.RAW_RUUVITAG_SCHEMA, path, max_files_per_trigger)
 
 
 def run_ingest_stream(
@@ -104,12 +132,8 @@ def run_ingest_stream(
             )
             maintenance.overwrite_batch_partition(metrics_row, metrics_path, batch_id)
 
-    writer = raw_stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_path)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    trigger = {"availableNow": True} if available_now else {"processingTime": processing_time}
+    return _start_micro_batches(raw_stream, process, checkpoint_path, trigger)
 
 
 def alert_columns(readings: DataFrame) -> DataFrame:
@@ -409,8 +433,6 @@ def run_alert_stream(
     alerts_path: str,
     checkpoint_path: str,
     anchor=None,
-    available_now: bool = True,
-    processing_time: str = "5 seconds",
 ) -> StreamingQuery:
     """OP-ST4 end-to-end: the alerting consumer as its own streaming query
     over the same source (the reference runs alerting and storage as
@@ -426,9 +448,4 @@ def run_alert_stream(
         # paging bug, not an observability quirk
         maintenance.overwrite_batch_partition(alerts, alerts_path, batch_id)
 
-    writer = raw_stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_path)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start_micro_batches(raw_stream, process, checkpoint_path)

@@ -286,3 +286,36 @@ def test_streaming_appends_carry_an_at_least_once_justification():
         "add an 'at-least-once append by design: <why redelivery cannot "
         "duplicate>' comment"
     )
+
+
+def test_streaming_runners_share_one_start_path_and_one_batch_sink():
+    """Every streaming runner starts through pipeline._start_micro_batches
+    (foreachBatch behind a checkpoint, one trigger spelling) and lands
+    every batch_id-keyed table through
+    maintenance.overwrite_batch_partition. A runner that wires its own
+    stream writer, or writes its own batch_id partitions, forks the
+    effectively-once contract into a copy that the crash-replay and
+    session-clone fixes above no longer cover. Gate: 'writeStream'
+    appears exactly once under streaming/, and no streaming module
+    spells partitionBy("batch_id")."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    starts: list[tuple[str, int]] = []
+    batch_sinks: list[str] = []
+    for path in sorted(
+        (root / "metrocloud_data_pipeline_spark" / "streaming").glob("*.py")
+    ):
+        text = path.read_text()
+        if text.count("writeStream"):
+            starts.append((path.name, text.count("writeStream")))
+        if 'partitionBy("batch_id")' in text or "partitionBy('batch_id')" in text:
+            batch_sinks.append(path.name)
+    assert starts == [("pipeline.py", 1)], (
+        f"streaming writer sites: {starts} — start every runner through "
+        "pipeline._start_micro_batches"
+    )
+    assert not batch_sinks, (
+        f"batch_id-partitioned writes outside maintenance: {batch_sinks} — "
+        "use maintenance.overwrite_batch_partition"
+    )

@@ -1678,3 +1678,35 @@ def test_ingest_job_budget(spark, tmp_path):
     assert maintenance.read_table(spark, table).count() == 20
     assert max(per_batch) <= 8, per_batch
     assert refresh_jobs <= 3, refresh_jobs
+
+
+def test_ingest_stream_batches_run_through_patched_foreach_batch(spark, tmp_path, raw_dir):
+    """The batch-tracing hook: a DataStreamWriter.foreachBatch patched
+    on the class while run_ingest_stream starts (restored right after,
+    as the benchmark's traced runs do) must wrap the micro-batch body.
+    A start path that bound foreachBatch once, at import, would bypass
+    the patch and every traced streaming.* figure would read zero."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    orig_fb = DataStreamWriter.foreachBatch
+    seen: list[int] = []
+
+    def traced_foreach_batch(writer, func):
+        def body(df, batch_id):
+            seen.append(batch_id)
+            return func(df, batch_id)
+
+        return orig_fb(writer, body)
+
+    table = str(tmp_path / "bronze")
+    DataStreamWriter.foreachBatch = traced_foreach_batch
+    try:
+        q = streaming.run_ingest_stream(
+            streaming.stream_raw_files(spark, raw_dir), table, str(tmp_path / "ck"), anchor=ANCHOR
+        )
+    finally:
+        DataStreamWriter.foreachBatch = orig_fb
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert seen == [0]
+    assert maintenance.read_table(spark, table).count() == 20

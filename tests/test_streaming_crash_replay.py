@@ -609,6 +609,53 @@ def test_ann_serving_crash_before_metrics_replays_stable(
     assert (m[0].n_queries, m[0].n_results, m[0].n_underfilled) == (1, 3, 0)
 
 
+def test_ann_escalation_crash_releases_first_pass_cache(
+    spark, tmp_path, monkeypatch
+):
+    """underfill_escalation pins the first scoring pass in the shared
+    CacheManager for the splice. A batch that dies in the escalated
+    write must still release it: the restart replays the batch with a
+    fresh pass, so a leaked entry would outlive the crash for the whole
+    session."""
+    import math
+
+    from metrocloud_data_pipeline_spark.streaming import ann
+
+    rows = []
+    for vid in range(30):
+        v = [1.0 if i == vid % 3 else 0.0 for i in range(8)]
+        v[(vid % 3) + 4] = 0.05 * (vid % 7)
+        n = math.sqrt(sum(x * x for x in v))
+        rows.append((vid, [x / n for x in v], vid % 3))
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+    src = tmp_path / "queries"
+    src.mkdir()
+    spark.createDataFrame([(500, rows[1][1])], ann.QUERY_SCHEMA).coalesce(
+        1
+    ).write.parquet(str(src / "b1"))
+
+    def persistent():
+        # ids, not a count: the context cleaner may drop other tests'
+        # garbage-collected RDDs meanwhile; a leak is an id not seen before
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+
+    injector = CrashOnWrite(monkeypatch, "results")
+    _await_failure(
+        ann.run_ann_serving_stream(
+            ann.stream_query_vectors(spark, str(src) + "/*"),
+            corpus, str(tmp_path / "results"), str(tmp_path / "ck"),
+            k=3, nprobe=1, stride=7, corpus_filter=F.col("label") == 0,
+            underfill_escalation="brute",
+        )
+    )
+    assert injector.fired == 1
+    assert persistent() <= before
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize("crash_sink", ["rejects", "metrics"])
 def test_corpus_decontam_gate_crash_replays_stable(
