@@ -812,6 +812,15 @@ def _avi_video_feature(payload: bytes, dim: int) -> list[float]:
     return [float(v) for v in np.asarray(gray, dtype="float64").mean(axis=0) / 255.0]
 
 
+def _is_lenient(errors: str) -> bool:
+    """The one check of an `errors` mode: True for 'reject' (isolate a
+    decode failure to its row), False for 'raise'; anything else raises
+    at build time, before a job starts."""
+    if errors not in ("raise", "reject"):
+        raise ValueError(f"errors must be 'raise' or 'reject', got {errors!r}")
+    return errors == "reject"
+
+
 def extract_features(
     media: DataFrame,
     decode_stub: bool = True,
@@ -858,9 +867,7 @@ def extract_features(
             "image/audio/video) — use decode_stub=True"
         )
 
-    if errors not in ("raise", "reject"):
-        raise ValueError(f"errors must be 'raise' or 'reject', got {errors!r}")
-    lenient = errors == "reject"
+    lenient = _is_lenient(errors)
 
     def _feature_or_error(mt: str, b: bytes) -> tuple[list[float] | None, str | None]:
         if decode_stub:
@@ -970,9 +977,7 @@ def sample_frames(
     decode_error column."""
     import math
 
-    if errors not in ("raise", "reject"):
-        raise ValueError(f"errors must be 'raise' or 'reject', got {errors!r}")
-    lenient = errors == "reject"
+    lenient = _is_lenient(errors)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1151,6 +1156,33 @@ def mel_band_centers(sr: int, dim: int) -> list[float]:
     return [float(v) for v in imel(np.linspace(mel(0.0), mel(sr / 2.0), dim + 2))[1:-1]]
 
 
+# the synth corpora's row shape: MEDIA_SCHEMA's columns, every one
+# nullable (media_id too, so plans keep their inferred isnotnull filters)
+SYNTH_SCHEMA = StructType([StructField(f.name, f.dataType) for f in MEDIA_SCHEMA])
+
+
+def _synth_media(doc_ids: DataFrame, **cols) -> DataFrame:
+    """The one synth row builder: each row of `doc_ids` (a doc_id-only
+    frame) becomes one media row whose media_id is the doc_id and whose
+    other columns are `cols` in SYNTH_SCHEMA order — a callable is
+    applied per doc_id, anything else is a per-row constant. Columns
+    not named are absent from the output schema."""
+    schema = StructType(
+        [f for f in SYNTH_SCHEMA if f.name == "media_id" or f.name in cols]
+    )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"]
+            out = {"media_id": ids}
+            for name in schema.names[1:]:
+                v = cols[name]
+                out[name] = ids.map(v) if callable(v) else pd.Series([v] * len(pdf))
+            yield pd.DataFrame(out)
+
+    return doc_ids.mapInPandas(run, schema=schema)
+
+
 def synth_tone_corpus(
     docs: DataFrame, sr: int = 4000, seconds: float = 0.25, dim: int = 8
 ) -> DataFrame:
@@ -1189,27 +1221,6 @@ def synth_tone_corpus(
             )
         return buf.getvalue()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": pd.Series(["audio"] * len(pdf), dtype="object"),
-                    "mime": pd.Series(["audio/wav"] * len(pdf), dtype="object"),
-                    "payload": pdf["doc_id"].map(_tone_wav),
-                    "duration_ms": pd.Series([duration_ms] * len(pdf), dtype="int32"),
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("media_type", StringType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField("duration_ms", IntegerType()),
-        ]
-    )
     # r15: the tone corpus inherits the documents scan's split count —
     # ONE split locally, which serialized the downstream FFT/mel decode
     # onto one core (measured 2.13 s -> 1.10 s on media_audio_features
@@ -1230,8 +1241,12 @@ def synth_tone_corpus(
     # puts the ESTIMATED local width at ~10 and still reaches the
     # parallelism cap by ~25k input rows — scale-adaptive, no local
     # constant.
-    return fan_out_scan(docs.select("doc_id"), rows_per_task=768).mapInPandas(
-        run, schema=schema
+    return _synth_media(
+        fan_out_scan(docs.select("doc_id"), rows_per_task=768),
+        media_type="audio",
+        mime="audio/wav",
+        payload=_tone_wav,
+        duration_ms=duration_ms,
     )
 
 
@@ -1254,30 +1269,13 @@ def synth_video_corpus(
             np.full((n_frames, height, width, 3), v, dtype=np.uint8)
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": pd.Series(["video"] * len(pdf), dtype="object"),
-                    "mime": pd.Series(["video/avi"] * len(pdf), dtype="object"),
-                    "payload": pdf["doc_id"].map(_clip),
-                    "duration_ms": pd.Series(
-                        [n_frames * 40] * len(pdf), dtype="int32"
-                    ),
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("media_type", StringType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField("duration_ms", IntegerType()),
-        ]
+    return _synth_media(
+        docs.select("doc_id"),
+        media_type="video",
+        mime="video/avi",
+        payload=_clip,
+        duration_ms=n_frames * 40,
     )
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
 
 
 def synth_video_sequence_corpus(
@@ -1303,35 +1301,17 @@ def synth_video_sequence_corpus(
         )
         return _avi_encode(frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": pd.Series(["video"] * len(pdf), dtype="object"),
-                    "mime": pd.Series(["video/avi"] * len(pdf), dtype="object"),
-                    "payload": pdf["doc_id"].map(_clip),
-                    "duration_ms": pd.Series(
-                        [n_frames * 40] * len(pdf), dtype="int32"
-                    ),
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("media_type", StringType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField("duration_ms", IntegerType()),
-        ]
+    return _synth_media(
+        docs.select("doc_id"),
+        media_type="video",
+        mime="video/avi",
+        payload=_clip,
+        duration_ms=n_frames * 40,
     )
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
 
 
 def fingerprint_set_pairs(
     prints: DataFrame,
-    min_shared: int = 1,
     max_df: int | None = 1000,
     fp_col: str = "frame_hash",
     shared_col: str = "shared_frames",
@@ -1370,7 +1350,6 @@ def fingerprint_set_pairs(
         .where(F.col("media_a") < F.col("media_b"))
         .groupBy("media_a", "media_b")
         .agg(F.count(F.lit(1)).cast("long").alias(shared_col))
-        .where(F.col(shared_col) >= min_shared)
     )
     na = sizes.select(F.col("media_id").alias("media_a"), F.col("_n").alias("_na"))
     nb = sizes.select(F.col("media_id").alias("media_b"), F.col("_n").alias("_nb"))
@@ -1393,7 +1372,6 @@ def fingerprint_set_pairs(
 def video_frame_near_dup(
     media: DataFrame,
     every_ms: int = 40,
-    min_shared: int = 1,
     max_frame_df: int | None = 1000,
     errors: str = "reject",
     with_rejects: bool = False,
@@ -1404,8 +1382,8 @@ def video_frame_near_dup(
     re-containered/re-muxed copies of the same footage collide), then
     videos are paired by shared fingerprints and scored by Jaccard over
     their distinct-frame sets. Output: (media_a, media_b,
-    shared_frames, jaccard) for media_a < media_b with >= min_shared
-    shared frames, jaccard rounded to 6 decimals.
+    shared_frames, jaccard) for media_a < media_b sharing at least one
+    frame, jaccard rounded to 6 decimals.
 
     Scale shape: the pair search joins on frame_hash, so cost follows
     shared-fingerprint density, not corpus size squared; ubiquitous
@@ -1444,24 +1422,42 @@ def video_frame_near_dup(
         "frame_hash",
         *(["decode_error"] if errors == "reject" else []),
     )
+    return _print_set_near_dup(
+        sampled, "frame_hash", "shared_frames", max_frame_df, errors, with_rejects
+    )
+
+
+def _print_set_near_dup(
+    decoded: DataFrame,
+    fp_col: str,
+    shared_col: str,
+    max_df: int | None,
+    errors: str,
+    with_rejects: bool,
+):
+    """The post-decode body of the video and audio near-dup tiers:
+    `decoded` is (media_id, fp_col[, decode_error]) with fp_col NULL on
+    an excluded row. Distinct non-NULL prints are checkpointed (one
+    decode pass feeds sizes + pairs) and paired by
+    fingerprint_set_pairs. with_rejects=True also returns one row per
+    excluded media_id with its decode_error (NULL under 'raise'); the
+    decode is then checkpointed first, so rejects and prints read the
+    same pass and the pair plan keeps its shape."""
     if with_rejects:
         # materialize the decode ONCE including the rejected rows; the
-        # fingerprint checkpoint below then reads these local blocks
-        sampled = sampled.localCheckpoint()
-    frames = (
-        sampled.where(F.col("frame_hash").isNotNull())
-        .select("media_id", "frame_hash")
-        .distinct()
+        # print checkpoint below then reads these local blocks
+        decoded = decoded.localCheckpoint()
+    prints = (
+        decoded.where(F.col(fp_col).isNotNull()).select("media_id", fp_col).distinct()
     )
-    frames = frames.localCheckpoint()  # one decode pass feeds sizes + pairs
+    prints = prints.localCheckpoint()  # one decode pass feeds sizes + pairs
     pairs = fingerprint_set_pairs(
-        frames, min_shared, max_frame_df, fp_col="frame_hash",
-        shared_col="shared_frames",
+        prints, max_df, fp_col=fp_col, shared_col=shared_col
     )
     if not with_rejects:
         return pairs
     rejects = (
-        sampled.where(F.col("frame_hash").isNull())
+        decoded.where(F.col(fp_col).isNull())
         .select(
             "media_id",
             (
@@ -1538,7 +1534,6 @@ def fingerprint_cross_near_dup(
     new_prints: DataFrame,
     index_prints: DataFrame,
     threshold: float = 0.9,
-    min_shared: int = 1,
     max_fp_df: int | None = 1000,
 ) -> DataFrame:
     """Cross-corpus half of fingerprint_set_pairs (r15): which NEW
@@ -1571,7 +1566,6 @@ def fingerprint_cross_near_dup(
         a.join(b, "fp")
         .groupBy("_ma", "_mb")
         .agg(F.count(F.lit(1)).cast("long").alias("_shared"))
-        .where(F.col("_shared") >= min_shared)
     )
     return (
         shared.join(sizes_a.withColumnRenamed("media_id", "_ma"), "_ma")
@@ -2663,30 +2657,13 @@ def synth_mp3_corpus(docs: DataFrame) -> DataFrame:
             total_samples=(int(d % 7) + 1) * 100, sample_rate=1000
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": pd.Series(["audio"] * len(pdf), dtype="object"),
-                    "mime": pdf["doc_id"].map(
-                        lambda d: "audio/mpeg" if d % 2 == 0 else "audio/flac"
-                    ),
-                    "payload": pdf["doc_id"].map(_clip),
-                    "duration_ms": pd.Series([None] * len(pdf), dtype="object"),
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("media_type", StringType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField("duration_ms", IntegerType()),
-        ]
+    return _synth_media(
+        docs.select("doc_id"),
+        media_type="audio",
+        mime=lambda d: "audio/mpeg" if d % 2 == 0 else "audio/flac",
+        payload=_clip,
+        duration_ms=None,
     )
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
 
 
 def recontainer_avi(payload: bytes) -> bytes:
@@ -2696,8 +2673,9 @@ def recontainer_avi(payload: bytes) -> bytes:
     appended at top level. The payload bytes — and therefore any exact
     payload digest — change, while the decoded frames are
     bit-identical: exactly the copy class exact dedup MISSES and
-    frame-fingerprint near-dup must CATCH. The planted-copy generator
-    for the media near-dup recall audit (VERDICT r13 #6); it also
+    frame-fingerprint near-dup must CATCH. The planted-copy payload of
+    the video recall audit (_planted_copies applies it; VERDICT r13
+    #6); it also
     drives the r14 document-order RIFF walk through a registered query
     (a LIFO walk would decode these copies with scrambled frames and
     the recall audit would read 0)."""
@@ -2747,30 +2725,62 @@ def recontainer_avi(payload: bytes) -> bytes:
 RECONTAINER_ID_OFFSET = 1 << 40
 
 
-def media_recontainered_copies(
-    media: DataFrame, id_offset: int = RECONTAINER_ID_OFFSET
-) -> DataFrame:
-    """One byte-different, frame-identical copy per video item, with
-    media_id shifted by id_offset — the planted ground truth for the
-    near-dup recall audit. Map-only (mapInPandas over the same Arrow
-    batches the decode path uses); non-video rows are passed through
-    recontainer_avi's fail-loud gate, so feed it a video corpus."""
+def _planted_copies(media: DataFrame, copy_payload) -> DataFrame:
+    """One planted copy per row of `media`: payload mapped through
+    copy_payload, media_id shifted by RECONTAINER_ID_OFFSET, schema
+    unchanged. Map-only, over the same Arrow batches the decode path
+    uses; copy_payload's fail-loud gate sees every row."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = pdf.copy()
-            out["media_id"] = out["media_id"] + id_offset
-            out["payload"] = out["payload"].map(recontainer_avi)
+            out["media_id"] = out["media_id"] + RECONTAINER_ID_OFFSET
+            out["payload"] = out["payload"].map(copy_payload)
             yield out
 
     return media.mapInPandas(run, schema=media.schema)
 
 
-def video_neardup_recall_report(
-    media: DataFrame,
-    id_offset: int = RECONTAINER_ID_OFFSET,
-    every_ms: int = 40,
-) -> DataFrame:
+def _planted_recall(media: DataFrame, copy_payload, near_dup, exact) -> DataFrame:
+    """The planted-copy audit shared by the video, audio and image
+    tiers: `media` plus one _planted_copies(media, copy_payload) copy
+    per row goes through near_dup(corpus), and the one-row report is
+    n_planted (rows of `media`), n_detected (pairs (a, a + offset)
+    whose score satisfies the `exact` predicate), recall, n_pairs (all
+    reported pairs) and n_byte_identical (copies whose payload digest
+    equals their original's; a digest-only join, so payloads never
+    shuffle)."""
+    copies = _planted_copies(media, copy_payload)
+    corpus = media.unionByName(copies)
+    pairs = near_dup(corpus)
+    pair_stats = pairs.agg(
+        F.count(F.lit(1)).alias("n_pairs"),
+        F.count_if(
+            (F.col("media_b") - F.col("media_a") == RECONTAINER_ID_OFFSET)
+            & exact
+        ).alias("n_detected"),
+    )
+    orig_digest = media.select(
+        "media_id", F.sha2(F.col("payload"), 256).alias("_d")
+    )
+    copy_digest = copies.select(
+        (F.col("media_id") - RECONTAINER_ID_OFFSET).alias("media_id"),
+        F.sha2(F.col("payload"), 256).alias("_dc"),
+    )
+    base_stats = orig_digest.join(copy_digest, "media_id").agg(
+        F.count(F.lit(1)).alias("n_planted"),
+        F.count_if(F.col("_d") == F.col("_dc")).alias("n_byte_identical"),
+    )
+    return base_stats.crossJoin(pair_stats).select(
+        "n_planted",
+        "n_detected",
+        F.round(F.col("n_detected") / F.col("n_planted"), 6).alias("recall"),
+        "n_pairs",
+        "n_byte_identical",
+    )
+
+
+def video_neardup_recall_report(media: DataFrame, every_ms: int = 40) -> DataFrame:
     """Recall audit of frame-fingerprint video near-dup against planted
     re-containered copies — the media tier's minhash_recall_report /
     knn_recall_report symmetry (VERDICT r13 #6): every video gets one
@@ -2788,33 +2798,11 @@ def video_neardup_recall_report(
       original's — 0 by construction, PROVING exact payload dedup
       would miss every planted pair (digest-only join, payloads never
       shuffle)."""
-    copies = media_recontainered_copies(media, id_offset)
-    corpus = media.unionByName(copies)
-    pairs = video_frame_near_dup(corpus, every_ms=every_ms)
-    pair_stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.count_if(
-            (F.col("media_b") - F.col("media_a") == id_offset)
-            & (F.col("jaccard") == 1.0)
-        ).alias("n_detected"),
-    )
-    orig_digest = media.select(
-        "media_id", F.sha2(F.col("payload"), 256).alias("_d")
-    )
-    copy_digest = copies.select(
-        (F.col("media_id") - id_offset).alias("media_id"),
-        F.sha2(F.col("payload"), 256).alias("_dc"),
-    )
-    base_stats = orig_digest.join(copy_digest, "media_id").agg(
-        F.count(F.lit(1)).alias("n_planted"),
-        F.count_if(F.col("_d") == F.col("_dc")).alias("n_byte_identical"),
-    )
-    return base_stats.crossJoin(pair_stats).select(
-        "n_planted",
-        "n_detected",
-        F.round(F.col("n_detected") / F.col("n_planted"), 6).alias("recall"),
-        "n_pairs",
-        "n_byte_identical",
+    return _planted_recall(
+        media,
+        recontainer_avi,
+        lambda corpus: video_frame_near_dup(corpus, every_ms=every_ms),
+        F.col("jaccard") == 1.0,
     )
 
 
@@ -2868,28 +2856,13 @@ def synth_tone_sequence_corpus(
                 w.writeframes(seg_pcm[((doc_id + s) * band_step) % dim])
         return buf.getvalue()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": pd.Series(["audio"] * len(pdf), dtype="object"),
-                    "mime": pd.Series(["audio/wav"] * len(pdf), dtype="object"),
-                    "payload": pdf["doc_id"].map(_seq_wav),
-                    "duration_ms": pd.Series([duration_ms] * len(pdf), dtype="int32"),
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("media_type", StringType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField("duration_ms", IntegerType()),
-        ]
+    return _synth_media(
+        docs.select("doc_id"),
+        media_type="audio",
+        mime="audio/wav",
+        payload=_seq_wav,
+        duration_ms=duration_ms,
     )
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
 
 
 def _wav_band_argmax_seq(payload: bytes, dim: int, window_ms: int) -> list[int]:
@@ -2912,6 +2885,51 @@ def _wav_band_argmax_seq(payload: bytes, dim: int, window_ms: int) -> list[int]:
     ]
 
 
+def _decode_rows(
+    media: DataFrame, decode, col: str, col_type: str, errors: str
+) -> DataFrame:
+    """The per-row decode guard: one Arrow pass over (media_id, payload)
+    emitting (media_id, col) for each value in decode(payload). A NULL
+    payload is a ValueError; under errors='reject' a failing row becomes
+    one (media_id, NULL) row with the exception text in a trailing
+    decode_error column, under 'raise' the job fails."""
+    lenient = _is_lenient(errors)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, vals, errs = [], [], []
+            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
+                try:
+                    if payload is None:
+                        raise ValueError("null media payload")
+                    # compute BEFORE any append: a raise between the
+                    # id append and the value append would shift every
+                    # subsequent row's value onto the wrong media_id
+                    got = decode(payload)
+                except Exception as exc:  # noqa: BLE001 - per-row isolation
+                    if not lenient:
+                        raise
+                    ids.append(media_id)
+                    vals.append(None)
+                    errs.append(f"{type(exc).__name__}: {exc}")
+                    continue
+                ids.extend([media_id] * len(got))
+                vals.extend(got)
+                errs.extend([None] * len(got))
+            out = {
+                "media_id": pd.Series(ids, dtype="int64"),
+                col: pd.Series(vals, dtype="object"),
+            }
+            if lenient:
+                out["decode_error"] = pd.Series(errs, dtype="object")
+            yield pd.DataFrame(out)
+
+    schema = f"media_id long, {col} {col_type}" + (
+        ", decode_error string" if lenient else ""
+    )
+    return media.select("media_id", "payload").mapInPandas(run, schema=schema)
+
+
 def audio_fingerprints(
     media: DataFrame,
     window_ms: int = 250,
@@ -2928,44 +2946,17 @@ def audio_fingerprints(
     text, the sample_frames lenient contract); 'raise' restores
     fail-loud. One Arrow pass; the scan prunes to (media_id,
     payload)."""
-    if errors not in ("raise", "reject"):
-        raise ValueError(f"errors must be 'raise' or 'reject', got {errors!r}")
-    lenient = errors == "reject"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fps, errs = [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("null media payload")
-                    bands = _wav_band_argmax_seq(payload, dim, window_ms)
-                    prints = {
-                        "-".join(str(b) for b in bands[i : i + shingle])
-                        for i in range(len(bands) - shingle + 1)
-                    }
-                    for p in sorted(prints):
-                        ids.append(media_id)
-                        fps.append(p)
-                        errs.append(None)
-                except Exception as exc:  # noqa: BLE001 - per-row isolation
-                    if not lenient:
-                        raise
-                    ids.append(media_id)
-                    fps.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            out = {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "fp": pd.Series(fps, dtype="object"),
+    def _prints(payload: bytes) -> list[str]:
+        bands = _wav_band_argmax_seq(payload, dim, window_ms)
+        return sorted(
+            {
+                "-".join(str(b) for b in bands[i : i + shingle])
+                for i in range(len(bands) - shingle + 1)
             }
-            if lenient:
-                out["decode_error"] = pd.Series(errs, dtype="object")
-            yield pd.DataFrame(out)
+        )
 
-    schema = "media_id long, fp string" + (
-        ", decode_error string" if lenient else ""
-    )
-    return media.select("media_id", "payload").mapInPandas(run, schema=schema)
+    return _decode_rows(media, _prints, "fp", "string", errors)
 
 
 def audio_fingerprint_near_dup(
@@ -2973,7 +2964,6 @@ def audio_fingerprint_near_dup(
     window_ms: int = 250,
     dim: int = 32,
     shingle: int = 1,
-    min_shared: int = 1,
     max_fp_df: int | None = 1000,
     errors: str = "reject",
     with_rejects: bool = False,
@@ -2995,36 +2985,16 @@ def audio_fingerprint_near_dup(
     fp = audio_fingerprints(
         media, window_ms=window_ms, dim=dim, shingle=shingle, errors=errors
     )
-    if with_rejects:
-        fp = fp.localCheckpoint()
-    prints = (
-        fp.where(F.col("fp").isNotNull()).select("media_id", "fp").distinct()
+    return _print_set_near_dup(
+        fp, "fp", "shared_prints", max_fp_df, errors, with_rejects
     )
-    prints = prints.localCheckpoint()  # one decode pass feeds sizes + pairs
-    pairs = fingerprint_set_pairs(
-        prints, min_shared, max_fp_df, fp_col="fp", shared_col="shared_prints"
-    )
-    if not with_rejects:
-        return pairs
-    rejects = (
-        fp.where(F.col("fp").isNull())
-        .select(
-            "media_id",
-            (
-                F.col("decode_error")
-                if errors == "reject"
-                else F.lit(None).cast("string").alias("decode_error")
-            ),
-        )
-        .distinct()
-    )
-    return pairs, rejects
 
 
-def reencode_wav(payload: bytes, sampwidth: int = 3) -> bytes:
+def reencode_wav(payload: bytes) -> bytes:
     """Byte-different, signal-identical WAV copy — the planted-copy
     primitive for the audio near-dup recall audit (the recontainer_avi
-    of the audio tier): re-encode a 16-bit PCM WAV at 24-bit width.
+    of the audio tier, applied by _planted_copies): re-encode a
+    16-bit PCM WAV at 24-bit width.
     The widening is EXACT (int24 = int16 << 8, and the decoder divides
     by 2^23, so (v << 8) / 2^23 == v / 2^15 — the decoded float signal
     is bit-identical), while every frame byte and the fmt header
@@ -3037,10 +3007,6 @@ def reencode_wav(payload: bytes, sampwidth: int = 3) -> bytes:
 
     import numpy as np
 
-    if sampwidth != 3:
-        raise NotImplementedError(
-            "reencode_wav supports the exact 16->24-bit widening only"
-        )
     with wave.open(BytesIO(bytes(payload))) as w:
         if w.getsampwidth() != 2:
             raise NotImplementedError(
@@ -3063,31 +3029,7 @@ def reencode_wav(payload: bytes, sampwidth: int = 3) -> bytes:
     return buf.getvalue()
 
 
-def media_reencoded_copies(
-    media: DataFrame, id_offset: int = RECONTAINER_ID_OFFSET
-) -> DataFrame:
-    """One byte-different, signal-identical 24-bit copy per audio item,
-    media_id shifted by id_offset — the planted ground truth for the
-    audio near-dup recall audit (media_recontainered_copies for
-    audio). Map-only; non-16-bit rows hit reencode_wav's fail-loud
-    gate, so feed it a 16-bit corpus."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["media_id"] = out["media_id"] + id_offset
-            out["payload"] = out["payload"].map(reencode_wav)
-            yield out
-
-    return media.mapInPandas(run, schema=media.schema)
-
-
-def audio_neardup_recall_report(
-    media: DataFrame,
-    id_offset: int = RECONTAINER_ID_OFFSET,
-    window_ms: int = 250,
-    dim: int = 32,
-) -> DataFrame:
+def audio_neardup_recall_report(media: DataFrame) -> DataFrame:
     """Recall audit of the audio near-dup tier against planted
     RE-ENCODED copies — the audio row of the media recall symmetry
     (video_neardup_recall_report, minhash_recall_report,
@@ -3098,33 +3040,8 @@ def audio_neardup_recall_report(
     print sets, the score an exact re-encode MUST get), recall,
     n_pairs, and n_byte_identical (0 by construction: digest-only
     join proves exact payload dedup would miss every planted pair)."""
-    copies = media_reencoded_copies(media, id_offset)
-    corpus = media.unionByName(copies)
-    pairs = audio_fingerprint_near_dup(corpus, window_ms=window_ms, dim=dim)
-    pair_stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.count_if(
-            (F.col("media_b") - F.col("media_a") == id_offset)
-            & (F.col("jaccard") == 1.0)
-        ).alias("n_detected"),
-    )
-    orig_digest = media.select(
-        "media_id", F.sha2(F.col("payload"), 256).alias("_d")
-    )
-    copy_digest = copies.select(
-        (F.col("media_id") - id_offset).alias("media_id"),
-        F.sha2(F.col("payload"), 256).alias("_dc"),
-    )
-    base_stats = orig_digest.join(copy_digest, "media_id").agg(
-        F.count(F.lit(1)).alias("n_planted"),
-        F.count_if(F.col("_d") == F.col("_dc")).alias("n_byte_identical"),
-    )
-    return base_stats.crossJoin(pair_stats).select(
-        "n_planted",
-        "n_detected",
-        F.round(F.col("n_detected") / F.col("n_planted"), 6).alias("recall"),
-        "n_pairs",
-        "n_byte_identical",
+    return _planted_recall(
+        media, reencode_wav, audio_fingerprint_near_dup, F.col("jaccard") == 1.0
     )
 
 
@@ -3238,30 +3155,14 @@ def synth_gradient_image_corpus(docs: DataFrame) -> DataFrame:
         px = np.repeat(g.astype("uint8")[:, :, None], 3, axis=2)
         return _png_encode(px)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "media_type": pd.Series(["image"] * len(pdf), dtype="object"),
-                    "mime": pd.Series(["image/png"] * len(pdf), dtype="object"),
-                    "payload": pdf["doc_id"].map(_img),
-                    "width": pd.Series([9] * len(pdf), dtype="int32"),
-                    "height": pd.Series([8] * len(pdf), dtype="int32"),
-                }
-            )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("media_type", StringType()),
-            StructField("mime", StringType()),
-            StructField("payload", BinaryType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-        ]
+    return _synth_media(
+        docs.select("doc_id"),
+        media_type="image",
+        mime="image/png",
+        payload=_img,
+        width=9,
+        height=8,
     )
-    return docs.select("doc_id").mapInPandas(run, schema=schema)
 
 
 def image_hashes(media: DataFrame, errors: str = "reject") -> DataFrame:
@@ -3270,42 +3171,9 @@ def image_hashes(media: DataFrame, errors: str = "reject") -> DataFrame:
     isolates undecodable payloads per row (NULL dhash + decode_error
     text, the sample_frames lenient contract); 'raise' restores
     fail-loud."""
-    if errors not in ("raise", "reject"):
-        raise ValueError(f"errors must be 'raise' or 'reject', got {errors!r}")
-    lenient = errors == "reject"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs, errs = [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    if payload is None:
-                        raise ValueError("null media payload")
-                    # compute BEFORE any append: a raise between the
-                    # id append and the hash append would shift every
-                    # subsequent row's hash onto the wrong media_id
-                    h = image_dhash(payload)
-                    ids.append(media_id)
-                    hs.append(h)
-                    errs.append(None)
-                except Exception as exc:  # noqa: BLE001 - per-row isolation
-                    if not lenient:
-                        raise
-                    ids.append(media_id)
-                    hs.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            out = {
-                "media_id": pd.Series(ids, dtype="int64"),
-                "dhash": pd.Series(hs, dtype="object"),
-            }
-            if lenient:
-                out["decode_error"] = pd.Series(errs, dtype="object")
-            yield pd.DataFrame(out)
-
-    schema = "media_id long, dhash long" + (
-        ", decode_error string" if lenient else ""
+    return _decode_rows(
+        media, lambda payload: [image_dhash(payload)], "dhash", "long", errors
     )
-    return media.select("media_id", "payload").mapInPandas(run, schema=schema)
 
 
 def image_hash_near_dup(
@@ -3400,44 +3268,33 @@ def image_hash_near_dup(
     )
 
 
-def media_brightness_copies(
-    media: DataFrame, id_offset: int = RECONTAINER_ID_OFFSET, delta: int = 4
-) -> DataFrame:
-    """One byte-different, pixel-different, GRADIENT-identical copy per
-    image item (uniform +delta brightness, re-encoded PNG), media_id
-    shifted by id_offset — the planted ground truth for the image
-    near-dup recall audit (recontainer_avi / reencode_wav for the
-    image tier). A brightness shift changes every pixel and every
-    byte, so BOTH the payload digest AND a pixel sha miss the copy,
-    while every horizontal gradient sign — and therefore the dHash —
-    is unchanged. Fails loud if the shift would clip (clipping WOULD
-    change gradients); the gradient synth corpus stays within
-    [64, 192] by construction."""
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out["media_id"] = out["media_id"] + id_offset
-
-            def _shift(payload: bytes) -> bytes:
-                px = _png_decode(payload)
-                if px.max() + delta > 255:
-                    raise ValueError(
-                        f"brightness copy would clip (max {px.max()} + "
-                        f"{delta} > 255) and change gradient signs"
-                    )
-                return _png_encode((px.astype("int64") + delta).astype("uint8"))
-
-            out["payload"] = out["payload"].map(_shift)
-            yield out
-
-    return media.mapInPandas(run, schema=media.schema)
+def brighten(payload: bytes, delta: int = 4) -> bytes:
+    """Byte-different, pixel-different, GRADIENT-identical PNG copy —
+    the planted-copy primitive for the image near-dup recall audit
+    (recontainer_avi / reencode_wav for the image tier): uniform
+    +delta brightness, re-encoded. A brightness shift changes every
+    pixel and every byte, so BOTH the payload digest AND a pixel sha
+    miss the copy, while every horizontal gradient sign — and
+    therefore the dHash — is unchanged. Fails loud if the shift would
+    clip (clipping WOULD change gradients); the gradient synth corpus
+    stays within [64, 192] by construction."""
+    px = _png_decode(payload)
+    if px.max() + delta > 255:
+        raise ValueError(
+            f"brightness copy would clip (max {px.max()} + "
+            f"{delta} > 255) and change gradient signs"
+        )
+    return _png_encode((px.astype("int64") + delta).astype("uint8"))
 
 
-def image_neardup_recall_report(
-    media: DataFrame, id_offset: int = RECONTAINER_ID_OFFSET
-) -> DataFrame:
+def media_brightness_copies(media: DataFrame, delta: int = 4) -> DataFrame:
+    """One brighten(payload, delta) copy per image item, media_id
+    shifted by RECONTAINER_ID_OFFSET — the planted ground truth for the
+    image near-dup recall audit (see _planted_copies)."""
+    return _planted_copies(media, lambda payload: brighten(payload, delta))
+
+
+def image_neardup_recall_report(media: DataFrame) -> DataFrame:
     """Recall audit of dHash image near-dup against planted
     brightness-shifted copies — the video/audio recall-report symmetry
     for the image tier: every image gets one +4-brightness copy
@@ -3448,31 +3305,6 @@ def image_neardup_recall_report(
     n_pairs / n_byte_identical (pinned 0: exact payload dedup would
     miss every planted pair; digest-only join, payloads never
     shuffle)."""
-    copies = media_brightness_copies(media, id_offset)
-    corpus = media.unionByName(copies)
-    pairs = image_hash_near_dup(corpus)
-    pair_stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.count_if(
-            (F.col("media_b") - F.col("media_a") == id_offset)
-            & (F.col("hamming") == 0)
-        ).alias("n_detected"),
-    )
-    orig_digest = media.select(
-        "media_id", F.sha2(F.col("payload"), 256).alias("_d")
-    )
-    copy_digest = copies.select(
-        (F.col("media_id") - id_offset).alias("media_id"),
-        F.sha2(F.col("payload"), 256).alias("_dc"),
-    )
-    base_stats = orig_digest.join(copy_digest, "media_id").agg(
-        F.count(F.lit(1)).alias("n_planted"),
-        F.count_if(F.col("_d") == F.col("_dc")).alias("n_byte_identical"),
-    )
-    return base_stats.crossJoin(pair_stats).select(
-        "n_planted",
-        "n_detected",
-        F.round(F.col("n_detected") / F.col("n_planted"), 6).alias("recall"),
-        "n_pairs",
-        "n_byte_identical",
+    return _planted_recall(
+        media, brighten, image_hash_near_dup, F.col("hamming") == 0
     )

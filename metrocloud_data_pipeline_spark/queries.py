@@ -2457,14 +2457,18 @@ def media_neardup_recall_report(spark, sf_dir):
     DECODED frames are bit-identical (the frame-fingerprint pair
     search must score every planted pair jaccard 1.0). The oracle
     computes the doubled corpus's closed-form gray geometry — copies
-    inherit their source's frame set — including the max_frame_df
-    df-cut model, so recall stays hash-checked end to end through
+    inherit their source's frame set — including the df-cut model of
+    video_frame_near_dup (1000 videos per frame), so recall stays
+    hash-checked end to end through
     synth -> AVI encode -> byte re-container -> the r14 document-order
     RIFF walk -> frame hash -> pair join (a LIFO-order walk would
     scramble rec-wrapped frames and this report would catch it as
     recall < 1 — the frames are constant-gray so scrambling preserves
     SETS; the audit's teeth for ORDER live in the rec-LIST pytest,
-    its teeth here are for decode identity and the df-cut)."""
+    its teeth here are for decode identity and the df-cut). The audit
+    is multimodal._planted_recall, shared with the audio and image
+    recall keys; only the copy, the pair search and the exact-match
+    predicate differ."""
     docs = load(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 2)
     media = multimodal.synth_video_sequence_corpus(docs)
     return multimodal.video_neardup_recall_report(media, every_ms=40)
@@ -2510,7 +2514,8 @@ def media_audio_near_dup(spark, sf_dir):
     duplication occur naturally. The operator decodes for REAL
     (stdlib wave -> FFT -> mel filterbank -> per-250ms-window argmax,
     llm/multimodal.py _wav_band_argmax_seq) and pairs clips through
-    the same fingerprint_set_pairs plan the video tier uses (df-cut
+    the print-set body the video tier uses
+    (multimodal._print_set_near_dup -> fingerprint_set_pairs: df-cut
     on ubiquitous prints, sizes before the cut), while the oracle
     computes the closed form WITHOUT touching audio — so the whole
     synth -> WAV encode -> decode -> FFT -> mel -> argmax ->
@@ -2583,7 +2588,8 @@ def media_audio_neardup_recall(spark, sf_dir):
     hash-checked end to end through synth -> 16-bit WAV -> 24-bit
     re-encode -> decode -> FFT -> mel -> argmax -> pair join. A
     lossy re-encode (dither, resample drift) would break argmax
-    equality and read recall < 1 — the audit's teeth."""
+    equality and read recall < 1 — the audit's teeth. Same
+    multimodal._planted_recall audit as the video and image keys."""
     docs = load(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 1)
     media = multimodal.synth_tone_sequence_corpus(docs)
     return multimodal.audio_neardup_recall_report(media)
@@ -2696,7 +2702,8 @@ def media_image_neardup_recall(spark, sf_dir):
     through synth -> PNG encode -> +4 shift -> re-encode -> decode ->
     gray -> gradient -> banded pair join. A lossy copy (clipping,
     rescale drift) would flip gradient bits and read recall < 1 —
-    the audit's teeth."""
+    the audit's teeth. Same multimodal._planted_recall audit as the
+    video and audio keys, with brighten as the copy."""
     docs = load(spark, sf_dir, "documents").where(F.col("doc_id") % 3 == 0)
     media = multimodal.synth_gradient_image_corpus(docs)
     return multimodal.image_neardup_recall_report(media)

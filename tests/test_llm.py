@@ -4235,6 +4235,122 @@ def test_reencode_wav_changes_bytes_not_signal(spark):
     assert row.recall == 1.0 and row.n_byte_identical == 0
 
 
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "extract_features",
+        "sample_frames",
+        "audio_fingerprints",
+        "image_hashes",
+        "video_frame_near_dup",
+        "audio_fingerprint_near_dup",
+        "image_hash_near_dup",
+    ],
+)
+def test_unknown_errors_mode_is_refused_before_any_job(spark, entry):
+    """Every media entry point that takes `errors` refuses a mode other
+    than 'raise' / 'reject' at build time, before a Spark job starts
+    (the near-dup tiers checkpoint eagerly, so a late check would
+    already have decoded the corpus)."""
+    media = spark.createDataFrame(
+        [(1, "video", "video/avi", bytearray(b"RIFF"), None, None, 80)],
+        multimodal.MEDIA_SCHEMA,
+    )
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    before = jobs()
+    with pytest.raises(
+        ValueError, match="errors must be 'raise' or 'reject', got 'skip'"
+    ):
+        getattr(multimodal, entry)(media, errors="skip")
+    assert jobs() == before
+
+
+@pytest.mark.parametrize(
+    "media_type, synth, near_dup, null_error, null_raises",
+    [
+        ("video", "synth_video_sequence_corpus", "video_frame_near_dup", None, False),
+        (
+            "audio",
+            "synth_tone_sequence_corpus",
+            "audio_fingerprint_near_dup",
+            "ValueError: null media payload",
+            True,
+        ),
+    ],
+    ids=["video", "audio"],
+)
+def test_with_rejects_null_and_corrupt_payloads(
+    spark, media_type, synth, near_dup, null_error, null_raises
+):
+    """with_rejects for both print-set tiers, pinning how each decoder
+    treats a NULL payload: video's sample_frames passes it through as
+    a NULL frame (reported with a NULL decode_error, and kept under
+    'raise'); audio's decode guard calls it a ValueError (reported with
+    that text, and fatal under 'raise'). A corrupt payload is reported
+    with its exception text by both."""
+    docs = spark.createDataFrame(
+        [(2, "", "en", "s", 0), (770, "", "en", "s", 0)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    good = getattr(multimodal, synth)(docs)
+    null_row = spark.createDataFrame(
+        [(8888, media_type, "x/x", None, None)], good.schema
+    )
+    bad_row = spark.createDataFrame(
+        [(9999, media_type, "x/x", bytearray(b"not a riff payload"), None)],
+        good.schema,
+    )
+    fn = getattr(multimodal, near_dup)
+    pairs, rejects = fn(
+        good.unionByName(null_row).unionByName(bad_row),
+        errors="reject",
+        with_rejects=True,
+    )
+    assert {(r.media_a, r.media_b) for r in pairs.collect()} == {(2, 770)}
+    rej = {r.media_id: r.decode_error for r in rejects.collect()}
+    assert set(rej) == {8888, 9999}
+    assert rej[8888] == null_error
+    assert rej[9999] is not None and rej[9999] != null_error
+
+    with_null = good.unionByName(null_row)
+    if null_raises:
+        with pytest.raises(Exception, match="null media payload"):
+            fn(with_null, errors="raise", with_rejects=True)[1].collect()
+    else:
+        pairs, rejects = fn(with_null, errors="raise", with_rejects=True)
+        assert {(r.media_a, r.media_b) for r in pairs.collect()} == {(2, 770)}
+        assert [tuple(r) for r in rejects.collect()] == [(8888, None)]
+
+
+def test_planted_recall_audit_reads_its_copies(spark):
+    """The planted-copy audit on its own, with copies the tier reports
+    never make: an identity copy must read n_byte_identical ==
+    n_planted (the digest join can see a byte-identical copy, so its 0
+    in the real reports is evidence), and a copy whose payload no
+    longer decodes must read n_detected == 0 under the default
+    errors='reject' (the copies drop out, the original pairs remain)."""
+    docs = spark.createDataFrame([(3,), (6,), (9,)], "doc_id long")
+    media = multimodal.synth_gradient_image_corpus(docs)
+    exact = F.col("hamming") == 0
+
+    same = multimodal._planted_recall(
+        media, lambda b: b, multimodal.image_hash_near_dup, exact
+    ).collect()[0]
+    assert (same.n_planted, same.n_byte_identical) == (3, 3)
+    assert (same.n_detected, same.recall) == (3, 1.0)
+
+    broken = multimodal._planted_recall(
+        media,
+        lambda b: b"not a png",
+        multimodal.image_hash_near_dup,
+        exact,
+    ).collect()[0]
+    assert (broken.n_planted, broken.n_detected, broken.recall) == (3, 0, 0.0)
+    assert broken.n_byte_identical == 0
+    # hashes 3, 6, 9: only (3, 6) and (3, 9) are within hamming 3
+    assert broken.n_pairs == 2
+
+
 def test_mp4_box_walk_probe_geometry_and_gate(spark):
     """The r15 ISO-BMFF tier (VERDICT r14 #6): the pure box walk
     recovers movie geometry (frames from stsz, 16.16 presentation

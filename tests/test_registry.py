@@ -319,3 +319,38 @@ def test_streaming_runners_share_one_start_path_and_one_batch_sink():
         f"batch_id-partitioned writes outside maintenance: {batch_sinks} — "
         "use maintenance.overwrite_batch_partition"
     )
+
+
+def test_media_near_dup_tier_has_one_audit_one_guard_and_no_offset_option():
+    """llm/multimodal.py decides each media near-dup rule once: the
+    `errors` mode is checked in _is_lenient, a planted copy is made in
+    _planted_copies (the one mapInPandas that keeps its input schema),
+    and the planted-copy id offset is the RECONTAINER_ID_OFFSET
+    constant the oracles hard-code. A second copy of any of these is
+    a fork the recall oracles and the decode-guard tests no longer
+    cover. Gate: 'errors not in (' and 'schema=media.schema' appear
+    exactly once, and no def takes id_offset."""
+    import ast
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "metrocloud_data_pipeline_spark" / "llm" / "multimodal.py"
+    )
+    text = path.read_text()
+    assert text.count("errors not in (") == 1, (
+        "validate errors modes through multimodal._is_lenient"
+    )
+    assert text.count("schema=media.schema") == 1, (
+        "make planted copies through multimodal._planted_copies"
+    )
+    offset_defs = [
+        node.name
+        for node in ast.walk(ast.parse(text))
+        if isinstance(node, ast.FunctionDef)
+        and "id_offset" in [a.arg for a in node.args.args + node.args.kwonlyargs]
+    ]
+    assert not offset_defs, (
+        f"id_offset parameters: {offset_defs} — planted copies sit at "
+        "RECONTAINER_ID_OFFSET, which the oracles hard-code"
+    )
