@@ -20,40 +20,6 @@ from ..functions.numeric import round6
 
 _WS = r"\s+"
 
-# Broadcast gate for word-keyed KN stats frames (VERDICT r15 #5): the
-# hint fires only when the distinct key count is known to stay under
-# this bound. 48M string-keyed rows frame to roughly 1.5-3 GB — inside
-# the 8 GB / 512M-row broadcast-relation cap with >5x margin, including
-# the ~2% HLL estimation error of approx_count_distinct.
-_WORD_STATS_BROADCAST_MAX = 48_000_000
-
-
-def _word_stats_fit_broadcast(frame, *keys: str) -> bool:
-    """Decide whether word-keyed stats frames derived from `frame` may
-    carry an explicit broadcast hint. Two tiers:
-
-    1. FREE proof from plan statistics: the estimated row count of the
-       (checkpointed) frame upper-proxies its distinct keys; when even
-       a 256x error margin (compression ratio x schema-width scaling,
-       both observed well under 32x locally) keeps it inside
-       `_WORD_STATS_BROADCAST_MAX`, broadcast without running anything.
-    2. Otherwise MEASURE: one approx_count_distinct pass over the
-       already-materialized frame (an aggregation job — negligible next
-       to the corpus passes at any scale where this tier triggers)
-       decides. Past the bound the hint is withheld and the planner
-       sizes the joins itself (type frame shuffled — slower, never
-       fatal), so the broadcast bound holds by construction.
-    """
-    from ..functions.partitioning import _estimated_rows
-
-    est = _estimated_rows(frame)
-    if est is not None and est * 256 <= _WORD_STATS_BROADCAST_MAX:
-        return True
-    nd = frame.agg(
-        *[F.approx_count_distinct(k).alias(f"_n{i}") for i, k in enumerate(keys)]
-    ).first()
-    return max(nd) <= _WORD_STATS_BROADCAST_MAX
-
 
 def tokens_col(text=None) -> F.Column:
     """Whitespace tokens of trimmed text (empty text -> empty array)."""
@@ -1287,30 +1253,39 @@ def kn_surprisal(
     suffix s{k} and its history m{k-1}) via pmod(xxhash64, n_buckets),
     the dsir_hashed_weights move: a type is the distinct hashed tuple,
     so two grams merge only when every component collides, and every
-    stats frame is keyed by one hashed column, so it holds at most
-    n_buckets rows by construction. The occurrence frame then carries
+    normalizer is keyed by one hashed column, so it takes at most
+    n_buckets distinct keys by construction. The occurrence frame then carries
     one 64-bit tuple hash (tid) instead of the components, which ride
     only in the bounded type frame (min() per tid: identical within a
     tid up to a ~2^-64 tuple collision, min for determinism under one).
 
-    Plan shape: the gram rows, the type frame and each lower level are
-    checkpointed, n eager materializations. The gram rows feed both the
-    type aggregation and the per-doc fold (checkpointing one consumer
-    only re-ran the explode for the other: 16 s vs 9 s at sf0.1), and
-    dropping the level chain measured 3.85 -> 4.66 s (r16). Scoring
-    chains up from order 2: each level's probability is computed on its
-    own frame and joined into the level above by that level's key (the
-    suffix string, or its component tuple when hashed), so the type
-    frame is shuffled once, not once per level. Hashed stats frames are
-    broadcast. Exact stats keyed by a single word (the order-2 history
-    and the current word) are broadcast only when
-    _word_stats_fit_broadcast proves them small over the order-2 frame:
-    raw web vocabulary grows with the corpus (typos, numbers, URLs) and
-    a forced broadcast past the relation cap fails the job (VERDICT r15
-    #5). Exact multi-word histories are left to the planner.
+    Plan shape: the gram rows and each level frame are checkpointed, n
+    eager materializations. The gram rows feed both the type
+    aggregation and the per-doc fold (checkpointing one consumer only
+    re-ran the explode for the other: 16 s vs 9 s at sf0.1), and
+    dropping the level chain measured 3.85 -> 4.66 s (r16). Each
+    level's checkpoint carries its own normalizers as window columns,
+    the way KenLM's estimator computes them in the same sorted pass as
+    the adjusted counts (Heafield et al. 2013): csum and nfwd over the
+    history m{k-1}, and at order 2 nback over the word s1. Below the
+    top order the level above is repartitioned by m{k-1} before its
+    group-by, so the aggregation and the history window share one
+    shuffle. B is an Observation on the order-2 checkpoint and enters
+    the order-2 probability as a literal. Scoring then chains up from
+    order 2 with no aggregation, cross join or hint: each level's
+    probability is computed on its own frame and joined into the level
+    above by that level's key (the suffix string, or its component
+    tuple when hashed), so the type frame is shuffled once, not once
+    per level. The trade: every level row that shares one history
+    lands in one window task, where a broadcast stats join once kept
+    rows of a hot single-word key (the order-2 history, the current
+    word) spread over tasks; exact multi-word histories were shuffled
+    by history either way.
 
     Returns (doc_id, gram_count, kn_bits_per_gram); docs with fewer
     than n tokens emit no row."""
+    from pyspark.sql import Observation, Window
+
     n, d = int(order), float(discount)
     hashed = n_buckets is not None
     # components of a gram w1..wn: m{n-1} is its history w1..w{n-1},
@@ -1346,19 +1321,20 @@ def kn_surprisal(
         occ = rows.select("doc_id", top)
         types = rows.groupBy(top).agg(count.alias("c"), *[F.min(c).alias(c) for c in names])
     keys[n] = [top]
-    levels = {n: types.localCheckpoint()}
-    for k in range(n - 1, 1, -1):
-        levels[k] = levels[k + 1].groupBy(*below[k]).agg(count.alias("c")).localCheckpoint()
-
-    small = not hashed and _word_stats_fit_broadcast(levels[2], "m1", "s1")
-
-    def hint(frame, key):
-        return F.broadcast(frame) if hashed or (small and key in ("m1", "s1")) else frame
-
-    def stats(k):
-        return levels[k].groupBy(f"m{k - 1}").agg(
-            F.sum("c").alias("csum"), count.alias("nfwd")
+    # each level carries its own normalizers: csum / nfwd per history
+    # m{k-1}, and at order 2 nback per word plus the btypes total
+    total, levels = Observation(), {}
+    for k in range(n, 1, -1):
+        frame = types if k == n else (
+            levels[k + 1].repartition(f"m{k - 1}").groupBy(*below[k]).agg(count.alias("c"))
         )
+        hist = Window.partitionBy(f"m{k - 1}")
+        frame = frame.withColumns({"csum": F.sum("c").over(hist), "nfwd": count.over(hist)})
+        if k == 2:
+            frame = frame.withColumn("nback", count.over(Window.partitionBy("s1"))).observe(
+                total, count.alias("btypes")
+            )
+        levels[k] = frame.localCheckpoint()
 
     # `lower` scales the backoff weight w by the lower order; order 2
     # multiplies by nback, then divides by btypes, in the oracles' order
@@ -1367,20 +1343,10 @@ def kn_surprisal(
         c = F.greatest(F.col("c").cast("double") - F.lit(d), F.lit(0.0))
         return (c / F.col("csum").cast("double") + lower(w)).alias("p")
 
-    f2 = levels[2]
-    nback, btypes = (F.col(c).cast("double") for c in ("nback", "btypes"))
-    p = (
-        f2.join(hint(stats(2), "m1"), "m1")
-        .join(hint(f2.groupBy("s1").agg(count.alias("nback")), "s1"), "s1")
-        .crossJoin(F.broadcast(f2.agg(count.alias("btypes"))))
-        .select(*keys[2], p_level(lambda w: w * nback / btypes))
-    )
+    nback, btypes = F.col("nback").cast("double"), F.lit(float(total.get["btypes"]))
+    p = levels[2].select(*keys[2], p_level(lambda w: w * nback / btypes))
     for k in range(3, n + 1):
-        p = (
-            levels[k].join(p, keys[k - 1])
-            .join(hint(stats(k), f"m{k - 1}"), f"m{k - 1}")
-            .select(*keys[k], p_level(lambda w: w * F.col("p")))
-        )
+        p = levels[k].join(p, keys[k - 1]).select(*keys[k], p_level(lambda w: w * F.col("p")))
     ln2 = 0.6931471805599453
     return occ.join(p, top).groupBy("doc_id").agg(
         count.cast("long").alias("gram_count"),

@@ -1161,40 +1161,53 @@ def test_contamination_max_gram_df_cuts_hot_grams(spark):
             assert {d for d, f in got.items() if f > 0} == {100}, got
 
 
-# Build-time jobs a warm builder call may start: only its own
-# localCheckpoint chain. The KN builders checkpoint their gram rows, type
-# counts and continuation levels (the exact ones also measure the
-# broadcast gate when plan statistics cannot prove it); the ccnet
-# bucketings add the exact rank form's eager passes to their scorer's.
+# (build, execute) jobs of a warm builder call and its noop write. The
+# build side is only the builder's localCheckpoint chain: the KN
+# builders checkpoint their gram rows and every level, each level with
+# its own normalizer columns, and the ccnet bucketings add the exact
+# rank form's eager passes to their scorer's. So the KN execute side is
+# the scoring joins and the per-doc fold, with no stats re-aggregated.
 # dedup_exact and knn_join_ivf build lazily once the table schemas and
 # the trained codebook are known.
-CURATION_BUILD_JOBS = {
-    "kn_bigram_surprisal": 4,
-    "kn_trigram_surprisal": 6,
-    "kn5_surprisal_hashed": 10,
-    "ccnet_perplexity_buckets_kn3": 23,
-    "ccnet_perplexity_buckets_kn5": 33,
-    "dedup_exact": 0,
-    "knn_join_ivf": 0,
+CURATION_JOBS = {
+    "kn_bigram_surprisal": (6, 3),
+    "kn_trigram_surprisal": (8, 4),
+    "kn5_surprisal_hashed": (12, 6),
+    "ccnet_perplexity_buckets_kn3": (17, 1),
+    "ccnet_perplexity_buckets_kn5": (23, 1),
+    "dedup_exact": (0, 2),
+    "knn_join_ivf": (0, 4),
 }
 
 
 @pytest.mark.skipif(not os.path.isdir(SF0001_DIR), reason=f"testdata dir {SF0001_DIR} not present")
 def test_curation_build_job_budget(spark):
-    """Tripwire on the curation builders' eager work, the counterpart of
+    """Tripwire on the curation builders' jobs, the counterpart of
     test_ingest_job_budget: after one warm call, a second builder call
-    starts no job beyond its checkpoints. A new eager count/collect, or
-    a schema inference in sources.load, breaks the budget loudly."""
+    starts no job beyond its checkpoints, and executing the result
+    starts no job beyond its own shuffles. A new eager count/collect, a
+    schema inference in sources.load, or a normalizer recomputed at
+    execute time breaks the budget loudly."""
     from metrocloud_data_pipeline_spark.queries import get_queries
 
     assert not spark.streams.active, "another streaming query would add jobs to the count"
     jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
     qs = get_queries()
-    for key in CURATION_BUILD_JOBS:
-        qs[key](spark, SF0001_DIR)
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    for key in CURATION_JOBS:
+        noop(qs[key](spark, SF0001_DIR))
     spent = {}
-    for key in CURATION_BUILD_JOBS:
+    for key in CURATION_JOBS:
         j0 = jobs()
-        qs[key](spark, SF0001_DIR)
-        spent[key] = jobs() - j0
-    assert all(spent[k] <= n for k, n in CURATION_BUILD_JOBS.items()), spent
+        df = qs[key](spark, SF0001_DIR)
+        j1 = jobs()
+        noop(df)
+        spent[key] = (j1 - j0, jobs() - j1)
+    over = {
+        k: (b, e) for k, (b, e) in spent.items()
+        if b > CURATION_JOBS[k][0] or e > CURATION_JOBS[k][1]
+    }
+    assert not over, f"over budget: {over} (spent {spent})"

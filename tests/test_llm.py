@@ -1901,6 +1901,16 @@ def test_curation_ops_on_empty_and_tiny_inputs(spark):
     assert text.unigram_surprisal(empty).count() == 0
     assert curation.temperature_mix(empty).count() == 0
     assert curation.quality_quantile_filter(empty).count() == 0
+    # the KN builders on an empty corpus and on one whose docs are all
+    # shorter than n: zero rows, and the order-2 checkpoint's btypes
+    # Observation still reports (an empty level, not a hang or a raise)
+    short = spark.createDataFrame(
+        [(0, "a", "en", "s0", 1), (1, "", "en", "s0", 0), (2, "  ", "en", "s0", 2)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    for kn in (text.kn_bigram_surprisal, text.kn_trigram_surprisal, text.kn5_surprisal_hashed):
+        assert kn(empty).collect() == [], kn.__name__
+        assert kn(short).collect() == [], kn.__name__
 
     two = spark.createDataFrame(
         [(0, [1.0, 0.0], 0), (1, [0.0, 1.0], 0)],
@@ -3212,38 +3222,6 @@ def test_kn_discount_penalises_single_template_pairs(spark):
     )
     out = {r["doc_id"]: r for r in text.kn_bigram_surprisal(docs).collect()}
     assert out[0]["kn_bits_per_bigram"] > 0.0  # MLE would give exactly 0 bits
-
-
-def test_kn_word_stats_broadcast_gate(spark, monkeypatch):
-    """r16: the word-stats broadcast hint is gated on a known-small key
-    count (VERDICT r15 #5). The gate must (a) prove tiny frames small
-    for free, (b) measure when the estimate cannot prove it, and (c)
-    leave the query output IDENTICAL when the hint is withheld (plan
-    strategy only)."""
-    rows = [(i, f"w{i % 7} w{(i + 1) % 7} w{(i + 2) % 7}", "en", "s0", 8)
-            for i in range(40)]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    frame = docs.select("doc_id", F.col("text").alias("prev")).localCheckpoint()
-    # baseline computed BEFORE the bound is shrunk: broadcast hint on
-    baseline = {
-        r["doc_id"]: r for r in text.kn_bigram_surprisal(docs).collect()
-    }
-    # (a) free tier: tiny estimate proves smallness, no job needed
-    assert text._word_stats_fit_broadcast(frame, "prev") is True
-    # (b) measured tier: a bound of 50 defeats the estimate proof
-    # (est*256 >> 50) so the HLL pass must run; the frame's 7 distinct
-    # prev values measure under the bound
-    monkeypatch.setattr(text, "_WORD_STATS_BROADCAST_MAX", 50)
-    assert text._word_stats_fit_broadcast(frame, "prev") is True
-    # ...and over the bound the hint is withheld
-    monkeypatch.setattr(text, "_WORD_STATS_BROADCAST_MAX", 1)
-    assert text._word_stats_fit_broadcast(frame, "prev") is False
-    # (c) withheld hint (bound still 1) changes the join strategy,
-    # never the values
-    gated = {r["doc_id"]: r for r in text.kn_bigram_surprisal(docs).collect()}
-    assert gated == baseline
 
 
 def test_kn_trigram_surprisal_hand_computed(spark):

@@ -54,13 +54,13 @@ SENTINEL_BOUNDS: dict[str, tuple[int, int, int]] = {
     # post-join cosine; a 4th is the corpus assignment run again below
     # the round-robin (a nullable list_id, see knn_join_ivf)
     "knn_join_ivf": (2, 3, 0),
-    # downstream of the checkpointed type frame: the stats aggregates,
-    # the 1-row type total and the per-doc fold
-    "kn_bigram_surprisal": (4, 0, 0),
-    "kn_trigram_surprisal": (5, 0, 0),
-    # r12: full five-level C&G recursion — +2 continuation frames
-    # (pairs3/pairs2 + their normalizers), all joins stay broadcast
-    "kn5_surprisal_hashed": (7, 0, 0),
+    # downstream of the checkpointed level frames, which carry their own
+    # normalizers (csum/nfwd per history, nback, an observed btypes): the
+    # one exchange is the per-doc fold; the level joins are broadcast
+    # at this scale, one per order above 2 plus the gram-row join
+    "kn_bigram_surprisal": (1, 0, 0),
+    "kn_trigram_surprisal": (1, 0, 0),
+    "kn5_surprisal_hashed": (1, 0, 0),
     # r15: +1 exchange = fan_out_scan's scale-adaptive round-robin ahead
     # of the Expand rollup (the x5 replicas + partial agg otherwise run
     # at the single-split scan's width of one task; 3.45 -> 2.41 s)
