@@ -22,10 +22,14 @@ maps to date-partitioned parquet tables plus scheduled jobs:
 
 from __future__ import annotations
 
+import functools
+import json
+import operator
 import os
 from contextlib import contextmanager
 from datetime import date, datetime, timedelta
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -167,21 +171,26 @@ def _fs_exists(path: str) -> bool:
     return fs.exists(jpath)
 
 
-def _fs_has_data_files(path: str) -> bool:
-    """True iff the directory holds at least one non-hidden data file
-    (recursing one level is unnecessary here: partition dirs and append
-    stores keep their parquet files flat). An EXISTING but file-less
-    directory is a real crash/ops remnant — an interrupted delete, a
-    bare mkdir — and reading it as parquet dies on schema inference, so
-    the maintenance ops probe first and treat it as data-less."""
+def _fs_data_file(path: str):
+    """The first non-hidden data file directly under the directory (a
+    Hadoop FileStatus), or None when the directory is missing or holds
+    none (recursing one level is unnecessary here: partition dirs and
+    append stores keep their parquet files flat). An EXISTING but
+    file-less directory is a real crash/ops remnant — an interrupted
+    delete, a bare mkdir — and reading it as parquet dies on schema
+    inference, so the maintenance ops probe first and treat it as
+    data-less."""
     fs, jpath, _ = _jfs(path)
     if not fs.exists(jpath):
-        return False
+        return None
     for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isFile() and not name.startswith(("_", ".")):
-            return True
-    return False
+        if st.isFile() and not st.getPath().getName().startswith(("_", ".")):
+            return st
+    return None
+
+
+def _fs_has_data_files(path: str) -> bool:
+    return _fs_data_file(path) is not None
 
 
 _OLD_SUFFIX = "._old"
@@ -300,6 +309,44 @@ def _partition_dir(path: str, day: date) -> str:
     return os.path.join(path, f"{PARTITION_COL}={day.isoformat()}")
 
 
+_SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_days(spark: SparkSession, path: str, days: list[date]) -> DataFrame | None:
+    """The named date partitions of a table, or None when none of them
+    holds a data file (a dropped or emptied day has no rows to read,
+    and a read of zero files cannot infer a schema).
+
+    Each day's directory is listed once. The schema comes from the Spark
+    row schema in one kept file's footer, read on the driver, so the
+    scan starts no schema-inference job. Spark's own inference reads
+    the same footer key when mergeSchema is off, and the reader makes
+    every field nullable either way, so the schema is the same. The
+    trade: inference takes one arbitrary file of the whole store, this
+    takes one file of the days being read. A footer without the key (a
+    non-Spark writer) falls back to Spark's inference."""
+    fs, _, jvm = _jfs(path)
+    dirs, first = [], None
+    for day in dict.fromkeys(days):
+        data_file = _fs_data_file(_partition_dir(path, day))
+        if data_file is not None:
+            dirs.append(_partition_dir(path, day))
+            first = data_file if first is None else first
+    if not dirs:
+        return None
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, fs.getConf())
+    )
+    try:
+        row_meta = reader.getFooter().getFileMetaData().getKeyValueMetaData().get(_SPARK_ROW_METADATA)
+    finally:
+        reader.close()
+    schema = None if row_meta is None else StructType.fromJson(json.loads(row_meta))
+    return (spark.read if schema is None else spark.read.schema(schema)).option(
+        "basePath", path
+    ).parquet(*dirs)
+
+
 def archive_old_data(
     spark: SparkSession,
     main_path: str,
@@ -401,6 +448,42 @@ def compact_partitions(
     return compacted
 
 
+_NULL_NATURAL_KEY = "NULL natural key among"
+
+
+def _any_null(keys: tuple[str, ...]):
+    return functools.reduce(operator.or_, (F.col(k).isNull() for k in keys))
+
+
+def _dedup_on_natural_key(df: DataFrame, dedup_keys: tuple[str, ...]) -> DataFrame:
+    """The ON CONFLICT stand-in of both natural-key sinks
+    (idempotent_append here, sources.jdbc_io.write_jdbc): dropDuplicates
+    on the key, refusing a row with a NULL key component fail-loud.
+    dropDuplicates treats NULLs as EQUAL, so such rows would silently
+    collapse to one arbitrary survivor, and a NULL never matches an
+    anti-join, so a re-delivered batch would re-append them; the
+    reference's NOT NULL primary key rejects them outright. The
+    raise_error rides the first key column ahead of the dedup, so the
+    check runs in the write's first stage (the write_partitioned
+    pattern — no extra scan), and valid rows pass through unchanged."""
+    k0 = dedup_keys[0]
+    guarded = (
+        F.when(
+            _any_null(dedup_keys),
+            F.raise_error(
+                F.lit(
+                    f"{_NULL_NATURAL_KEY} {tuple(dedup_keys)} — such rows have "
+                    "no ON CONFLICT identity and dropDuplicates would silently "
+                    "collapse them; validate or reject upstream"
+                )
+            ),
+        )
+        .otherwise(F.col(k0))
+        .cast(df.schema[k0].dataType)
+    )
+    return df.withColumn(k0, guarded).dropDuplicates(list(dedup_keys))
+
+
 def idempotent_append(
     spark: SparkSession,
     batch: DataFrame,
@@ -418,49 +501,48 @@ def idempotent_append(
     materialization of the micro-batch — and the batch is never scanned
     to discover target partitions. Without it, the batch is
     localCheckpoint-ed and ONE aggregate over it yields both the day set
-    and the null-key count. (A collect-free formulation was measured and
-    rejected: Spark's dynamic partition pruning never fires for LEFT
-    ANTI — canPruneRight covers Inner/LeftSemi only — so the 'pure join'
-    shape silently reads the whole store; the bounded day list,
-    calendar-sized by construction, is the correct trade.)
+    and the null-key count (a batch whose every timestamp is NULL has
+    no day and would otherwise return 0 unrefused). (A collect-free
+    formulation was measured and rejected: Spark's dynamic partition
+    pruning never fires for LEFT ANTI — canPruneRight covers
+    Inner/LeftSemi only — so the 'pure join' shape silently reads the
+    whole store; the bounded day list, calendar-sized by construction,
+    is the correct trade.) `days=[]` returns 0 and writes nothing: the
+    caller says the batch touches no partition.
 
     The dedup and the anti-join then run exactly once, inside the
-    write: the overlapping partitions are read with the batch's own
-    natural-key schema (no schema-inference job), and the inserted
-    count is an Observation on the write itself, not a count() that
-    would re-run the anti-join. No rows, no write: an empty batch
-    returns 0 before anything touches `path`."""
-    # fail-loud: a NULL natural-key component never matches the
-    # anti-join below, so a re-delivered batch would re-append the row
-    # EVERY retry — effectively-once silently broken for exactly the
-    # rows with no identity (the r11 null-key sweep: scd2_merge /
-    # curate_batch's class). Matches the reference's NOT NULL primary
-    # key, which would reject the row outright. The wired ingest path
-    # validates these columns upstream and hands in a materialized
-    # batch, so on the hot path this check reads checkpointed rows.
-    null_key = F.lit(False)
-    for k in NATURAL_KEY:
-        null_key = null_key | F.col(k).isNull()
+    write: the dedup is _dedup_on_natural_key, whose NULL-key refusal
+    rides the write's first stage (no separate probe job), the
+    overlapping partitions are read with the batch's own natural-key
+    schema (no schema-inference job), and the inserted count is an
+    Observation on the write itself, not a count() that would re-run
+    the anti-join. No rows, no write: an empty batch returns 0 before
+    anything touches `path`.
+
+    A NULL natural-key component is refused with ValueError, before
+    any row lands: it never matches the anti-join, so a re-delivered
+    batch would re-append the row EVERY retry — effectively-once
+    silently broken for exactly the rows with no identity (the r11
+    null-key sweep: scd2_merge / curate_batch's class)."""
+    refusal = (
+        "idempotent_append: batch contains NULL natural-key "
+        f"components {NATURAL_KEY} — validate or reject upstream "
+        "(null keys cannot be deduplicated and would re-append "
+        "on every redelivery)"
+    )
     if days is None:
         # one computation of the batch, shared by discovery and the write
         batch = batch.localCheckpoint(eager=True)
         facts = batch.agg(
-            F.count_if(null_key).alias("null_keys"),
+            F.count_if(_any_null(NATURAL_KEY)).alias("null_keys"),
             F.collect_set(F.to_date(F.col(ts_col))).alias("days"),
         ).first()
-        has_null_key, days = facts["null_keys"] > 0, facts["days"]
-    else:
-        has_null_key = bool(batch.where(null_key).limit(1).collect())
-    if has_null_key:
-        raise ValueError(
-            "idempotent_append: batch contains NULL natural-key "
-            f"components {NATURAL_KEY} — validate or reject upstream "
-            "(null keys cannot be deduplicated and would re-append "
-            "on every redelivery)"
-        )
+        if facts["null_keys"]:
+            raise ValueError(refusal)
+        days = facts["days"]
     if not days:
         return 0
-    deduped = batch.dropDuplicates(list(NATURAL_KEY))
+    deduped = _dedup_on_natural_key(batch, NATURAL_KEY)
     existing_days = set(list_partitions(path))
     overlap = [d for d in days if d in existing_days]
     if overlap:
@@ -470,7 +552,12 @@ def idempotent_append(
         ).select(*NATURAL_KEY)
         deduped = deduped.join(existing, on=list(NATURAL_KEY), how="left_anti")
     inserted = Observation()
-    write_partitioned(deduped.observe(inserted, F.count(F.lit(1)).alias("rows")), path, mode="append", ts_col=ts_col)
+    try:
+        write_partitioned(deduped.observe(inserted, F.count(F.lit(1)).alias("rows")), path, mode="append", ts_col=ts_col)
+    except SparkRuntimeException as e:
+        if _NULL_NATURAL_KEY not in str(e):
+            raise
+        raise ValueError(refusal) from None
     return inserted.get["rows"]
 
 
@@ -505,29 +592,25 @@ def refresh_bucket_aggregate(
     archival dropped its raw partition) has its aggregate partition
     DELETED: dynamic overwrite only rewrites partitions present in the
     new data, so without the explicit clear the old aggregate would
-    serve deleted rows forever. Which days the new data covers is an
-    Observation on the overwrite itself, so the aggregate is computed
-    once, by the write, with no checkpoint or day-set collect before it.
+    serve deleted rows forever.
+
+    Job shape: the targeted days are read under the Spark schema in one
+    of their files' footers (see _read_days), so no schema-inference job
+    runs. Which days the new data covers is an Observation on the
+    overwrite itself, so the aggregate is computed once, by the write,
+    with no checkpoint or day-set collect before it: two jobs under
+    adaptive execution (the aggregate's shuffle stage, then the write).
     Returns partitions refreshed."""
     from .analytics import bucket_aggregates
 
     target = days if days is not None else list_partitions(readings_path)
     if not target:
         return 0
-    existing = set(list_partitions(readings_path))
-    # a targeted day whose directory exists but holds no data files is
-    # as empty as a dropped one: treat it as absent so its aggregate is
-    # cleared (and so an all-empty raw store never reaches the parquet
-    # reader, which cannot infer a schema from zero files)
-    avail = [
-        d for d in target
-        if d in existing and _fs_has_data_files(_partition_dir(readings_path, d))
-    ]
+    # a targeted day whose directory is missing or holds no data files
+    # reads as absent, so its aggregate is cleared below
+    src = _read_days(spark, readings_path, target)
     present = set()
-    if avail:
-        src = read_table(spark, readings_path).where(
-            F.col(PARTITION_COL).isin([d.isoformat() for d in avail])
-        )
+    if src is not None:
         src = src.withColumnRenamed("timestamp", "ts") if "ts" not in src.columns else src
         agg = bucket_aggregates(src, bucket=bucket).withColumn(
             PARTITION_COL, F.to_date(F.col("bucket"))
@@ -579,51 +662,44 @@ def refresh_rollup_cascade(
     overwrite writes nothing for a day absent from the new partials,
     so without the explicit delete the hourly and daily stores would
     keep serving the pre-deletion aggregates and the value-identity
-    invariant would silently break. Returns partitions refreshed."""
+    invariant would silently break.
+
+    Job shape: both levels read their days under the Spark schema in
+    one of their files' footers (see _read_days), so neither read runs
+    a schema-inference job. Which days the hourly level covers is an
+    Observation on its overwrite, as in refresh_bucket_aggregate, so
+    the partials are computed once, by their write, with no checkpoint
+    or day-set collect: four jobs under adaptive execution (each
+    level's shuffle stage and write). Returns partitions refreshed."""
     from .analytics import rollup_finalize, rollup_partials
 
     target = days if days is not None else list_partitions(readings_path)
     if not target:
         return 0
-    # intersect with what actually exists: a targeted day whose raw
-    # partition was dropped contributes nothing (and a raw store with
-    # NO partitions left cannot even be read — schema inference has no
-    # footers to look at)
-    existing = set(list_partitions(readings_path))
-    # same data-less-directory contract as refresh_bucket_aggregate
-    avail = [
-        d for d in target
-        if d in existing and _fs_has_data_files(_partition_dir(readings_path, d))
-    ]
-    day_strs = [d.isoformat() for d in avail]
-    if avail:
-        src = read_table(spark, readings_path).where(
-            F.col(PARTITION_COL).isin(day_strs)
-        )
-        src = src.withColumnRenamed("timestamp", "ts") if "ts" not in src.columns else src
-        hourly = rollup_partials(src, fine_bucket=fine_bucket).withColumn(
-            PARTITION_COL, F.to_date(F.col("bucket"))
-        ).localCheckpoint(eager=True)  # hours x types rows; day-set + write share it
-        present = {r[0] for r in hourly.select(PARTITION_COL).distinct().collect()}
-    else:
-        hourly = None
-        present = set()
+    # a targeted day whose raw partition is missing or holds no data
+    # files contributes nothing, so both levels clear it below
+    src = _read_days(spark, readings_path, target)
+    present = set()
     with dynamic_partition_overwrite(spark):
-        if hourly is not None:
-            hourly.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(hourly_path)
+        if src is not None:
+            src = src.withColumnRenamed("timestamp", "ts") if "ts" not in src.columns else src
+            hourly = rollup_partials(src, fine_bucket=fine_bucket).withColumn(
+                PARTITION_COL, F.to_date(F.col("bucket"))
+            )
+            written = Observation()
+            (
+                hourly.observe(written, F.collect_set(PARTITION_COL).alias("days"))
+                .write.mode("overwrite").partitionBy(PARTITION_COL).parquet(hourly_path)
+            )
+            present = set(written.get["days"])
         for day in target:
             if day not in present:
                 _fs_delete(_partition_dir(hourly_path, day))
-        if present:
-            # daily re-finalize reads ONLY the dirty days' hourly
-            # partitions. Guarded on `present`: when every targeted day
-            # emptied out (retention cleared the last data), the hourly
-            # store may hold no partitions at all and a parquet read of
-            # the bare directory cannot infer a schema — and there is
-            # nothing to finalize anyway, only daily partitions to clear
-            parts = read_table(spark, hourly_path).where(
-                F.col(PARTITION_COL).isin(day_strs)
-            )
+        # the daily re-finalize reads ONLY the dirty days' hourly
+        # partitions; when every targeted day emptied out there is
+        # nothing to finalize, only daily partitions to clear
+        parts = _read_days(spark, hourly_path, sorted(present))
+        if parts is not None:
             daily = rollup_finalize(parts.drop(PARTITION_COL), "1 day").withColumn(
                 PARTITION_COL, F.to_date(F.col("bucket"))
             )

@@ -16,42 +16,11 @@ same gating pattern as avro_io).
 
 from __future__ import annotations
 
-import functools
-import operator
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..operators.maintenance import _dedup_on_natural_key
 
 POSTGRES_DRIVER = "org.postgresql.Driver"
-
-
-def _dedup_on_natural_key(df: DataFrame, dedup_keys: tuple[str, ...]) -> DataFrame:
-    """dropDuplicates treats NULLs as EQUAL: rows with a NULL natural
-    key would silently collapse to one arbitrary survivor BEFORE the
-    write — the jdbc twin of the idempotent_append null-key bug (r11),
-    found by the same sweep. A NULL natural key has no ON CONFLICT
-    identity, so it is refused fail-loud; the raise_error rides the
-    first key column inside the same write pass (the write_partitioned
-    pattern — no extra scan), and valid rows pass through unchanged."""
-    null_any = functools.reduce(
-        operator.or_, (F.col(k).isNull() for k in dedup_keys)
-    )
-    k0 = dedup_keys[0]
-    guarded = (
-        F.when(
-            null_any,
-            F.raise_error(
-                F.lit(
-                    f"write_jdbc: NULL natural key among {tuple(dedup_keys)} — "
-                    "such rows have no ON CONFLICT identity and dropDuplicates "
-                    "would silently collapse them; validate or reject upstream"
-                )
-            ),
-        )
-        .otherwise(F.col(k0))
-        .cast(df.schema[k0].dataType)
-    )
-    return df.withColumn(k0, guarded).dropDuplicates(list(dedup_keys))
 
 
 def _require_jdbc_driver(spark: SparkSession, driver: str) -> None:
@@ -79,9 +48,11 @@ def write_jdbc(
 
     batch_size mirrors the reference's execute_values page_size=2000.
     Spark's JDBC writer has no ON CONFLICT clause, so idempotence is
-    achieved the engine's way: pass dedup_keys to dropDuplicates the
-    batch on its natural key before writing (the anti-join half of
-    OP-D4 lives in maintenance.idempotent_append for parquet; against a
+    achieved the engine's way: pass dedup_keys to dedup the batch on
+    its natural key before writing, through the guarded dedup it shares
+    with maintenance.idempotent_append, which refuses a NULL key
+    component (the anti-join half of OP-D4 lives in
+    maintenance.idempotent_append for parquet; against a
     live database the table's own PRIMARY KEY constraint is the final
     arbiter). num_partitions caps writer concurrency — at cluster scale
     an unthrottled 1000-task write is a connection storm on the

@@ -103,8 +103,14 @@ def run_ingest_stream(
     carries the batch facts: the four counters and the event days of
     the valid rows (after the OP-T11 clamp). Every sink then reads the
     checkpoint; the day set goes to idempotent_append(days=...), so
-    nothing is recomputed to learn a count or a target partition. A
-    batch with no valid rows skips the append: no rows, no write."""
+    nothing is recomputed to learn a count or a target partition, and
+    the append's NULL-key refusal rides its own write instead of a
+    probe job. That is 7 Spark jobs per batch once its day is in the
+    store (adaptive execution on, both side sinks set): two to
+    materialize the checkpoint, three for the append (its dedup stage,
+    the key scan of the overlapping partition, the write) and one write
+    per side sink. A batch with no valid rows
+    skips the append: no rows, no write."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession

@@ -636,34 +636,125 @@ def test_refresh_rollup_cascade_clears_everything_when_raw_is_empty(spark, tmp_p
     assert not os.path.exists(os.path.join(daily, "reading_date=2024-01-01"))
 
 
+_AGG_ROWS = [
+    ("d1", "t", datetime(2024, 1, 1, 0, 10), 1.0, False),
+    ("d1", "t", datetime(2024, 1, 1, 0, 40), 3.0, True),
+    ("d2", "u", datetime(2024, 1, 1, 13, 5), 7.0, False),
+    ("d2", "u", datetime(2024, 1, 2, 5, 0), 2.0, False),
+]
+
+
+def _assert_agg_matches(spark, agg_path, rows, ts_name="timestamp"):
+    from metrocloud_data_pipeline_spark.operators.analytics import bucket_aggregates
+
+    direct = bucket_aggregates(
+        spark.createDataFrame(
+            rows,
+            f"device_id string, device_type string, {ts_name} timestamp, "
+            "value double, is_anomaly boolean",
+        ).withColumnRenamed(ts_name, "ts")
+    )
+    got = M.read_table(spark, agg_path).select(*direct.columns).collect()
+    assert sorted(got) == sorted(direct.collect())
+
+
+def test_refresh_falls_back_to_inference_without_spark_footer_schema(spark, tmp_path):
+    """A partition file from a non-Spark writer has no Spark row schema
+    in its footer; the refresh then lets Spark infer the schema and
+    still aggregates every row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    raw, agg = tmp_path / "raw", str(tmp_path / "agg")
+    day = raw / "reading_date=2024-01-01"
+    day.mkdir(parents=True)
+    rows = [r for r in _AGG_ROWS if r[2].day == 1]
+    cols = list(zip(*rows))
+    pq.write_table(
+        pa.table({
+            "device_id": list(cols[0]),
+            "device_type": list(cols[1]),
+            "timestamp": pa.array(cols[2], pa.timestamp("us", tz="UTC")),
+            "value": list(cols[3]),
+            "is_anomaly": list(cols[4]),
+        }),
+        str(day / "part-00000.parquet"),
+    )
+    footer = pq.read_metadata(str(day / "part-00000.parquet")).metadata
+    assert M._SPARK_ROW_METADATA.encode() not in footer
+    assert M.refresh_bucket_aggregate(spark, str(raw), agg) == 1
+    _assert_agg_matches(spark, agg, rows)
+
+
+def test_refresh_reads_a_store_written_with_ts_col(spark, tmp_path):
+    """A store written with ts_col="ts" carries its event time as `ts`
+    and refreshes to the direct aggregate of its rows."""
+    raw, agg = str(tmp_path / "raw"), str(tmp_path / "agg")
+    df = spark.createDataFrame(
+        _AGG_ROWS, "device_id string, device_type string, ts timestamp, value double, is_anomaly boolean"
+    )
+    M.write_partitioned(df, raw, ts_col="ts")
+    assert M.refresh_bucket_aggregate(spark, raw, agg) == 2
+    _assert_agg_matches(spark, agg, _AGG_ROWS, ts_name="ts")
+    # a day named twice is read once
+    day1 = _AGG_ROWS[0][2].date()
+    assert M.refresh_bucket_aggregate(spark, raw, agg, days=[day1, day1]) == 2
+    _assert_agg_matches(spark, agg, _AGG_ROWS, ts_name="ts")
+
+
+def test_refresh_rollup_cascade_job_budget(spark, tmp_path):
+    """Tripwire on the cascade's job shape: each level reads its days
+    under one footer's schema (no inference job) and observes its own
+    overwrite (no checkpoint, no day-set collect), which leaves one
+    shuffle stage and one write per level. A new eager job on this path
+    breaks the budget loudly."""
+    assert not spark.streams.active, "another streaming query would add jobs to the count"
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    raw, hourly, daily = (str(tmp_path / d) for d in ("raw", "hourly", "daily"))
+    rows = [
+        ("d1", "t", datetime(2024, 1, d, h, 10), float(h), False)
+        for d in (1, 2, 3)
+        for h in (0, 5, 13)
+    ]
+    M.write_partitioned(
+        spark.createDataFrame(
+            rows, "device_id string, device_type string, timestamp timestamp, value double, is_anomaly boolean"
+        ),
+        raw,
+    )
+    j0 = jobs()
+    assert M.refresh_rollup_cascade(spark, raw, hourly, daily) == 3
+    cascade_jobs = jobs() - j0
+    assert len(M.list_partitions(daily)) == 3
+    assert cascade_jobs <= 4, cascade_jobs
+
+
 def test_idempotent_append_refuses_null_natural_keys(spark, tmp_path):
     """A NULL natural-key component never matches the dedup anti-join,
     so a re-delivered batch would re-append the row on EVERY retry —
     effectively-once silently broken for exactly the rows with no
     identity. Fail-loud instead (the r11 null-key sweep; the wired
-    ingest path validates these columns upstream)."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+    ingest path validates these columns upstream). With a caller-
+    supplied day set the refusal rides the write's first stage, ahead
+    of write_partitioned's own NULL-timestamp guard; on both paths it
+    lands no row and the aborted write leaves no debris."""
+    import os
 
-    from metrocloud_data_pipeline_spark.operators.maintenance import idempotent_append
+    path = str(tmp_path / "t")
+    schema = "device_id string, timestamp timestamp, device_type string, value double"
+    ts = datetime(2025, 1, 1, 10, 0, 0)
+    good = spark.createDataFrame([("d1", ts, "temperature_sensor", 1.0)], schema)
+    assert M.idempotent_append(spark, good, path) == 1
 
-    good = spark.createDataFrame(
-        [("d1", "2025-01-01 10:00:00", "temperature_sensor", 1.0)],
-        "device_id string, timestamp string, device_type string, value double",
-    ).select("device_id", F.col("timestamp").cast("timestamp").alias("timestamp"),
-             "device_type", "value")
-    assert idempotent_append(spark, good, str(tmp_path / "t")) == 1
-
-    bad = spark.createDataFrame(
-        [(None, "2025-01-01 10:00:00", "temperature_sensor", 2.0)],
-        "device_id string, timestamp string, device_type string, value double",
-    ).select("device_id", F.col("timestamp").cast("timestamp").alias("timestamp"),
-             "device_type", "value")
-    with _pytest.raises(ValueError, match="NULL natural-key"):
-        idempotent_append(spark, bad, str(tmp_path / "t"))
-    # the caller-supplied day set skips discovery, not the refusal
-    with _pytest.raises(ValueError, match="NULL natural-key"):
-        idempotent_append(spark, bad, str(tmp_path / "t"), days=[datetime(2025, 1, 1).date()])
+    null_device = spark.createDataFrame([(None, ts, "temperature_sensor", 2.0)], schema)
+    null_ts = spark.createDataFrame([("d2", None, "temperature_sensor", 3.0)], schema)
+    for bad in (null_device, null_ts):
+        # the caller-supplied day set skips discovery, not the refusal
+        for days in (None, [ts.date()]):
+            with pytest.raises(ValueError, match="NULL natural-key"):
+                M.idempotent_append(spark, bad, path, days=days)
+            assert M.read_table(spark, path).count() == 1
+            assert not os.path.exists(os.path.join(path, "_temporary"))
 
 
 def test_idempotent_append_empty_batch_writes_nothing(spark, tmp_path):
