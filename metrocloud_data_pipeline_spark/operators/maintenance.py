@@ -327,7 +327,7 @@ def _read_days(spark: SparkSession, path: str, days: list[date]) -> DataFrame | 
     non-Spark writer) falls back to Spark's inference."""
     fs, _, jvm = _jfs(path)
     dirs, first = [], None
-    for day in dict.fromkeys(days):
+    for day in days:
         data_file = _fs_data_file(_partition_dir(path, day))
         if data_file is not None:
             dirs.append(_partition_dir(path, day))

@@ -696,7 +696,7 @@ def test_refresh_reads_a_store_written_with_ts_col(spark, tmp_path):
     M.write_partitioned(df, raw, ts_col="ts")
     assert M.refresh_bucket_aggregate(spark, raw, agg) == 2
     _assert_agg_matches(spark, agg, _AGG_ROWS, ts_name="ts")
-    # a day named twice is read once
+    # a day named twice is read once (Spark's file index drops the repeat)
     day1 = _AGG_ROWS[0][2].date()
     assert M.refresh_bucket_aggregate(spark, raw, agg, days=[day1, day1]) == 2
     _assert_agg_matches(spark, agg, _AGG_ROWS, ts_name="ts")
