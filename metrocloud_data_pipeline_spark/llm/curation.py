@@ -1726,12 +1726,10 @@ def split_leakage_report(
     column pruned before the exchange. Near-dup leakage (paraphrases
     across splits) composes the same split column with
     dedup.cross_corpus_jaccard on the per-split slices."""
-    from ..llm.dedup import _norm_text
+    from .dedup import text_digest
 
     assigned = assign_splits(docs, fractions=fractions, salt=salt)
-    keyed = assigned.select(
-        F.md5(_norm_text(F.col(text_col))).alias("text_hash"), "split"
-    )
+    keyed = assigned.select(text_digest(F.col(text_col)).alias("text_hash"), "split")
     return (
         keyed.groupBy("text_hash")
         .agg(
@@ -2124,13 +2122,13 @@ def corpus_filter_funnel(docs: DataFrame) -> DataFrame:
     has exactly one member per surviving digest group, so counting
     keepers IS counting distinct survivor digests, no keeper join
     needed. At 100 TB: one scan, one distinct-aggregate exchange."""
-    from .dedup import _norm_text
+    from .dedup import text_digest
 
     flags = c4_line_filter(
         gopher_quality_panel(docs, passthrough=True), passthrough=True
     ).select(
         "doc_id",
-        F.md5(_norm_text(F.col("text"))).alias("_digest"),
+        text_digest(F.col("text")).alias("_digest"),
         "gopher_pass",
         "c4_keep",
     )
@@ -2718,14 +2716,14 @@ def source_filter_funnel(docs: DataFrame) -> DataFrame:
     sources-sized broadcast join of two aggregates. At 100 TB: one
     scan, one source-keyed exchange, one digest-keyed exchange over
     survivors only, one broadcast of a #sources-row frame."""
-    from .dedup import _norm_text
+    from .dedup import text_digest
 
     flags = c4_line_filter(
         gopher_quality_panel(docs, passthrough=True), passthrough=True
     ).select(
         "doc_id",
         "source",
-        F.md5(_norm_text(F.col("text"))).alias("_digest"),
+        text_digest(F.col("text")).alias("_digest"),
         "gopher_pass",
         "c4_keep",
     )

@@ -14,6 +14,21 @@ Scale design (the whole point of these at 100 TB):
   self-join; quadratic in the worst case, so use LSH candidates first at
   scale (`token_jaccard_pairs_lsh` runs its exact Jaccard verify step on
   the candidate pairs only).
+
+Each dedup rule is defined once, here, and every caller in the package
+(curation's leakage and funnel digests, the streaming corpus ingest)
+uses these definitions:
+- text_digest: md5 of normalized text, the exact-duplicate identity;
+- token_set: the distinct normalized unigrams every exact Jaccard
+  verify and SimHash read;
+- NUM_PERM / BANDS / ROWS_PER_BAND and unigram_bands: the one band
+  spec for unigram sets, shared by the in-memory screens and the
+  streaming band index, so a stored band row means what a fresh
+  banding would give;
+- _drop_hot_buckets: the hot-bucket cap (and its opt-in refusal);
+- _set_jaccard / _verify_jaccard: the exact set-Jaccard check.
+token_jaccard_pairs keeps its own count-based formula: it is the
+all-pairs reference the LSH and prefix paths are tested against.
 """
 
 from __future__ import annotations
@@ -26,9 +41,64 @@ from ..functions.numeric import round6
 
 _WS = r"\s+"
 
+# The band spec of every unigram-set screen. 128 perms in 32 bands of 4
+# miss a pair of true Jaccard J in every band with probability
+# (1 - J^4)^32, ~4e-24 at J = 0.95.
+NUM_PERM = 128
+BANDS = 32
+ROWS_PER_BAND = NUM_PERM // BANDS
+
 
 def _norm_text(c: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(c)), _WS, " ")
+
+
+def text_digest(c: Column) -> Column:
+    """md5 of normalized text: the exact-duplicate identity."""
+    return F.md5(_norm_text(c))
+
+
+def token_set(c: Column) -> Column:
+    """Distinct normalized unigram tokens of a text column."""
+    return F.array_distinct(F.split(_norm_text(c), " "))
+
+
+def _set_jaccard(a: str, b: str) -> Column:
+    """|A∩B| / (|A|+|B|−|A∩B|) of two distinct-element array columns,
+    from one native array_intersect (no shuffle), unrounded."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter.cast("double") / (F.size(a) + F.size(b) - inter).cast("double")
+
+
+def _verify_jaccard(
+    cands: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    threshold: float,
+    keys: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """Exact verify of candidate id pairs: join the candidates to both
+    sides' token sets (left/right carry doc_id and text; `keys` name
+    the candidate columns), keep the pairs whose round6 Jaccard clears
+    the threshold. Returns (*keys, jaccard), value-identical to
+    token_jaccard_pairs."""
+    ka, kb = keys
+    a = left.select(F.col("doc_id").alias(ka), token_set(F.col("text")).alias("toks_a"))
+    b = right.select(F.col("doc_id").alias(kb), token_set(F.col("text")).alias("toks_b"))
+    return (
+        cands.join(a, ka)
+        .join(b, kb)
+        .select(ka, kb, round6(_set_jaccard("toks_a", "toks_b")).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _rows_per_band(num_perm: int, bands: int, who: str) -> int:
+    """num_perm / bands, refusing a banding that would leave
+    permutations out of every band."""
+    if num_perm % bands:
+        raise ValueError(f"{who}: bands={bands} must divide num_perm={num_perm}")
+    return num_perm // bands
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -38,7 +108,7 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     The shuffle key is the 32-char digest, so the wide text column is
     pruned before the exchange."""
     return (
-        docs.select(F.md5(_norm_text(F.col(text_col))).alias("text_hash"), "doc_id")
+        docs.select(text_digest(F.col(text_col)).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(F.count(F.lit(1)).alias("dup_count"), F.min("doc_id").alias("keep_doc_id"))
     )
@@ -143,23 +213,95 @@ def _band_buckets(signatures: DataFrame, bands: int, rows_per_band: int) -> Data
     )
 
 
+def unigram_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, bucket) rows of each doc's unigram token set at the
+    one band spec (NUM_PERM perms, BANDS bands of ROWS_PER_BAND): what
+    the streaming band index stores and what every unigram screen
+    (token_jaccard_pairs_lsh, cross_corpus_jaccard) bands with."""
+    return _band_buckets(minhash_signatures(docs, num_perm=NUM_PERM, k=1), BANDS, ROWS_PER_BAND)
+
+
+def _bucket_sizes(band_rows: DataFrame) -> DataFrame:
+    """(band, bucket, _n): docs per band bucket — a cheap partial-agg
+    shuffle (map-side combine shrinks it to distinct buckets per
+    partition)."""
+    return band_rows.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_n"))
+
+
+def _drop_hot_buckets(
+    band_rows: DataFrame,
+    max_bucket_size: int | None,
+    refuse: bool = False,
+    who: str = "",
+) -> DataFrame:
+    """The hot-bucket cap: band_rows without the (band, bucket)s holding
+    more than max_bucket_size rows (None keeps every bucket). A bucket
+    of n docs emits n(n-1)/2 pairs, so one boilerplate bucket of 1M docs
+    would alone produce 5e11 candidates; its members still pair through
+    their other bands.
+
+    The OVER-cap set is tiny by construction (a handful of boilerplate
+    buckets), so it broadcasts and the cap costs band_rows NO shuffle at
+    all. The window-count alternative (count over partitionBy(band,
+    bucket)) measured 5-10x WORSE on hot-bucket band frames: it forces a
+    full unsalted shuffle+sort of every band row, twice (once per
+    self-join side), concentrated on exactly the skewed buckets the cap
+    exists to tame — 49 s vs 4-10 s on the sf0.1 unigram frame (10.5 M
+    candidate pairs), and no better than noise on the well-spread
+    minhash frame.
+
+    refuse=True is for callers whose contract is "EVERY qualifying
+    pair" (e.g. the oracle-checked queries, whose DuckDB twin computes
+    the uncapped answer): if the cap would drop any bucket, raise
+    instead of returning a silently truncated set. One limit(1) collect
+    stops at the first offending bucket."""
+    if max_bucket_size is None:
+        return band_rows
+    hot = _bucket_sizes(band_rows).where(F.col("_n") > max_bucket_size)
+    if refuse:
+        hit = hot.limit(1).collect()
+        if hit:
+            r = hit[0]
+            raise ValueError(
+                f"{who}: band {r['band']} bucket {r['bucket']} holds {r['_n']} docs "
+                f"(> max_bucket_size={max_bucket_size}); the cap would drop "
+                "qualifying pairs — raise the cap or pre-filter the boilerplate bucket"
+            )
+    return band_rows.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
+
+
+def _shared_bucket_pairs(band_rows: DataFrame) -> DataFrame:
+    """(doc_a < doc_b) pairs sharing at least one (band, bucket): the
+    band-row self-join, sub-quadratic as long as buckets stay small."""
+    left = band_rows.alias("a")
+    right = band_rows.alias("b")
+    return (
+        left.join(
+            right,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 def lsh_dropped_buckets(
     signatures: DataFrame,
     bands: int = 16,
     rows_per_band: int = 4,
     max_bucket_size: int = 500,
 ) -> DataFrame:
-    """Accounting twin of lsh_candidate_pairs' hot-bucket guard: the
+    """Accounting twin of lsh_candidate_pairs' hot-bucket cap: the
     (band, bucket, n_docs) rows that the cap would drop. At 100 TB this
     is the dashboard query a dedup pipeline runs alongside the dedup
     itself — dropped buckets are almost always boilerplate (headers,
     licenses, templates), and their count/size is the signal that the
     banding parameters or a pre-filter need tuning."""
-    b = _band_buckets(signatures, bands, rows_per_band)
-    return (
-        b.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") > max_bucket_size)
+    sizes = _bucket_sizes(_band_buckets(signatures, bands, rows_per_band))
+    return sizes.where(F.col("_n") > max_bucket_size).select(
+        "band", "bucket", F.col("_n").alias("n_docs")
     )
 
 
@@ -174,46 +316,15 @@ def lsh_candidate_pairs(
 
     The self-join keys on (band, bucket) — sub-quadratic as long as
     buckets stay small; AQE's skew-join splitting spreads moderately hot
-    buckets across tasks. max_bucket_size is the 100 TB guard: a bucket
-    of n docs emits n(n-1)/2 pairs, so one boilerplate bucket of 1M docs
-    would alone produce 5e11 candidates — buckets over the cap are
-    dropped entirely (their members still pair through their other
-    bands; standard practice in corpus-scale MinHash dedup). The cap is
-    ON by default (500 — far above any honest near-dup cluster in a
+    buckets across tasks. max_bucket_size is the 100 TB guard
+    (_drop_hot_buckets): buckets over the cap are dropped entirely —
+    standard practice in corpus-scale MinHash dedup. The cap is ON by
+    default (500 — far above any honest near-dup cluster in a
     deduplicated ingest batch); pass None to opt out for exhaustive
     small-corpus audits. lsh_dropped_buckets() reports what a given cap
     discards."""
     b = _band_buckets(signatures, bands, rows_per_band)
-    if max_bucket_size is not None:
-        # sizes is a cheap partial-agg shuffle (map-side combine shrinks
-        # it to distinct buckets per partition) and the OVER-cap set is
-        # tiny by construction (a handful of boilerplate buckets), so it
-        # broadcasts and the guard costs b NO shuffle at all. The
-        # window-count alternative (count over partitionBy(band, bucket))
-        # measured 5-10x WORSE on hot-bucket band frames: it forces a
-        # full unsalted shuffle+sort of every band row, twice (once per
-        # self-join side), concentrated on exactly the skewed buckets
-        # the cap exists to tame — 49 s vs 4-10 s on the sf0.1 unigram
-        # frame (10.5 M candidate pairs), and no better than noise on
-        # the well-spread minhash frame.
-        sizes = b.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("_n"))
-        b = b.join(
-            F.broadcast(sizes.where(F.col("_n") > max_bucket_size)),
-            ["band", "bucket"],
-            "left_anti",
-        )
-    left = b.alias("a")
-    right = b.alias("b")
-    return (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _shared_bucket_pairs(_drop_hot_buckets(b, max_bucket_size))
 
 
 def minhash_jaccard_estimate(signatures: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -249,6 +360,7 @@ def minhash_dedup(
     -> estimate filter. Returns pairs with est_jaccard >= threshold.
     The hot-bucket cap defaults ON (see lsh_candidate_pairs); None opts
     out."""
+    rows_per_band = _rows_per_band(num_perm, bands, "minhash_dedup")
     # The signature subtree feeds three consumers (band explode + both
     # estimate joins); without persist it recomputes per consumer.
     # Signatures are num_perm longs per doc — ~3 orders of magnitude
@@ -256,7 +368,7 @@ def minhash_dedup(
     # any scale (measured 2.2x on the full pipeline at sf0.1).
     sigs = minhash_signatures(docs, num_perm=num_perm, k=k).persist()
     pairs = lsh_candidate_pairs(
-        sigs, bands=bands, rows_per_band=num_perm // bands, max_bucket_size=max_bucket_size
+        sigs, bands=bands, rows_per_band=rows_per_band, max_bucket_size=max_bucket_size
     )
     est = minhash_jaccard_estimate(sigs, pairs)
     return est.where(F.col("est_jaccard") >= threshold)
@@ -276,7 +388,7 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text") -> DataFrame:
     terms."""
     th = docs.select(
         "doc_id",
-        F.explode_outer(F.array_distinct(F.split(_norm_text(F.col(text_col)), " "))).alias("tok"),
+        F.explode_outer(token_set(F.col(text_col))).alias("tok"),
     ).select("doc_id", F.xxhash64("tok").alias("h"))
     aggs = []
     for bit in range(64):
@@ -399,8 +511,6 @@ def token_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
 def token_jaccard_pairs_lsh(
     docs: DataFrame,
     threshold: float = 0.95,
-    num_perm: int = 128,
-    bands: int = 32,
     max_bucket_size: int | None = 500,
     fail_on_dropped_buckets: bool = False,
 ) -> DataFrame:
@@ -408,59 +518,28 @@ def token_jaccard_pairs_lsh(
     SAME unigram token sets, then EXACT Jaccard verification on the
     candidate pairs only — identical output, sub-quadratic plan.
 
-    Candidate recall at 128 perms / 32 bands of 4: a pair with true
-    Jaccard J misses every band with probability (1 - J^4)^32 — at
-    J = 0.95 that is ~4e-24, so the exact-verify step sees every
-    qualifying pair (the all-pairs token self-join it replaces pairs
-    every pair of docs sharing ONE common token — quadratic against a
-    shared vocabulary). Verification computes true Jaccard from the two
-    distinct-token arrays (array_intersect — native expression, no
-    shuffle beyond the two signature joins), matching
-    token_jaccard_pairs' value bit-for-bit."""
-    toks = docs.select(
-        "doc_id", F.array_distinct(F.split(_norm_text(F.col("text")), " ")).alias("toks")
+    Candidate recall at the fixed band spec (NUM_PERM / BANDS, see
+    unigram_bands): a pair with true Jaccard J misses every band with
+    probability (1 - J^4)^32 — at J = 0.95 that is ~4e-24, so the
+    exact-verify step sees every qualifying pair (the all-pairs token
+    self-join it replaces pairs every pair of docs sharing ONE common
+    token — quadratic against a shared vocabulary). Verification
+    (_verify_jaccard) computes true Jaccard from the two distinct-token
+    arrays (array_intersect — native expression, no shuffle beyond the
+    two token-set joins), matching token_jaccard_pairs' value
+    bit-for-bit. fail_on_dropped_buckets refuses instead of capping
+    (see _drop_hot_buckets)."""
+    # the band rows feed the cap's size aggregate, its refusal probe and
+    # both self-join sides; persist so the signature pass and the
+    # banding run once. A band row is 3 longs, so this is ~BANDS x |docs|
+    # longs, on par with the signatures and negligible next to the text.
+    b = _drop_hot_buckets(
+        unigram_bands(docs).persist(),
+        max_bucket_size,
+        refuse=fail_on_dropped_buckets,
+        who="token_jaccard_pairs_lsh",
     )
-    # banding reads the signatures up to three times (both join sides +
-    # the bucket-size guard); same persist rationale as minhash_dedup.
-    sigs = minhash_signatures(docs, num_perm=num_perm, k=1).persist()
-    if fail_on_dropped_buckets and max_bucket_size is not None:
-        # Callers whose contract is "EVERY qualifying pair" (e.g. the
-        # oracle-checked queries, whose DuckDB twin computes the uncapped
-        # answer) opt in here: if the cap would discard any bucket, the
-        # capped result may silently diverge from that contract — fail
-        # loudly instead. One extra banding pass over the persisted
-        # signatures; limit(1) stops at the first offending bucket.
-        dropped = lsh_dropped_buckets(
-            sigs,
-            bands=bands,
-            rows_per_band=num_perm // bands,
-            max_bucket_size=max_bucket_size,
-        ).limit(1)
-        hit = dropped.collect()
-        if hit:
-            r = hit[0]
-            raise ValueError(
-                f"token_jaccard_pairs_lsh: band {r['band']} bucket {r['bucket']} "
-                f"holds {r['n_docs']} docs (> max_bucket_size={max_bucket_size}); "
-                "the cap would drop qualifying pairs — raise the cap or "
-                "pre-filter the boilerplate bucket"
-            )
-    pairs = lsh_candidate_pairs(
-        sigs, bands=bands, rows_per_band=num_perm // bands, max_bucket_size=max_bucket_size
-    )
-    a = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    b = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = round6(
-        inter.cast("double")
-        / (F.size("toks_a") + F.size("toks_b") - inter).cast("double")
-    )
-    out = (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-    )
-    return out.where(F.col("jaccard") >= threshold)
+    return _verify_jaccard(_shared_bucket_pairs(b), docs, docs, threshold)
 
 
 def keep_best_list(
@@ -593,9 +672,9 @@ def cross_corpus_exact(
     corpus scan streams against them — corpus rows never shuffle. The
     match aggregate is then at most |incoming|-sized. Wide text columns
     are reduced to 32-char digests before any join on either side."""
-    inc = incoming.select("doc_id", F.md5(_norm_text(F.col(text_col))).alias("digest"))
+    inc = incoming.select("doc_id", text_digest(F.col(text_col)).alias("digest"))
     corp = corpus.select(
-        F.col("doc_id").alias("_c_doc"), F.md5(_norm_text(F.col(text_col))).alias("digest")
+        F.col("doc_id").alias("_c_doc"), text_digest(F.col(text_col)).alias("digest")
     )
     matches = (
         corp.join(F.broadcast(inc.select("digest").distinct()), "digest")
@@ -616,46 +695,10 @@ def cross_corpus_exact(
     )
 
 
-def minhash_band_table(
-    docs: DataFrame,
-    table_name: str,
-    num_perm: int = 128,
-    bands: int = 32,
-    num_buckets: int = 32,
-) -> str:
-    """Materialize the standing corpus's LSH band index — (doc_id, band,
-    bucket) — as a bucketed table, the build-at-ingest form of the
-    banding pass for corpora that screen incoming crawl batches
-    repeatedly (the MinHash twin of similarity.ivf_corpus_table).
-
-    At 100 TB the expensive part of incremental near-dup is NOT the
-    candidate join (the batch side broadcasts) — it is re-tokenizing,
-    re-hashing, and re-banding the standing corpus on every batch. This
-    table amortizes that full-corpus pass across every future batch:
-    cross_corpus_jaccard reads it instead of recomputing, and appends
-    each accepted batch's band rows so the index tracks the corpus.
-
-    k=1 shingles (unigram token sets) to match token_jaccard_pairs_lsh /
-    cross_corpus_jaccard verification semantics."""
-    from ..operators.maintenance import _fs_delete, write_bucketed
-
-    spark = docs.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    _fs_delete(f"{wh.rstrip('/')}/{table_name.lower()}")
-
-    sigs = minhash_signatures(docs, num_perm=num_perm, k=1)
-    band_frame = _band_buckets(sigs, bands, num_perm // bands)
-    write_bucketed(band_frame, table_name, "bucket", num_buckets=num_buckets)
-    return table_name
-
-
 def cross_corpus_jaccard(
     incoming: DataFrame,
     corpus: DataFrame,
     threshold: float = 0.95,
-    num_perm: int = 128,
-    bands: int = 32,
     max_bucket_size: int | None = 500,
     fail_on_dropped_buckets: bool = False,
     corpus_bands: DataFrame | None = None,
@@ -666,65 +709,47 @@ def cross_corpus_jaccard(
     decision that keeps paraphrased/boilerplate-shifted duplicates out
     of the main store batch by batch.
 
-    Pipeline: MinHash both sides (k=1 unigram sets, same semantics as
-    token_jaccard_pairs_lsh), band into buckets, join the BATCH band
-    frame against the CORPUS band frame on (band, bucket) for
-    candidates, then verify exactly via array_intersect on the two
-    distinct-token arrays. Recall bound is the banding one (~4e-24 miss
-    at J=0.95, 128/32) — candidates only, never corpus x batch.
+    Pipeline: band both sides (unigram_bands, the same sets and spec as
+    token_jaccard_pairs_lsh), join the BATCH band frame against the
+    CORPUS band frame on (band, bucket) for candidates, then verify
+    exactly via array_intersect on the two distinct-token arrays.
+    Recall bound is the banding one (~4e-24 miss at J=0.95) —
+    candidates only, never corpus x batch.
 
     Scale shape: the batch band frame is |batch| x bands rows and
     BROADCASTS — the corpus band side streams through the join with no
     exchange. Verification joins candidates (small) to each side's
     token arrays; the corpus side is filtered to matched doc_ids before
     tokenization, so corpus text is only tokenized for docs that share
-    a bucket with the batch. Pass corpus_bands (a minhash_band_table)
-    to skip the corpus re-banding pass entirely — then NO full corpus
-    scan happens unless a candidate matches.
+    a bucket with the batch. Pass corpus_bands (unigram_bands rows, the
+    streaming band index) to skip the corpus re-banding pass entirely —
+    then NO full corpus scan happens unless a candidate matches.
 
     The hot-bucket cap applies to the CORPUS side (boilerplate buckets
     live there); fail_on_dropped_buckets mirrors
     token_jaccard_pairs_lsh's every-qualifying-pair contract."""
-    rpb = num_perm // bands
-    inc_sigs = minhash_signatures(incoming, num_perm=num_perm, k=1)
-    inc_bands = _band_buckets(inc_sigs, bands, rpb).select(
+    inc_bands = unigram_bands(incoming).select(
         F.col("doc_id").alias("doc_new"), "band", "bucket"
     )
     own_persist = corpus_bands is None
     if own_persist:
-        # the corpus band frame feeds BOTH the hot-bucket guard and the
+        # the corpus band frame feeds BOTH the hot-bucket cap and the
         # candidate join; persist so the (expensive) corpus signature
-        # pass runs once — same rationale and CacheManager-reuse
-        # methodology as token_jaccard_pairs_lsh's persisted signatures.
-        # A band row is (doc_id, band, bucket) — 3 longs — so this is
-        # ~bands x |corpus| longs, negligible next to the text. The
-        # cache entry is OWNED here: the candidate set (batch-bounded)
-        # is checkpointed below and the bands released before returning,
-        # so repeated standalone calls never accumulate dead cache
-        # entries (streaming callers pass corpus_bands and manage their
-        # own persist lifetime).
-        corpus_bands = _band_buckets(
-            minhash_signatures(corpus, num_perm=num_perm, k=1), bands, rpb
-        ).persist()
+        # pass runs once. A band row is (doc_id, band, bucket) — 3
+        # longs — so this is ~bands x |corpus| longs, negligible next to
+        # the text. The cache entry is OWNED here: the candidate set
+        # (batch-bounded) is checkpointed below and the bands released
+        # before returning, so repeated standalone calls never
+        # accumulate dead cache entries (streaming callers pass
+        # corpus_bands and manage their own persist lifetime).
+        corpus_bands = unigram_bands(corpus).persist()
     try:
-        corp_bands = corpus_bands.select(
-            F.col("doc_id").alias("doc_corpus"), "band", "bucket"
+        corp_bands = _drop_hot_buckets(
+            corpus_bands.select(F.col("doc_id").alias("doc_corpus"), "band", "bucket"),
+            max_bucket_size,
+            refuse=fail_on_dropped_buckets,
+            who="cross_corpus_jaccard",
         )
-        if max_bucket_size is not None:
-            sizes = corp_bands.groupBy("band", "bucket").agg(
-                F.count(F.lit(1)).alias("_n")
-            )
-            hot = sizes.where(F.col("_n") > max_bucket_size)
-            if fail_on_dropped_buckets:
-                hit = hot.limit(1).collect()
-                if hit:
-                    r = hit[0]
-                    raise ValueError(
-                        f"cross_corpus_jaccard: band {r['band']} bucket {r['bucket']} "
-                        f"holds {r['_n']} corpus docs (> max_bucket_size="
-                        f"{max_bucket_size}); the cap would drop qualifying pairs"
-                    )
-            corp_bands = corp_bands.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
         cands = (
             corp_bands.join(F.broadcast(inc_bands), ["band", "bucket"])
             .select("doc_new", "doc_corpus")
@@ -737,21 +762,7 @@ def cross_corpus_jaccard(
     finally:
         if own_persist:
             corpus_bands.unpersist()
-    toks = lambda df: df.select(  # noqa: E731
-        "doc_id", F.array_distinct(F.split(_norm_text(F.col("text")), " ")).alias("toks")
-    )
-    a = toks(incoming).select(F.col("doc_id").alias("doc_new"), F.col("toks").alias("toks_a"))
-    b = toks(corpus).select(F.col("doc_id").alias("doc_corpus"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = round6(
-        inter.cast("double") / (F.size("toks_a") + F.size("toks_b") - inter).cast("double")
-    )
-    return (
-        cands.join(a, "doc_new")
-        .join(b, "doc_corpus")
-        .select("doc_new", "doc_corpus", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify_jaccard(cands, incoming, corpus, threshold, keys=("doc_new", "doc_corpus"))
 
 
 def token_jaccard_pairs_prefix(
@@ -781,8 +792,8 @@ def token_jaccard_pairs_prefix(
     synthetic low-entropy corpus (31-token vocabulary): when every
     token is common, prefixes degenerate toward all-pairs — on real
     Zipfian text the prefix join keys are the distribution's long tail.
-    The exact verify reuses the array_intersect expression shared with
-    the LSH path, so all three formulations are value-identical.
+    The exact verify is _verify_jaccard, shared with the LSH path, so
+    all three formulations are value-identical.
 
     entropy_guard (default on) turns that caveat into a refusal instead
     of a silent quadratic run: before the candidate join, one cheap
@@ -793,12 +804,7 @@ def token_jaccard_pairs_prefix(
     raises and points at token_jaccard_pairs_lsh (banded + capped, the
     path built for low-entropy corpora). Pass entropy_guard=False only
     when exactness on a known-small degenerate corpus is the point."""
-    from pyspark.sql.window import Window
-
-    toks = docs.select(
-        "doc_id", F.array_distinct(F.split(_norm_text(F.col("text")), " ")).alias("toks")
-    )
-    exploded = toks.select("doc_id", F.explode("toks").alias("tok"))
+    exploded = docs.select("doc_id", F.explode(token_set(F.col("text"))).alias("tok"))
     df_tok = exploded.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     if entropy_guard:
         stats = df_tok.agg(F.count(F.lit(1)).alias("vocab")).collect()[0]
@@ -839,18 +845,18 @@ def token_jaccard_pairs_prefix(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    a = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    b = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    jac = round6(
-        inter.cast("double")
-        / (F.size("toks_a") + F.size("toks_b") - inter).cast("double")
-    )
+    return _verify_jaccard(cands, docs, docs, threshold)
+
+
+def _sample_shingle_sets(docs: DataFrame, k: int, max_docs: int) -> DataFrame:
+    """(doc_id, sh): the distinct hashed k-shingle set of every doc in
+    the deterministic doc_id < max_docs audit sample — the exact-Jaccard
+    ground truth of both MinHash audits."""
     return (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+        shingles(docs.where(F.col("doc_id") < max_docs), k=k)
+        .distinct()
+        .groupBy("doc_id")
+        .agg(F.collect_set("shingle").alias("sh"))
     )
 
 
@@ -892,25 +898,13 @@ def minhash_recall_report(
     cuts for the chosen (r, b). Audit cost: one banding pass over the
     corpus plus sample-bounded pair joins (max_docs^2/2 rows) — rows-
     only by design (the seeded xxhash64 permutations have no SQL twin)."""
-    rows_per_band = num_perm // bands
-    if rows_per_band * bands != num_perm:
-        raise ValueError(
-            f"minhash_recall_report: bands={bands} must divide num_perm={num_perm}"
-        )
-    sample = docs.where(F.col("doc_id") < max_docs)
-    sets_ = (
-        shingles(sample, k=k)
-        .distinct()
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sh"))
-    )
+    rows_per_band = _rows_per_band(num_perm, bands, "minhash_recall_report")
+    sets_ = _sample_shingle_sets(docs, k, max_docs)
     a = sets_.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     b = sets_.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter).cast("double")
     truth = (
         a.join(F.broadcast(b), F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .select("doc_a", "doc_b", _set_jaccard("sh_a", "sh_b").alias("jaccard"))
         .where(F.col("jaccard") >= min_jaccard)
     )
     cand = (
@@ -1115,11 +1109,7 @@ def minhash_precision_report(
 
     Rows-only by design (seeded xxhash64 permutations have no SQL
     twin); the planted-corpus pytest pins the monotone shape."""
-    rows_per_band = num_perm // bands
-    if rows_per_band * bands != num_perm:
-        raise ValueError(
-            f"minhash_precision_report: bands={bands} must divide num_perm={num_perm}"
-        )
+    rows_per_band = _rows_per_band(num_perm, bands, "minhash_precision_report")
     sigs = minhash_signatures(docs, num_perm=num_perm, k=k)
     cand = (
         lsh_candidate_pairs(
@@ -1133,13 +1123,7 @@ def minhash_precision_report(
         .distinct()
     )
     est = minhash_jaccard_estimate(sigs, cand)
-    sample = docs.where(F.col("doc_id") < max_docs)
-    sets_ = (
-        shingles(sample, k=k)
-        .distinct()
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("sh"))
-    )
+    sets_ = _sample_shingle_sets(docs, k, max_docs)
     withsets = (
         est.join(
             sets_.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
@@ -1150,8 +1134,6 @@ def minhash_precision_report(
             "doc_b",
         )
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter).cast("double")
     bucket_lo = (
         F.least(F.floor(F.col("est_jaccard") * n_buckets), F.lit(n_buckets - 1))
         / F.lit(float(n_buckets))
@@ -1159,7 +1141,7 @@ def minhash_precision_report(
     return (
         withsets.select(
             bucket_lo.alias("bucket_lo"),
-            jac.alias("true_j"),
+            _set_jaccard("sh_a", "sh_b").alias("true_j"),
         )
         .groupBy("bucket_lo")
         .agg(
@@ -1192,7 +1174,7 @@ def dedup_impact_by_source(docs: DataFrame) -> DataFrame:
 
     nt = F.when(F.col("text").isNull(), F.lit(0)).otherwise(F.size(tokens_col()))
     sig = docs.select(
-        F.md5(_norm_text(F.col("text"))).alias("digest"),
+        text_digest(F.col("text")).alias("digest"),
         "doc_id",
         "source",
         nt.cast("long").alias("nt"),

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..llm.curation import quality_filter
-from ..llm.dedup import _norm_text
+from ..llm.dedup import cross_corpus_jaccard, text_digest, unigram_bands
 from ..operators.maintenance import (
     overwrite_batch_partition,
     read_store_or_none,
@@ -45,12 +45,6 @@ from .pipeline import _parquet_stream, _start_micro_batches
 DOCUMENT_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
-
-# MinHash parameters shared by the in-batch screen and the persisted
-# band index — they MUST match, or stored band rows are meaningless.
-NUM_PERM = 128
-BANDS = 32
-ROWS_PER_BAND = NUM_PERM // BANDS
 
 
 def _ensure_band_index(
@@ -83,8 +77,6 @@ def _ensure_band_index(
     exactly the missing docs and appends them — batch-sized after a
     crash, store-sized once at bootstrap. Parquet job commits are
     all-or-nothing, so partial per-doc band sets do not occur."""
-    from ..llm.dedup import _band_buckets, minhash_signatures
-
     idx = read_store_or_none(spark, band_index_path)
     store_ids = store.select("doc_id")
     if idx is not None:
@@ -103,9 +95,7 @@ def _ensure_band_index(
     # at-least-once append by design: the repair bands exactly the
     # docs PROVEN missing by the anti-join above, so a re-run cannot
     # write a doc's band rows twice (they stop being missing)
-    _band_buckets(
-        minhash_signatures(missing_docs, num_perm=NUM_PERM, k=1), BANDS, ROWS_PER_BAND
-    ).write.mode("append").parquet(band_index_path)
+    unigram_bands(missing_docs).write.mode("append").parquet(band_index_path)
     repaired = spark.read.parquet(band_index_path)
     if not repaired.select("doc_id").distinct().join(
         store_ids, "doc_id", "left_anti"
@@ -197,7 +187,7 @@ def curate_batch(
         raise ValueError("curate_batch: decontam_mode='exact' needs bench_grams=")
     if decontam_mode == "bloom" and bloom is None:
         raise ValueError("curate_batch: decontam_mode='bloom' needs bloom=(bitmap, m, k)")
-    digested = batch.withColumn("digest", F.md5(_norm_text(F.col("text"))))
+    digested = batch.withColumn("digest", text_digest(F.col("text")))
 
     # 0. fail-loud validity split. A NULL text row has a NULL digest
     # and a NULL doc_id row has no identity for the keep-min rule; both
@@ -243,25 +233,17 @@ def curate_batch(
     # The matched-id set is batch-bounded and localCheckpoint()ed so the
     # keep/drop split doesn't re-run the banding pipeline per consumer.
     if corpus_docs is not None:
-        from ..llm.dedup import _band_buckets, cross_corpus_jaccard, minhash_signatures
-
         # corpus_bands may arrive pre-built (the band-index table this
         # same stream maintains — then NO corpus re-banding happens and
         # the store is only tokenized for matched candidates); otherwise
-        # own the band persist HERE and release it once the matched-id
-        # set is checkpointed: per-batch store plans differ (the store
-        # grows), so leaving cross_corpus_jaccard's internal persist in
-        # place would pile one dead cache entry per micro-batch into
-        # the store for the life of the stream
+        # band the store HERE and pass the rows in, so the screen runs as
+        # ONE eager action — the checkpoint of the verified ids below —
+        # with no separate candidate checkpoint inside
+        # cross_corpus_jaccard; the persist is released once that action
+        # has run
         own_persist = corpus_bands is None
         if own_persist:
-            corpus_bands = _band_buckets(
-                minhash_signatures(
-                    corpus_docs.select("doc_id", "text"), num_perm=NUM_PERM, k=1
-                ),
-                BANDS,
-                ROWS_PER_BAND,
-            ).persist()
+            corpus_bands = unigram_bands(corpus_docs.select("doc_id", "text")).persist()
         try:
             nd_ids = (
                 cross_corpus_jaccard(
@@ -660,18 +642,14 @@ def run_corpus_ingest_stream(
             # keep the band index tracking the corpus: band the KEPT
             # docs only (batch-sized) and append — kept's plan reads the
             # pre-append store listing, so this never double-bands
-            from ..llm.dedup import _band_buckets, minhash_signatures
-
             # at-least-once append by design: on redelivery kept is
             # empty (digest anti-join), so no duplicate band rows; a
             # crash BETWEEN the corpus append and this write leaves a
             # gap that _ensure_band_index detects and repairs before
             # the next screen
-            _band_buckets(
-                minhash_signatures(kept.select("doc_id", "text"), num_perm=NUM_PERM, k=1),
-                BANDS,
-                ROWS_PER_BAND,
-            ).write.mode("append").parquet(band_index_path)
+            unigram_bands(kept.select("doc_id", "text")).write.mode("append").parquet(
+                band_index_path
+            )
         if compact_every_batches and batch_id % compact_every_batches == (
             compact_every_batches - 1
         ):

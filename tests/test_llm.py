@@ -1986,10 +1986,10 @@ def test_cross_corpus_jaccard_incremental_gate(spark):
     assert len(got) == 1  # the fresh doc matches nothing
 
 
-def test_cross_corpus_jaccard_band_table_path_matches(spark):
-    # the pre-built band-index path must return EXACTLY the in-memory
-    # result (same signatures/banding), while skipping the corpus
-    # re-banding pass
+def test_cross_corpus_jaccard_band_table_path_matches(spark, tmp_path):
+    # the pre-built band-index path (unigram_bands rows read back from
+    # parquet, what the corpus stream stores) must return EXACTLY the
+    # in-memory result, while skipping the corpus re-banding pass
     mk = lambda i, t: (i, t)
     base = "one two three four five six seven eight nine ten"
     rows = [mk(i, base + f" extra{i}") for i in range(1, 6)] + [
@@ -1997,17 +1997,12 @@ def test_cross_corpus_jaccard_band_table_path_matches(spark):
     ]
     corpus = spark.createDataFrame(rows, "doc_id long, text string")
     incoming = spark.createDataFrame([mk(100, base + " extra1 tail")], "doc_id long, text string")
-    tbl = "minhash_bands_pytest"
-    dedup.minhash_band_table(corpus, tbl, num_perm=32, bands=16, num_buckets=4)
-    try:
-        mem = sorted(map(tuple, dedup.cross_corpus_jaccard(
-            incoming, corpus, threshold=0.5, num_perm=32, bands=16).collect()))
-        idx = sorted(map(tuple, dedup.cross_corpus_jaccard(
-            incoming, corpus, threshold=0.5, num_perm=32, bands=16,
-            corpus_bands=spark.table(tbl)).collect()))
-        assert mem == idx and len(mem) >= 1
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    path = str(tmp_path / "band_index")
+    dedup.unigram_bands(corpus).write.parquet(path)
+    mem = sorted(map(tuple, dedup.cross_corpus_jaccard(incoming, corpus, threshold=0.5).collect()))
+    idx = sorted(map(tuple, dedup.cross_corpus_jaccard(
+        incoming, corpus, threshold=0.5, corpus_bands=spark.read.parquet(path)).collect()))
+    assert mem == idx and len(mem) >= 1
 
 
 def test_cross_corpus_jaccard_hot_bucket_guard_raises(spark):
@@ -2880,6 +2875,13 @@ def test_minhash_recall_report_tracks_s_curve(spark):
     # the measured curve rises with J as well (end-to-end sanity)
     rec = [by_lo[lo]["recall"] for lo in los]
     assert rec[-1] >= rec[0]
+
+
+def test_minhash_dedup_rejects_bands_that_do_not_divide_num_perm(spark):
+    # 64 // 10 = 6 would band only 60 of the 64 permutations
+    docs = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="must divide"):
+        dedup.minhash_dedup(docs, num_perm=64, bands=10)
 
 
 def test_minhash_recall_report_rejects_bad_bands(spark):

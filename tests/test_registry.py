@@ -354,3 +354,47 @@ def test_media_near_dup_tier_has_one_audit_one_guard_and_no_offset_option():
         f"id_offset parameters: {offset_defs} — planted copies sit at "
         "RECONTAINER_ID_OFFSET, which the oracles hard-code"
     )
+
+
+def test_dedup_tier_defines_each_rule_once():
+    """llm/dedup.py is the one home of each dedup rule: the text digest
+    (text_digest), the exact set-Jaccard (_set_jaccard) and the unigram
+    band spec (unigram_bands over _band_buckets). A second copy is a
+    fork the oracles and the stored band index no longer cover, and a
+    function taking both num_perm and corpus_bands accepts a banding the
+    stored index cannot honour. Gate: 'md5(_norm_text' appears once in
+    the package, 'F.array_intersect' once in dedup.py, no other module
+    names _norm_text or _band_buckets, and no def takes both num_perm
+    and corpus_bands."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "metrocloud_data_pipeline_spark"
+    texts = {p: p.read_text() for p in pkg.rglob("*.py")}
+    dedup_py = pkg / "llm" / "dedup.py"
+    assert sum(t.count("md5(_norm_text") for t in texts.values()) == 1, (
+        "digest normalized text through dedup.text_digest"
+    )
+    assert texts[dedup_py].count("F.array_intersect") == 1, (
+        "compute set Jaccard through dedup._set_jaccard"
+    )
+    leaks = [
+        f"{p.relative_to(pkg)}: {name}"
+        for p, t in texts.items()
+        if p != dedup_py
+        for name in ("_norm_text", "_band_buckets")
+        if name in t
+    ]
+    assert not leaks, f"private dedup rules used outside dedup.py: {leaks}"
+    both = [
+        f"{p.relative_to(pkg)}:{node.name}"
+        for p, t in texts.items()
+        for node in ast.walk(ast.parse(t))
+        if isinstance(node, ast.FunctionDef)
+        and {"num_perm", "corpus_bands"}
+        <= {a.arg for a in node.args.args + node.args.kwonlyargs}
+    ]
+    assert not both, (
+        f"num_perm next to corpus_bands: {both} — a stored band index is "
+        "built at dedup.NUM_PERM / dedup.BANDS only"
+    )

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from metrocloud_data_pipeline_spark import streaming
+from metrocloud_data_pipeline_spark.llm import dedup
 from metrocloud_data_pipeline_spark.operators import ingest, maintenance
 from metrocloud_data_pipeline_spark.tests_fixtures import RAW_FIXTURE_ROWS, RAW_FIXTURE_SCHEMA
 
@@ -844,7 +845,7 @@ def test_band_index_bootstraps_from_preexisting_store(spark, tmp_path):
     reasons = {r["doc_id"]: r["reason"] for r in spark.read.parquet(rejects).collect()}
     assert reasons == {10: "near_duplicate_in_corpus"}
     idx = spark.read.parquet(bands)
-    assert idx.count() == 3 * corpus.BANDS  # bootstrapped 1,2 + appended 11
+    assert idx.count() == 3 * dedup.BANDS  # bootstrapped 1,2 + appended 11
     assert sorted(r["doc_id"] for r in idx.select("doc_id").distinct().collect()) == [1, 2, 11]
 
 
@@ -906,7 +907,7 @@ def test_band_index_crash_gap_is_repaired(spark, tmp_path):
     assert reasons == {10: "near_duplicate_in_corpus"}
     # and the repair restored full coverage: every store doc banded
     idx = spark.read.parquet(bands)
-    assert idx.count() == 2 * corpus.BANDS
+    assert idx.count() == 2 * dedup.BANDS
 
 
 def test_band_index_tolerates_unbandable_docs(spark, tmp_path):
@@ -929,13 +930,13 @@ def test_band_index_tolerates_unbandable_docs(spark, tmp_path):
 
     idx1 = corpus._ensure_band_index(spark, store, bands)
     assert idx1 is not None
-    assert idx1.count() == 1 * corpus.BANDS  # doc 1 fully banded
+    assert idx1.count() == 1 * dedup.BANDS  # doc 1 fully banded
     assert [r["doc_id"] for r in idx1.select("doc_id").distinct().collect()] == [1]
 
     # steady state: a second pass neither refuses the index nor grows it
     idx2 = corpus._ensure_band_index(spark, store, bands)
     assert idx2 is not None
-    assert idx2.count() == 1 * corpus.BANDS
+    assert idx2.count() == 1 * dedup.BANDS
 
 
 def test_scd2_bucketed_stream_matches_full_rewrite_and_prunes(spark, tmp_path):
