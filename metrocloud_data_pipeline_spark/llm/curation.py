@@ -25,37 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import iterate_partials, round6
-from .text import tokens_col
+from .text import _gram_rows, norm_text, tokens_col
 
 # --- n-gram contamination ----------------------------------------------------
-
-
-def _gram_rows(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
-    """(id, n-token-gram) rows — one per gram OCCURRENCE — over
-    whitespace-normalized lowercase text. Complete grams only (a doc
-    shorter than n tokens contributes none).
-
-    Gram assembly zips n shifted slices of the token array and explodes
-    (the dedup.shingles() trick) — a pure narrow projection inside
-    codegen, NO shuffle and no per-doc sort. The previous lead()-window
-    formulation forced a WindowExec exchange+sort by doc before a
-    single gram existed; gram strings are identical (gram i =
-    tokens[i..i+n-1]), only the plan changed — measured 1.5x on the
-    8-gram contamination probe at sf0.1 (2.07 s -> 1.34 s). Winnowing
-    (llm/text.py:137) keeps the window form because it needs gram
-    POSITIONS for the window-min."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    m = F.size(F.col("_toks")) - (n - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("_toks"), i + 1, m).alias(f"t{i}") for i in range(n)]
-    )
-    gram = F.concat_ws(" ", *[F.col(f"g.t{i}") for i in range(n)])
-    return (
-        docs.select(F.col(id_col), F.split(norm, " ").alias("_toks"))
-        .where(F.size("_toks") >= n)
-        .select(F.col(id_col), F.explode(zipped).alias("g"))
-        .select(F.col(id_col), gram.alias("gram"))
-    )
 
 
 def ngram_hashes(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
@@ -543,8 +515,7 @@ def gopher_quality_panel(
     gate's no-join form; input columns must not collide with the
     signal names)."""
     lt = F.lower(F.col("text"))
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    toks = F.filter(F.split(norm, " "), lambda t: F.length(t) > 0)
+    toks = F.filter(F.split(norm_text(F.col("text")), " "), lambda t: F.length(t) > 0)
     lines = F.filter(
         F.transform(
             F.split(lt, "\n"), lambda l: F.regexp_replace(F.trim(l), r"\s+", " ")
@@ -857,11 +828,10 @@ def lm_token_rows(docs: DataFrame, target) -> DataFrame:
     """(doc_id, is_target, token) occurrence rows over whitespace-
     normalized lowercase text — the single tokenization pass both DSIR
     LM aggregates and the scoring join consume."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     return docs.select(
         "doc_id",
         target.cast("boolean").alias("is_target"),
-        F.explode(F.split(norm, " ")).alias("token"),
+        F.explode(F.split(norm_text(F.col("text")), " ")).alias("token"),
     )
 
 
@@ -2406,12 +2376,11 @@ def corpus_datacard(docs: DataFrame) -> DataFrame:
     frame via map-side-combined aggregates (a distinct-digest count,
     two small group-bys for concentration, one global row); unions are
     of 1-row frames. Text never shuffles — the digest does."""
-    from .text import tokens_col
+    from .dedup import text_digest
 
     nt = F.when(F.col("text").isNull(), F.lit(0)).otherwise(F.size(tokens_col()))
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
     sig = docs.select(
-        F.md5(norm).alias("digest"),
+        text_digest(F.col("text")).alias("digest"),
         "source",
         "lang",
         nt.cast("long").alias("nt"),

@@ -18,7 +18,7 @@ Scale design (the whole point of these at 100 TB):
 Each dedup rule is defined once, here, and every caller in the package
 (curation's leakage and funnel digests, the streaming corpus ingest)
 uses these definitions:
-- text_digest: md5 of normalized text, the exact-duplicate identity;
+- text_digest: md5 of text.norm_text, the exact-duplicate identity;
 - token_set: the distinct normalized unigrams every exact Jaccard
   verify and SimHash read;
 - NUM_PERM / BANDS / ROWS_PER_BAND and unigram_bands: the one band
@@ -38,8 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numeric import round6
-
-_WS = r"\s+"
+from .text import _gram_rows, _zip_grams, norm_text
 
 # The band spec of every unigram-set screen. 128 perms in 32 bands of 4
 # miss a pair of true Jaccard J in every band with probability
@@ -49,18 +48,14 @@ BANDS = 32
 ROWS_PER_BAND = NUM_PERM // BANDS
 
 
-def _norm_text(c: Column) -> Column:
-    return F.regexp_replace(F.lower(F.trim(c)), _WS, " ")
-
-
 def text_digest(c: Column) -> Column:
     """md5 of normalized text: the exact-duplicate identity."""
-    return F.md5(_norm_text(c))
+    return F.md5(norm_text(c))
 
 
 def token_set(c: Column) -> Column:
     """Distinct normalized unigram tokens of a text column."""
-    return F.array_distinct(F.split(_norm_text(c), " "))
+    return F.array_distinct(F.split(norm_text(c), " "))
 
 
 def _set_jaccard(a: str, b: str) -> Column:
@@ -155,21 +150,13 @@ def exact_chunk_dedup(chunks: DataFrame) -> DataFrame:
 def shingles(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
     """(doc_id, shingle-hash) pairs: k-token shingles hashed to 64-bit.
 
-    Grams are assembled by zipping k shifted slices of the token array
-    (arrays_zip of slice(toks, 1..k, n-k+1)) and exploding — a pure
-    narrow projection: no shuffle at all, everything inside codegen.
-    Measured 1.7x faster at sf0.1 than the previous lead()-window
-    formulation (whose WindowExec shuffled and sorted by doc_id) and
-    7.5x+ over transform() lambdas (HOFs evaluate interpreted, per
-    element). Duplicate shingles within a doc are NOT removed: min() is
-    duplicate-blind, so the MinHash signature is identical and we skip
-    a distinct shuffle. A doc with fewer than k tokens emits its whole
-    text as one shingle (slice caps at one gram; concat_ws skips the
-    nulls arrays_zip pads with)."""
-    toks = F.split(_norm_text(F.col(text_col)), " ")
-    m = F.greatest(F.size(toks) - (k - 1), F.lit(1))
-    zipped = F.arrays_zip(*[F.slice(toks, i + 1, m).alias(f"t{i}") for i in range(k)])
-    gram = F.concat_ws(" ", *[F.col(f"g.t{i}") for i in range(k)])
+    Grams come from text._zip_grams, exploded: a pure narrow
+    projection, no shuffle at all. Duplicate shingles within a doc are
+    NOT removed: min() is duplicate-blind, so the MinHash signature is
+    identical and we skip a distinct shuffle. A doc with fewer than k
+    tokens emits its whole text as one shingle."""
+    toks = F.split(norm_text(F.col(text_col)), " ")
+    zipped, (gram,) = _zip_grams(toks, (k,), whole=True)
     return docs.select("doc_id", F.explode(zipped).alias("g")).select(
         "doc_id", F.xxhash64(gram).alias("shingle")
     )
@@ -483,7 +470,7 @@ def token_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     explode distinct tokens -> self-join on token -> |A∩B| per pair ->
     Jaccard with per-doc set sizes. Quadratic against a common-vocab
     corpus: at scale, run on LSH candidates instead (minhash_dedup)."""
-    toks = docs.select("doc_id", F.explode(F.array_distinct(F.split(_norm_text(F.col("text")), " "))).alias("tok"))
+    toks = docs.select("doc_id", F.explode(F.array_distinct(F.split(norm_text(F.col("text")), " "))).alias("tok"))
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     a, b = toks.alias("a"), toks.alias("b")
     inter = (
@@ -963,7 +950,6 @@ def source_overlap_matrix(
     scale: C(s,2) pairs each) are dropped FAIL-LOUD via the
     dropped_grams accounting row (source='__dropped_grams__') rather
     than silently, mirroring lsh_dropped_buckets."""
-    from .curation import _gram_rows
     from ..functions.partitioning import fan_out_scan
 
     # r16: fan the raw text out before the 8-gram assembly — the

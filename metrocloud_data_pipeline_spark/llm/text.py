@@ -9,6 +9,15 @@ Python UDFs — so each op is a single scan at 100 TB:
   profiles (broadcast join; returns best-scoring language).
 - fingerprint: deterministic document fingerprint (md5 of normalized
   prefix + length bucket) for cheap near-exact clustering.
+
+The text tier's tokenizer rules live here once, and llm/curation.py and
+llm/dedup.py use them:
+- norm_text: lowercase, trim, collapse whitespace runs to one space —
+  the normalized form every gram, digest and token-set key reads;
+- _zip_grams: the gram assembly (zip shifted slices of a token array,
+  join each position's tokens);
+- _gram_rows / _tagged_gram_rows: the (id, gram) and (id, n, gram)
+  occurrence rows over normalized text.
 """
 
 from __future__ import annotations
@@ -17,8 +26,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round6
+from ..functions.partitioning import fan_out_scan
 
 _WS = r"\s+"
+
+
+def norm_text(c: F.Column) -> F.Column:
+    """Lowercased, trimmed text with each whitespace run collapsed to one
+    space. `trim` strips spaces only, so a leading tab or trailing
+    newline survives as one edge space."""
+    return F.regexp_replace(F.lower(F.trim(c)), _WS, " ")
 
 
 def tokens_col(text=None) -> F.Column:
@@ -26,6 +43,44 @@ def tokens_col(text=None) -> F.Column:
     trimmed = F.trim(F.col("text") if text is None else text)
     return F.when(F.length(trimmed) == 0, F.array().cast("array<string>")).otherwise(
         F.split(trimmed, _WS)
+    )
+
+
+def _zip_grams(
+    toks: F.Column, ns: tuple, sep: str = " ", whole: bool = False
+) -> tuple[F.Column, list[F.Column]]:
+    """The gram assembly: arrays_zip of max(ns) shifted slices of the
+    token array `toks`, one struct per start position p of a complete
+    min(ns)-gram. Field t{j} is token p+j, null past the end (arrays_zip
+    pads the shorter slices). With `whole`, an array shorter than
+    min(ns) still gives position 0, so its whole text is one gram.
+
+    Returns (zipped, grams): explode or posexplode `zipped` as `g`;
+    grams[i] joins the first ns[i] tokens of g with `sep` (concat_ws
+    skips the nulls). A narrow projection inside codegen: no shuffle and
+    no per-document sort, where the lead()-window form it replaced
+    shuffled and sorted by document before a single gram existed
+    (1.5-1.7x at sf0.1), and 7.5x+ over transform() lambdas, which
+    evaluate interpreted, per element."""
+    m = F.greatest(F.size(toks) - (min(ns) - 1), F.lit(1 if whole else 0))
+    zipped = F.arrays_zip(*[F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(max(ns))])
+    return zipped, [F.concat_ws(sep, *[F.col(f"g.t{j}") for j in range(n)]) for n in ns]
+
+
+def _gram_rows(docs: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
+    """(id, gram) rows, one per gram OCCURRENCE: n consecutive tokens of
+    norm_text joined by single spaces — the gram stream of the
+    contamination probes, the corpus LMs (bigram_surprisal,
+    kn_surprisal) and the per-source panels. Complete grams only: a doc
+    shorter than n tokens contributes none (empty text splits to one ""
+    token, so it gives a "" unigram). The explode inherits the input's
+    split count; callers whose explode feeds an eager checkpoint fan the
+    input out first (fan_out_scan)."""
+    zipped, (gram,) = _zip_grams(F.col("_toks"), (n,))
+    return (
+        docs.select(F.col(id_col), F.split(norm_text(F.col("text")), " ").alias("_toks"))
+        .select(F.col(id_col), F.explode(zipped).alias("g"))
+        .select(F.col(id_col), gram.alias("gram"))
     )
 
 
@@ -136,10 +191,9 @@ def fingerprint(docs: DataFrame, prefix_chars: int = 64) -> DataFrame:
     """Cheap document fingerprint: md5 over the whitespace-normalized
     prefix, plus a length bucket — groups trivially-identical docs
     without a full-text compare."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS, " ")
     return docs.select(
         "doc_id",
-        F.md5(F.substring(norm, 1, prefix_chars)).alias("prefix_fp"),
+        F.md5(F.substring(norm_text(F.col("text")), 1, prefix_chars)).alias("prefix_fp"),
         F.floor(F.col("n_chars") / 100).cast("int").alias("len_bucket"),
     )
 
@@ -150,24 +204,15 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5) -> DataFrame:
     window-minimum hash, emit the distinct (doc_id, fp) set.
 
     md5 (not xxhash64) so the oracle twin is bit-identical in DuckDB.
-    Gram assembly zips k shifted slices of the token array and
-    posexplodes — a narrow codegen projection whose pos IS the gram
+    Gram assembly is _zip_grams, posexploded — its pos IS the gram
     position, so the md5 is computed map-side and the only shuffle is
-    the window-min's (doc_id, pos) sort over fixed-width hash rows
-    (the previous lead()-window assembly paid that same shuffle BEFORE
-    any gram existed, then built grams post-sort). A doc shorter than
-    k tokens emits its whole text as one gram (slice caps at one gram;
-    concat_ws skips arrays_zip's null padding) — same output as before.
+    the window-min's (doc_id, pos) sort over fixed-width hash rows. A
+    doc shorter than k tokens emits its whole text as one gram.
     Matching fp overlap between two docs localizes shared passages,
     not just whole-doc similarity."""
     from pyspark.sql.window import Window
 
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    m = F.greatest(F.size(F.col("_toks")) - (k - 1), F.lit(1))
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("_toks"), i + 1, m).alias(f"t{i}") for i in range(k)]
-    )
-    gram = F.concat_ws(" ", *[F.col(f"g.t{i}") for i in range(k)])
+    zipped, (gram,) = _zip_grams(F.col("_toks"), (k,), whole=True)
     # r16 measured NEGATIVE, reverted: fanning the text ahead of this
     # explode (the KN/substring move) A/B'd at 1.40 -> 1.67 s on
     # winnow_overlap_pairs and flat on the other two winnow consumers —
@@ -178,22 +223,12 @@ def winnow_fingerprints(docs: DataFrame, k: int = 4, w: int = 5) -> DataFrame:
     # the whole-query serializer here the way the KN eager checkpoints
     # were).
     gh = (
-        docs.select("doc_id", F.split(norm, " ").alias("_toks"))
+        docs.select("doc_id", F.split(norm_text(F.col("text")), " ").alias("_toks"))
         .select("doc_id", F.posexplode(zipped).alias("pos", "g"))
         .select("doc_id", "pos", F.md5(gram).alias("gh"))
     )
     win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
     return gh.select("doc_id", F.min("gh").over(win).alias("fp")).distinct()
-
-
-def _term_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, term) rows: whitespace-normalized lowercase tokens.
-    Empty documents emit no rows (explode of an empty array)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS, " ")
-    toks = F.when(F.length(norm) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(norm, " ")
-    )
-    return docs.select("doc_id", F.explode(toks).alias("term"))
 
 
 def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
@@ -222,7 +257,7 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     write instead of a second corpus pass."""
     from pyspark.sql.window import Window
 
-    terms = _term_rows(docs)
+    terms = docs.select("doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term"))
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint()
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.select(F.count(F.lit(1)).alias("_n"))
@@ -267,7 +302,7 @@ def vocab_coverage(docs: DataFrame, top_n: int = 100) -> DataFrame:
     # same rationale as tfidf's tf materialization (exchange reuse is
     # best-effort, not contractual)
     counts = (
-        _term_rows(docs)
+        docs.select(F.explode(tokens_col(F.lower(F.col("text")))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("term_count"))
         .localCheckpoint()
@@ -308,7 +343,7 @@ def unigram_surprisal(docs: DataFrame) -> DataFrame:
     shuffle rejoin on term and a per-doc aggregate. tf is checkpointed
     once (shared by the probability and scoring branches — same
     rationale as tfidf_top_terms)."""
-    terms = _term_rows(docs)
+    terms = docs.select("doc_id", F.explode(tokens_col(F.lower(F.col("text")))).alias("term"))
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint()
     term_counts = tf.groupBy("term").agg(F.sum("tf").alias("term_count"))
     total = term_counts.select(F.sum("term_count").alias("_total"))
@@ -392,9 +427,9 @@ def substring_dup_spans(docs: DataFrame, min_tokens: int = 50) -> DataFrame:
     pos+L-1] intervals reproduces the paper's excise set exactly — no
     suffix array, three shuffles, all linear in corpus tokens:
 
-      1. gram assembly is the winnowing zip-slice projection (narrow,
-         codegen, md5 map-side); docs shorter than L emit nothing (a
-         doc that short cannot contain a >=L dup);
+      1. gram assembly is _zip_grams (narrow, codegen, md5 map-side);
+         docs shorter than L emit nothing (a doc that short cannot
+         contain a >=L dup);
       2. dup marking: count per gram hash (map-side partial combine
          collapses boilerplate hot keys before the exchange), then a
          left-semi join of positions against the >=2 hashes (AQE
@@ -417,24 +452,17 @@ def substring_dup_spans(docs: DataFrame, min_tokens: int = 50) -> DataFrame:
     L = int(min_tokens)
     if L < 2:
         raise ValueError(f"substring_dup_spans: min_tokens must be >= 2, got {L}")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS, " ")
     # r16: fan the raw text out before tokenization — the eager token
     # checkpoint otherwise materializes at the scan's width (ONE local
     # task), serializing the tokenize AND pinning the gram assembly +
     # md5 that read the checkpoint to that width. No-op at scale.
-    from ..functions.partitioning import fan_out_scan
-
     toks = (
         fan_out_scan(docs.select("doc_id", "text"))
-        .select("doc_id", F.split(norm, " ").alias("_toks"))
+        .select("doc_id", F.split(norm_text(F.col("text")), " ").alias("_toks"))
         .where(F.size("_toks") >= L)
         .localCheckpoint()  # two consumers: gram assembly + span-text lookup
     )
-    m = F.size(F.col("_toks")) - (L - 1)
-    zipped = F.arrays_zip(
-        *[F.slice(F.col("_toks"), i + 1, m).alias(f"t{i}") for i in range(L)]
-    )
-    gram = F.concat_ws(" ", *[F.col(f"g.t{i}") for i in range(L)])
+    zipped, (gram,) = _zip_grams(F.col("_toks"), (L,))
     grams = (
         toks.select("doc_id", F.posexplode(zipped).alias("pos", "g"))
         .select("doc_id", F.col("pos").cast("long").alias("pos"), F.md5(gram).alias("gh"))
@@ -498,8 +526,7 @@ def excise_dup_spans(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans"),
         F.sum("n_tokens").cast("long").alias("n_tokens_removed"),
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS, " ")
-    toks = docs.select("doc_id", F.split(norm, " ").alias("_toks"))
+    toks = docs.select("doc_id", F.split(norm_text(F.col("text")), " ").alias("_toks"))
     kept = F.when(F.col("_spans").isNull(), F.col("_toks")).otherwise(
         F.filter(
             "_toks",
@@ -551,40 +578,6 @@ def token_count_histogram(docs: DataFrame, width: int = 50) -> DataFrame:
     )
 
 
-def _lm_gram_rows(docs: DataFrame, order: int) -> DataFrame:
-    """(doc_id, gram) rows, one per occurrence of `order` consecutive
-    whitespace-normalized lowercase tokens joined by single spaces —
-    the gram stream of the corpus-LM scorers (bigram_surprisal,
-    kn_surprisal). Docs with fewer than `order` tokens emit no row.
-
-    `order` shifted slices folded with zip_with stay in whole-stage
-    codegen; the transform(sequence(1, m), i -> slice(toks, i, n)) form
-    evaluates the dynamic-start slice interpreted per element (measured
-    8.5 s vs 1.7 s warm for the same 250k 5-grams at sf0.1). The raw
-    text is fanned out BEFORE tokenization (r16): the explode otherwise
-    inherits the documents scan's split count, ONE task locally, so
-    each scorer's eager gram checkpoint ran serially (2.0 s of a 4.6 s
-    kn5 query on one core); no-op at any real scan width."""
-    from ..functions.partitioning import fan_out_scan
-
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS, " ")
-    toks = F.when(F.length(norm) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(norm, " ")
-    )
-    # slice length must be >= 0: a doc shorter than `order` would
-    # otherwise make it negative and slice() raise
-    # INVALID_PARAMETER_VALUE.LENGTH
-    m = F.greatest(F.size(toks) - F.lit(order - 1), F.lit(0))
-    grams = F.slice(toks, 1, m)
-    for i in range(1, order):
-        grams = F.zip_with(
-            grams, F.slice(toks, i + 1, m), lambda a, b: F.concat(a, F.lit(" "), b)
-        )
-    return fan_out_scan(docs.select("doc_id", "text")).select(
-        "doc_id", F.explode(grams).alias("gram")
-    )
-
-
 def bigram_surprisal(docs: DataFrame) -> DataFrame:
     """Per-document mean BIGRAM surprisal in bits — the next step up
     from unigram_surprisal's bag-of-words LM: repetitive/templated text
@@ -594,15 +587,15 @@ def bigram_surprisal(docs: DataFrame) -> DataFrame:
     P(t|p) = c(p,t) / c(p,·), so the score is deterministic and
     oracle-checkable (no trained artifact).
 
-    Pipeline: bigrams come from _lm_gram_rows (zip_with over two array
-    slices, no window over positions), explode once; the (doc, bigram,
-    prev) frame is checkpointed and feeds BOTH count aggregates and the
+    Pipeline: bigrams come from _gram_rows (no window over positions)
+    over the fanned-out text, explode once; the (doc, bigram, prev)
+    frame is checkpointed and feeds BOTH count aggregates and the
     scoring join — one pass over the text, two map-side-combined
     aggregates, one shuffle rejoin. Hot contexts (stopwords) are the
     skew; AQE splits them — same posture as tfidf's term join. Docs
     with < 2 tokens emit no row (no bigram to score)."""
     rows = (
-        _lm_gram_rows(docs, 2)
+        _gram_rows(fan_out_scan(docs.select("doc_id", "text")), 2)
         .withColumn("prev", F.substring_index("gram", " ", 1))
         .localCheckpoint()
     )
@@ -945,12 +938,9 @@ def sentence_span_dedup(docs: DataFrame, span_sentences: int = 3) -> DataFrame:
     )
     base = docs.select("doc_id", sents.alias("_sents"))
 
-    m = F.size("_sents") - (k - 1)
-    zipped = F.arrays_zip(*[F.slice("_sents", i + 1, m).alias(f"t{i}") for i in range(k)])
-    span_text = F.concat_ws("\x1f", *[F.col(f"g.t{i}") for i in range(k)])
+    zipped, (span_text,) = _zip_grams(F.col("_sents"), (k,), sep="\x1f")
     spans = (
-        base.where(F.size("_sents") >= k)
-        .select("doc_id", F.posexplode(zipped).alias("start", "g"))
+        base.select("doc_id", F.posexplode(zipped).alias("start", "g"))
         .select("doc_id", "start", F.md5(span_text).alias("h"))
     )
     agg = spans.groupBy("h").agg(
@@ -1030,16 +1020,12 @@ def subword_fertility_stats(docs: DataFrame, piece_len: int = 4) -> DataFrame:
 def _tagged_gram_rows(docs: DataFrame, ns: tuple, id_col: str) -> DataFrame:
     """(id, n, gram) rows for EVERY n in `ns` from ONE pass over the
     text (r15): the per-n union form scanned + normalized + split the
-    corpus once per n. Here the token array is zipped with its
-    max(ns)-1 shifted slices once; each token position then emits its
-    (n, gram) struct for every n whose gram is complete at that
-    position (t_{n-1} non-null — arrays_zip null-pads the shorter
-    slices, and slices are contiguous so only the tail can be null),
-    via a literal struct array + array_compact + explode, all inside
-    codegen (no interpreted HOF lambdas). Gram strings and
-    multiplicities are identical to _gram_rows for each n: gram i =
-    tokens[i..i+n-1], complete grams only, docs shorter than n
-    contribute no n-gram.
+    corpus once per n. Here _zip_grams zips the token array with its
+    max(ns)-1 shifted slices once; each position then emits its (n,
+    gram) struct for every n whose gram is complete there (t{n-1}
+    non-null), via a literal struct array + array_compact + explode,
+    all inside codegen (no interpreted HOF lambdas). Gram strings and
+    multiplicities are identical to _gram_rows for each n.
 
     The RAW TEXT projection is fan_out_scan'd: fusing the per-n
     subplans also fused their scan-stage work onto ONE task on a
@@ -1050,35 +1036,22 @@ def _tagged_gram_rows(docs: DataFrame, ns: tuple, id_col: str) -> DataFrame:
     the exchange so compact strings cross it, not token arrays
     (per-element array serialization made the exchange cost what the
     parallelism saved on the first cut)."""
-    from ..functions.partitioning import fan_out_scan
-
     # A duplicate n in `ns` would emit the same (n, gram) struct twice
     # per position and double-count total_grams into one merged agg row
     # (the old per-n union emitted two separate identical rows instead)
     # — dedupe up front so both shapes agree (ADVICE r15).
     ns = tuple(sorted(set(ns)))
-    max_n = max(ns)
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    sz = F.size(F.col("_toks"))
-    slices = [
-        F.slice(F.col("_toks"), j + 1, F.greatest(sz - j, F.lit(0))).alias(f"s{j}")
-        for j in range(max_n)
-    ]
-    zipped = F.arrays_zip(*slices)
+    zipped, grams = _zip_grams(F.col("_toks"), ns)
     per_pos = [
         F.when(
-            F.col(f"g.s{n - 1}").isNotNull(),
-            F.struct(
-                F.lit(n).cast("int").alias("n"),
-                F.concat_ws(" ", *[F.col(f"g.s{j}") for j in range(n)]).alias("gram"),
-            ),
+            F.col(f"g.t{n - 1}").isNotNull(),
+            F.struct(F.lit(n).cast("int").alias("n"), gram.alias("gram")),
         )
-        for n in ns
+        for n, gram in zip(ns, grams)
     ]
     return (
         fan_out_scan(docs.select(F.col(id_col), "text"))
-        .select(F.col(id_col), F.split(norm, " ").alias("_toks"))
-        .where(sz >= min(ns))
+        .select(F.col(id_col), F.split(norm_text(F.col("text")), " ").alias("_toks"))
         .select(F.col(id_col), F.explode(zipped).alias("g"))
         .select(F.col(id_col), F.explode(F.array_compact(F.array(*per_pos))).alias("t"))
         .select(F.col(id_col), F.col("t.n").alias("n"), F.col("t.gram").alias("gram"))
@@ -1135,15 +1108,12 @@ def char_entropy_panel(docs: DataFrame, low_bits: float = 3.5) -> DataFrame:
     the exchange carries ~|alphabet| rows per doc, not one row per
     character. Entropy folds in a second doc-keyed agg. Linear, two
     narrow shuffles, no UDFs."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS, " ")
-    chars = F.filter(F.split(norm, ""), lambda c: c != F.lit(""))
+    chars = F.filter(F.split(norm_text(F.col("text")), ""), lambda c: c != F.lit(""))
     # r16: fan the raw text out before the per-CHARACTER explode — the
     # split-to-chars + (doc, char) partial agg ran 0.53 s of this
     # 0.91 s query on one local scan task (timeline); unlike the token-
     # level combines the per-doc work here is thousands of array cells.
     # Isolated A/B below; no-op at real scan widths.
-    from ..functions.partitioning import fan_out_scan
-
     counts = (
         fan_out_scan(docs.where(F.length(F.trim("text")) > 0).select("doc_id", "text"))
         .select("doc_id", F.explode(chars).alias("ch"))
@@ -1189,7 +1159,6 @@ def zipf_slope_by_source(docs: DataFrame, top_n: int = 100) -> DataFrame:
     partial-agg count, one per-source rank window over the VOCAB-sized
     count frame (never corpus tokens), then the OLS moments fold in a
     single map-side-combined agg — 2 narrow shuffles, all codegen."""
-    from .curation import _gram_rows
     from pyspark.sql import Window
 
     counts = (
@@ -1302,7 +1271,11 @@ def kn_surprisal(
     # a lower level's group-by columns: its suffix and everything under it
     below = {k: names[names.index(f"s{k}"):] for k in range(2, n)}
     count = F.count(F.lit(1))
-    rows = _lm_gram_rows(docs, n)
+    # the raw text is fanned out before tokenization (r16): the explode
+    # otherwise inherits the documents scan's split count, ONE task
+    # locally, so the eager gram checkpoint ran serially (2.0 s of a
+    # 4.6 s kn5 query on one core); no-op at any real scan width
+    rows = _gram_rows(fan_out_scan(docs.select("doc_id", "text")), n)
     if not hashed:
         occ = rows.localCheckpoint()
         top, keys = "gram", {k: [f"s{k}"] for k in below}
@@ -1501,13 +1474,14 @@ def langid_trained_report(
     optimizer ever shuffles."""
     from .curation import lr_fit_ovr
 
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), _WS, " ")
     # null declared lang coalesced to '' (the ccnet_perplexity_buckets
     # convention): left raw, predicted == lang evaluates to NULL for
     # the whole group and the report's match counts/agreements go NULL
     # instead of 0 — and a NULL class label would poison the argmax
     base = docs.select(
-        "doc_id", F.coalesce(F.col("lang"), F.lit("")).alias("lang"), norm.alias("t")
+        "doc_id",
+        F.coalesce(F.col("lang"), F.lit("")).alias("lang"),
+        norm_text(F.col("text")).alias("t"),
     )
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.length("t") - F.lit(2), F.lit(0))),

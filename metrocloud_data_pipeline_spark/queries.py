@@ -5873,9 +5873,9 @@ def bigram_surprisal(spark, sf_dir):
     (P(t|p) = c(p,t)/c(p,·)) — the sequence-aware upgrade over
     unigram_surprisal: templated text whose word PAIRS are common
     scores low even when its words are individually rare. Bigrams from
-    zip_with over two array slices (pure codegen), one explode; the
-    checkpointed (doc, bigram, prev) frame feeds both count aggregates
-    and the scoring join."""
+    the text tier's one gram-row constructor (arrays_zip of two token
+    slices, codegen), one explode; the checkpointed (doc, bigram, prev)
+    frame feeds both count aggregates and the scoring join."""
     docs = load(spark, sf_dir, "documents").where(F.length(F.trim("text")) > 0)
     return text.bigram_surprisal(docs)
 

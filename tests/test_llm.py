@@ -3040,8 +3040,8 @@ def test_ngram_diversity_flags_repetitive_source(spark):
 
 def test_ngram_diversity_duplicate_ns_not_double_counted(spark):
     """ADVICE r15: a duplicate n in `ns` must not double-count
-    total_grams into the merged (source, n) row — _tagged_gram_rows
-    dedupes ns at entry so (2, 2) behaves exactly like (2,)."""
+    total_grams into the merged (source, n) row — the multi-n gram
+    rows dedupe ns at entry so (2, 2) behaves exactly like (2,)."""
     docs = spark.createDataFrame(
         [(0, "a b c d", "en", "s0", 7)],
         "doc_id long, text string, lang string, source string, n_chars long",
@@ -3050,6 +3050,83 @@ def test_ngram_diversity_duplicate_ns_not_double_counted(spark):
     dup = {r["n"]: r for r in text.ngram_diversity(docs, ns=(2, 2)).collect()}
     assert dup == once
     assert dup[2]["total_grams"] == 3
+
+
+def test_text_tier_edge_texts_pin_token_forms(spark):
+    """Edge texts the generated corpora never hold (empty, spaces only, a
+    leading tab, a trailing newline, \\r\\n, one token, NULL) pin which
+    token form each text-tier key reads. Gram, digest, token-set and
+    LM-token keys split norm_text on " ", so empty text is the one token
+    [""]; the tf-idf term stream reads tokens_col, which gives []. trim
+    strips spaces only, so an edge tab or newline survives norm_text as
+    a space and splits off a "" token in both forms."""
+    import hashlib
+
+    edge = [
+        (0, ""), (1, "   "), (2, "\tAlpha beta"), (3, "alpha Beta\n"),
+        (4, "alpha\r\nbeta  gamma"), (5, "Solo"), (6, None), (7, "  a  b   c "),
+        (8, " \t "), (9, "x y z w"),
+    ]
+    docs = spark.createDataFrame(
+        [(i, t, "en", "s0", len(t or "")) for i, t in edge],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    toks = {
+        0: [""], 1: [""], 2: ["", "alpha", "beta"], 3: ["alpha", "beta", ""],
+        4: ["alpha", "beta", "gamma"], 5: ["solo"], 7: ["a", "b", "c"],
+        8: ["", ""], 9: ["x", "y", "z", "w"],
+    }
+
+    def grams(t, n, whole=False):
+        if whole and len(t) < n:
+            return [" ".join(t)]
+        return [" ".join(t[i:i + n]) for i in range(len(t) - n + 1)]
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    for n in (1, 2, 3):
+        got = {tuple(r) for r in curation.ngram_hashes(docs, n).collect()}
+        assert got == {(d, md5(g)) for d, t in toks.items() for g in grams(t, n)}, n
+    tagged = sorted(tuple(r) for r in text._tagged_gram_rows(docs, (1, 2, 3), "doc_id").collect())
+    assert tagged == sorted(
+        (d, n, g) for d, t in toks.items() for n in (1, 2, 3) for g in grams(t, n)
+    )
+
+    fps = set()
+    for d, t in toks.items():
+        h = [md5(g) for g in grams(t, 2, whole=True)]
+        fps |= {(d, min(h[i:i + 2])) for i in range(len(h))}
+    assert {tuple(r) for r in text.winnow_fingerprints(docs, k=2, w=2).collect()} == fps
+
+    shingle_grams = spark.createDataFrame(
+        [(d, g) for d, t in toks.items() for g in grams(t, 2, whole=True)],
+        "doc_id long, gram string",
+    ).select("doc_id", F.xxhash64("gram").alias("shingle"))
+    assert sorted(tuple(r) for r in dedup.shingles(docs, k=2).collect()) == sorted(
+        tuple(r) for r in shingle_grams.collect()
+    )
+
+    keys = {
+        r["doc_id"]: (r["s"], r["h"])
+        for r in docs.select(
+            "doc_id",
+            dedup.token_set(F.col("text")).alias("s"),
+            dedup.text_digest(F.col("text")).alias("h"),
+        ).collect()
+    }
+    assert keys == {
+        6: (None, None),
+        **{d: (list(dict.fromkeys(t)), md5(" ".join(t))) for d, t in toks.items()},
+    }
+    lm = curation.lm_token_rows(docs, F.lit(True)).select("doc_id", "token").collect()
+    assert sorted(tuple(r) for r in lm) == sorted((d, w) for d, t in toks.items() for w in t)
+
+    terms = {d: ([] if t == [""] else t) for d, t in toks.items()}
+    tf = text.tfidf_top_terms(docs, k=10).select("doc_id", "term", "tf").collect()
+    assert {tuple(r) for r in tf} == {
+        (d, w, t.count(w)) for d, t in terms.items() for w in t
+    }
 
 
 def test_char_entropy_extremes(spark):

@@ -362,28 +362,28 @@ def test_dedup_tier_defines_each_rule_once():
     band spec (unigram_bands over _band_buckets). A second copy is a
     fork the oracles and the stored band index no longer cover, and a
     function taking both num_perm and corpus_bands accepts a banding the
-    stored index cannot honour. Gate: 'md5(_norm_text' appears once in
-    the package, 'F.array_intersect' once in dedup.py, no other module
-    names _norm_text or _band_buckets, and no def takes both num_perm
-    and corpus_bands."""
+    stored index cannot honour. Gate: 'md5(norm_text' appears once in
+    the package, 'F.array_intersect' once in dedup.py, no module names a
+    private _norm_text copy, no other module names _band_buckets, and no
+    def takes both num_perm and corpus_bands."""
     import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "metrocloud_data_pipeline_spark"
     texts = {p: p.read_text() for p in pkg.rglob("*.py")}
     dedup_py = pkg / "llm" / "dedup.py"
-    assert sum(t.count("md5(_norm_text") for t in texts.values()) == 1, (
+    assert sum(t.count("md5(norm_text") for t in texts.values()) == 1, (
         "digest normalized text through dedup.text_digest"
     )
     assert texts[dedup_py].count("F.array_intersect") == 1, (
         "compute set Jaccard through dedup._set_jaccard"
     )
+    copies = [str(p.relative_to(pkg)) for p, t in texts.items() if "_norm_text" in t]
+    assert not copies, f"_norm_text in {copies} — normalize through text.norm_text"
     leaks = [
-        f"{p.relative_to(pkg)}: {name}"
+        f"{p.relative_to(pkg)}: _band_buckets"
         for p, t in texts.items()
-        if p != dedup_py
-        for name in ("_norm_text", "_band_buckets")
-        if name in t
+        if p != dedup_py and "_band_buckets" in t
     ]
     assert not leaks, f"private dedup rules used outside dedup.py: {leaks}"
     both = [
@@ -398,3 +398,48 @@ def test_dedup_tier_defines_each_rule_once():
         f"num_perm next to corpus_bands: {both} — a stored band index is "
         "built at dedup.NUM_PERM / dedup.BANDS only"
     )
+
+
+def test_text_tier_defines_each_rule_once():
+    """llm/text.py is the one home of the text tier's tokenizer rules:
+    the normalizer (norm_text), the gram assembly (_zip_grams) and the
+    (id, gram) row constructor (_gram_rows); llm/curation.py and
+    llm/dedup.py import them. A second copy is a fork the row hashes of
+    the generated corpora cannot see, because none of them holds an
+    edge text where two spellings differ. Gate: 'F.lower(F.trim(',
+    'F.arrays_zip(' and 'def _gram_rows(' appear once in the package,
+    all in text.py; the retired constructors _lm_gram_rows and
+    _term_rows are gone; and no llm module imports _gram_rows from
+    curation."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "metrocloud_data_pipeline_spark"
+    texts = {p: p.read_text() for p in pkg.rglob("*.py")}
+    rules = (
+        ("F.lower(F.trim(", "text.norm_text"),
+        ("F.arrays_zip(", "text._zip_grams"),
+        ("def _gram_rows(", "text._gram_rows"),
+    )
+    for rule, home in rules:
+        sites = {
+            p.relative_to(pkg).as_posix(): t.count(rule) for p, t in texts.items() if rule in t
+        }
+        assert sites == {"llm/text.py": 1}, f"{rule} at {sites} — use {home}"
+    retired = [
+        f"{p.relative_to(pkg)}: {name}"
+        for p, t in texts.items()
+        for name in ("_lm_gram_rows", "_term_rows")
+        if name in t
+    ]
+    assert not retired, f"retired gram constructors: {retired} — use text._gram_rows"
+    imports = [
+        p.relative_to(pkg).as_posix()
+        for p, t in texts.items()
+        if p.parent == pkg / "llm"
+        for node in ast.walk(ast.parse(t))
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").split(".")[-1] == "curation"
+        and "_gram_rows" in [a.name for a in node.names]
+    ]
+    assert not imports, f"_gram_rows imported from curation in {imports} — it lives in text.py"
