@@ -162,20 +162,32 @@ def enrich_defaults(df: DataFrame, devices_dim: DataFrame | None = None) -> Data
     return out.drop(*[c for c in out.columns if c.startswith("dim_")])
 
 
+def threshold_bounds(device_type: Column) -> tuple[Column, Column]:
+    """OP-T7's per-type (thr_min, thr_max) from S.ANOMALY_THRESHOLDS
+    (config.yaml:152-159): two map-literal lookups, NULL for a type the
+    table does not list and for a NULL type. The one reader of the
+    table: detect_anomalies and streaming.pipeline.alert_columns both
+    flag against it. It is an expression, not a join against a
+    thresholds frame, so a micro-batch starts no broadcast job for it."""
+
+    def lookup(i: int) -> Column:
+        pairs = [F.lit(x) for dt, bounds in S.ANOMALY_THRESHOLDS.items() for x in (dt, float(bounds[i]))]
+        return F.create_map(*pairs)[device_type]
+
+    return lookup(0), lookup(1)
+
+
 def detect_anomalies(df: DataFrame) -> DataFrame:
     """OP-T7: per-channel threshold anomaly detection
-    (ruuvitag_adapter.py:470-511) via a broadcast join against the small
-    thresholds dimension (config.yaml:152-159) — at scale this is a
-    map-side hash join, never a shuffle."""
-    spark = df.sparkSession
-    rows = [(dt, lo, hi) for dt, (lo, hi) in S.ANOMALY_THRESHOLDS.items()]
-    thresholds = spark.createDataFrame(rows, "device_type string, thr_min double, thr_max double")
-    joined = df.join(F.broadcast(thresholds), "device_type", "left")
-    flag = F.when(
-        F.col("thr_min").isNotNull(),
-        (F.col("value") < F.col("thr_min")) | (F.col("value") > F.col("thr_max")),
-    ).otherwise(F.lit(False))
-    return joined.withColumn("is_anomaly", flag).drop("thr_min", "thr_max")
+    (ruuvitag_adapter.py:470-511) against threshold_bounds — a row-local
+    expression, never a shuffle. A type without thresholds is never an
+    anomaly; a NULL value leaves the flag NULL. device_type leads the
+    output columns, so the rejects table keeps its column order."""
+    thr_min, thr_max = threshold_bounds(F.col("device_type"))
+    flag = F.when(thr_min.isNotNull(), (F.col("value") < thr_min) | (F.col("value") > thr_max)).otherwise(
+        F.lit(False)
+    )
+    return df.select("device_type", *[c for c in df.columns if c != "device_type"]).withColumn("is_anomaly", flag)
 
 
 REQUIRED_FIELDS = ("device_id", "device_type", "unit")

@@ -15,8 +15,9 @@ maps to date-partitioned parquet tables plus scheduled jobs:
   (segmentby device_id, orderby ts DESC, init.sql:82-85) == rewrite cold
   partitions sorted within partitions by (device_id, timestamp) with
   ZSTD — same locality + min/max-stats effect for device/time predicates.
-- idempotent_append (OP-D4): ON CONFLICT DO NOTHING == dropDuplicates on
-  the natural key + anti-join against the existing partition slice.
+- idempotent_append (OP-D4): ON CONFLICT DO NOTHING == one aggregation
+  on the natural key over the batch and the stored keys of the
+  partitions it touches: one row per new key, none for a stored one.
 - full_history (extension): main UNION archive for cross-tier queries.
 """
 
@@ -455,17 +456,29 @@ def _any_null(keys: tuple[str, ...]):
     return functools.reduce(operator.or_, (F.col(k).isNull() for k in keys))
 
 
-def _dedup_on_natural_key(df: DataFrame, dedup_keys: tuple[str, ...]) -> DataFrame:
+def _dedup_on_natural_key(
+    df: DataFrame, dedup_keys: tuple[str, ...], existing: DataFrame | None = None
+) -> DataFrame:
     """The ON CONFLICT stand-in of both natural-key sinks
-    (idempotent_append here, sources.jdbc_io.write_jdbc): dropDuplicates
-    on the key, refusing a row with a NULL key component fail-loud.
-    dropDuplicates treats NULLs as EQUAL, so such rows would silently
-    collapse to one arbitrary survivor, and a NULL never matches an
-    anti-join, so a re-delivered batch would re-append them; the
-    reference's NOT NULL primary key rejects them outright. The
-    raise_error rides the first key column ahead of the dedup, so the
-    check runs in the write's first stage (the write_partitioned
-    pattern — no extra scan), and valid rows pass through unchanged."""
+    (idempotent_append here, sources.jdbc_io.write_jdbc): one row per
+    natural key of `df`, minus every key `existing` (a frame of stored
+    keys) already holds, refusing a row with a NULL key component
+    fail-loud.
+
+    One aggregation does both halves: the batch rows, packed into one
+    struct and tagged unseen, are unioned with the stored keys, tagged
+    seen with a NULL struct; a group-by on the key keeps max(seen) and
+    the first non-NULL struct, drops the seen groups and unpacks the
+    struct. That is one shuffle over both inputs. The survivor of an
+    in-batch duplicate group is first(), as under dropDuplicates.
+
+    A NULL key would group with every other NULL (silently collapsing
+    such rows to one arbitrary survivor) and never equals a stored key
+    (so a re-delivered batch would re-append it); the reference's NOT
+    NULL primary key rejects it outright. The raise_error rides the
+    first key column ahead of the shuffle, so the check runs in the
+    write's first stage (the write_partitioned pattern — no extra
+    scan), and valid rows pass through unchanged."""
     k0 = dedup_keys[0]
     guarded = (
         F.when(
@@ -473,7 +486,7 @@ def _dedup_on_natural_key(df: DataFrame, dedup_keys: tuple[str, ...]) -> DataFra
             F.raise_error(
                 F.lit(
                     f"{_NULL_NATURAL_KEY} {tuple(dedup_keys)} — such rows have "
-                    "no ON CONFLICT identity and dropDuplicates would silently "
+                    "no ON CONFLICT identity and the dedup would silently "
                     "collapse them; validate or reject upstream"
                 )
             ),
@@ -481,7 +494,19 @@ def _dedup_on_natural_key(df: DataFrame, dedup_keys: tuple[str, ...]) -> DataFra
         .otherwise(F.col(k0))
         .cast(df.schema[k0].dataType)
     )
-    return df.withColumn(k0, guarded).dropDuplicates(list(dedup_keys))
+    keys = list(dedup_keys)
+    values = [c for c in df.columns if c not in dedup_keys]
+    rows = df.withColumn(k0, guarded).select(*keys, F.lit(False).alias("_seen"), F.struct(*values).alias("_row"))
+    if existing is not None:
+        rows = rows.unionByName(
+            existing.select(*keys, F.lit(True).alias("_seen"), F.lit(None).cast(rows.schema["_row"].dataType).alias("_row"))
+        )
+    return (
+        rows.groupBy(*keys)
+        .agg(F.max("_seen").alias("_seen"), F.first("_row", ignorenulls=True).alias("_row"))
+        .where(~F.col("_seen"))
+        .select(*[c if c in dedup_keys else F.col("_row")[c].alias(c) for c in df.columns])
+    )
 
 
 def idempotent_append(
@@ -492,9 +517,9 @@ def idempotent_append(
     days: list[date] | None = None,
 ) -> int:
     """OP-D4: ON CONFLICT DO NOTHING (database.py:300) — dedup the batch on
-    the natural key, then anti-join against only the target partitions the
-    batch touches (partition-pruned read, not a full-table scan). Returns
-    the rows inserted.
+    the natural key and drop the keys already stored in the target
+    partitions the batch touches (partition-pruned read, not a
+    full-table scan). Returns the rows inserted.
 
     Pass `days` (the batch's event dates) when the caller already knows
     them — the streaming ingest body observes them on its one
@@ -510,17 +535,19 @@ def idempotent_append(
     is the correct trade.) `days=[]` returns 0 and writes nothing: the
     caller says the batch touches no partition.
 
-    The dedup and the anti-join then run exactly once, inside the
-    write: the dedup is _dedup_on_natural_key, whose NULL-key refusal
-    rides the write's first stage (no separate probe job), the
+    The dedup then runs exactly once, inside the write:
+    _dedup_on_natural_key aggregates the batch together with the
+    overlapping partitions' keys in one shuffle, and its NULL-key
+    refusal rides the write's first stage (no separate probe job). The
     overlapping partitions are read with the batch's own natural-key
     schema (no schema-inference job), and the inserted count is an
     Observation on the write itself, not a count() that would re-run
-    the anti-join. No rows, no write: an empty batch returns 0 before
-    anything touches `path`.
+    the dedup. So the append is two Spark jobs, the shuffle and the
+    write, with or without stored days. No rows, no write: an empty
+    batch returns 0 before anything touches `path`.
 
     A NULL natural-key component is refused with ValueError, before
-    any row lands: it never matches the anti-join, so a re-delivered
+    any row lands: it never equals a stored key, so a re-delivered
     batch would re-append the row EVERY retry — effectively-once
     silently broken for exactly the rows with no identity (the r11
     null-key sweep: scd2_merge / curate_batch's class)."""
@@ -542,15 +569,15 @@ def idempotent_append(
         days = facts["days"]
     if not days:
         return 0
-    deduped = _dedup_on_natural_key(batch, NATURAL_KEY)
     existing_days = set(list_partitions(path))
     overlap = [d for d in days if d in existing_days]
+    existing = None
     if overlap:
         key_schema = StructType([batch.schema[k] for k in NATURAL_KEY])
         existing = spark.read.schema(key_schema).option("basePath", path).parquet(
             *[_partition_dir(path, d) for d in overlap]
-        ).select(*NATURAL_KEY)
-        deduped = deduped.join(existing, on=list(NATURAL_KEY), how="left_anti")
+        )
+    deduped = _dedup_on_natural_key(batch, NATURAL_KEY, existing)
     inserted = Observation()
     try:
         write_partitioned(deduped.observe(inserted, F.count(F.lit(1)).alias("rows")), path, mode="append", ts_col=ts_col)

@@ -51,8 +51,8 @@ def write_jdbc(
     achieved the engine's way: pass dedup_keys to dedup the batch on
     its natural key before writing, through the guarded dedup it shares
     with maintenance.idempotent_append, which refuses a NULL key
-    component (the anti-join half of OP-D4 lives in
-    maintenance.idempotent_append for parquet; against a
+    component (dropping already-stored keys, the other half of OP-D4,
+    happens in maintenance.idempotent_append for parquet; against a
     live database the table's own PRIMARY KEY constraint is the final
     arbiter). num_partitions caps writer concurrency — at cluster scale
     an unthrottled 1000-task write is a connection storm on the

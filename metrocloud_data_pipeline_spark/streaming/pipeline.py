@@ -18,7 +18,7 @@ Structured Streaming:
   (parent_device, sensor_type) in update mode (state bounded by
   watermark).
 - OP-ST4 threshold alerting: alert_columns derives alert_level/reason
-  from the same broadcast thresholds as OP-T7.
+  from the same threshold lookup as OP-T7 (ingest.threshold_bounds).
 - OP-ST5 late/future data: withWatermark + the OP-T11 clamp.
 - OP-ST6 at-least-once + idempotent sink: checkpointed foreachBatch
   into maintenance.idempotent_append (dedup on natural key) ==
@@ -105,12 +105,14 @@ def run_ingest_stream(
     checkpoint; the day set goes to idempotent_append(days=...), so
     nothing is recomputed to learn a count or a target partition, and
     the append's NULL-key refusal rides its own write instead of a
-    probe job. That is 7 Spark jobs per batch once its day is in the
-    store (adaptive execution on, both side sinks set): two to
-    materialize the checkpoint, three for the append (its dedup stage,
-    the key scan of the overlapping partition, the write) and one write
-    per side sink. A batch with no valid rows
-    skips the append: no rows, no write."""
+    probe job. That is 5 Spark jobs per batch, whether or not its day
+    is already in the store (adaptive execution on, both side sinks
+    set): one to materialize the checkpoint (the OP-T7 thresholds are
+    an inline lookup, not a broadcast), two for the append (one shuffle
+    that dedups the batch and drops the stored keys of the overlapping
+    partitions, then the write) and one write per side sink, the
+    one-row metrics write in one task. A batch with no valid rows skips
+    the append: no rows, no write."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -132,8 +134,11 @@ def run_ingest_stream(
             maintenance.overwrite_batch_partition(rejected, rejects_path, batch_id)
         if metrics_path is not None:
             m = quality.metrics_record(observed)
+            # one partition, so the metrics write is one task rather than
+            # one per default-parallelism slice
+            row = (m["rows_in"], m["rows_valid"], m["rows_rejected"], m["anomalies"], m["validation_failure_rate"])
             metrics_row = spark.createDataFrame(
-                [(m["rows_in"], m["rows_valid"], m["rows_rejected"], m["anomalies"], m["validation_failure_rate"])],
+                spark.sparkContext.parallelize([row], 1),
                 "rows_in long, rows_valid long, rows_rejected long, anomalies long, validation_failure_rate double",
             )
             maintenance.overwrite_batch_partition(metrics_row, metrics_path, batch_id)
@@ -146,26 +151,26 @@ def alert_columns(readings: DataFrame) -> DataFrame:
     """OP-ST4: derive alert_level/alert_reason (consumer.py:359-508).
 
     CRITICAL: status ERROR or dead battery; WARNING: threshold breach.
-    Works identically on a batch or streaming DataFrame."""
-    spark = readings.sparkSession
-    rows = [(dt, lo, hi) for dt, (lo, hi) in S.ANOMALY_THRESHOLDS.items()]
-    thr = spark.createDataFrame(rows, "device_type string, thr_min double, thr_max double")
-    j = readings.join(F.broadcast(thr), "device_type", "left")
-    low = F.col("value") < F.col("thr_min")
-    high = F.col("value") > F.col("thr_max")
+    Works identically on a batch or streaming DataFrame. The thresholds
+    are ingest.threshold_bounds, the lookup OP-T7 flags with; device_type
+    leads the output columns, so the alerts table keeps its column
+    order."""
+    thr_min, thr_max = ingest.threshold_bounds(F.col("device_type"))
+    low = F.col("value") < thr_min
+    high = F.col("value") > thr_max
     critical = (F.col("status") == "ERROR") | (
         (F.col("device_type") == "battery_sensor") & (F.col("value") < S.BATTERY_MIN_VOLTAGE)
     )
     level = (
         F.when(critical, "CRITICAL")
-        .when(F.col("thr_min").isNotNull() & (low | high), "WARNING")
+        .when(thr_min.isNotNull() & (low | high), "WARNING")
         .otherwise(None)
     )
     reason = (
         F.when(F.col("status") == "ERROR", "device_error")
         .when((F.col("device_type") == "battery_sensor") & (F.col("value") < S.BATTERY_MIN_VOLTAGE), "low_battery")
-        .when(F.col("thr_min").isNotNull() & low, "below_threshold")
-        .when(F.col("thr_max").isNotNull() & high, "above_threshold")
+        .when(thr_min.isNotNull() & low, "below_threshold")
+        .when(thr_max.isNotNull() & high, "above_threshold")
         .otherwise(None)
     )
     # OP-T14 (consumer.py:391-395): the human-readable alert line with the
@@ -186,10 +191,10 @@ def alert_columns(readings: DataFrame) -> DataFrame:
         F.lit(" "), F.coalesce(F.col("unit"), F.lit("None")), F.lit(")"),
     )
     return (
-        j.withColumn("alert_level", level)
+        readings.select("device_type", *[c for c in readings.columns if c != "device_type"])
+        .withColumn("alert_level", level)
         .withColumn("alert_reason", reason)
         .withColumn("alert_message", message)
-        .drop("thr_min", "thr_max")
         .where(F.col("alert_level").isNotNull())
     )
 
@@ -358,7 +363,7 @@ def dedup_within_watermark(
     horizon. State is bounded by the watermark (a plain dropDuplicates
     on a stream keeps every key forever); replays that arrive LATER
     than the horizon are still caught by the sink-side
-    idempotent_append anti-join, which remains the cross-restart
+    idempotent_append stored-key drop, which remains the cross-restart
     guarantee. Keyed-state shuffle on the dedup key, same 100 TB
     posture as the other stateful ops."""
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(

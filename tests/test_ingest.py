@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from metrocloud_data_pipeline_spark import schema as S
 from metrocloud_data_pipeline_spark.operators import ingest
 from metrocloud_data_pipeline_spark.tests_fixtures import RAW_FIXTURE_ROWS, RAW_FIXTURE_SCHEMA
 
@@ -84,6 +85,73 @@ def test_anomaly_thresholds(spark, fanned):
     # nominal values not flagged; unthresholded channels never flagged
     assert ("c6:8d:c6:26:39:a6", "temperature") not in anoms
     assert all(ch not in {"tx_power", "movement_counter", "acceleration_x"} for _, ch in anoms)
+
+
+def _threshold_sweep():
+    """(id, device_id, device_type, value, unit, status) rows: every listed
+    type below, at and above each bound (the battery's inf upper bound at
+    inf and at a finite value near the largest double), an unlisted type, a NULL type and a
+    NULL value; then ERROR-status rows, one of them with no value and no
+    device_id."""
+    rows = []
+    for dt, (lo, hi) in S.ANOMALY_THRESHOLDS.items():
+        values = [lo - 0.25, lo, lo + 0.25, hi, hi + 0.25] if hi != float("inf") else [lo - 0.25, lo, lo + 0.25, 1.7e308, hi]
+        rows += [(dt, v, "ACTIVE") for v in values]
+    rows += [("unknown_sensor", v, "ACTIVE") for v in (-1e9, 0.0, 1e9)]
+    rows += [(None, v, "ACTIVE") for v in (-1e9, 1e9)]
+    rows += [(dt, None, "ACTIVE") for dt in S.ANOMALY_THRESHOLDS]
+    rows += [("temperature_sensor", 20.25, "ERROR"), ("humidity_sensor", None, "ERROR"), (None, 1.5, "ERROR")]
+    return [
+        (i, None if dt is None and status == "ERROR" else f"d{i}", dt, v, "u" if i % 2 else None, status)
+        for i, (dt, v, status) in enumerate(rows)
+    ]
+
+
+def _naive_alert(device_id, dt, value, unit, status):
+    """alert_columns read straight off S.ANOMALY_THRESHOLDS in Python."""
+    thr = S.ANOMALY_THRESHOLDS.get(dt)
+    low = thr is not None and value is not None and value < thr[0]
+    high = thr is not None and value is not None and value > thr[1]
+    flat = dt == "battery_sensor" and value is not None and value < S.BATTERY_MIN_VOLTAGE
+    if status == "ERROR" or flat:
+        level = "CRITICAL"
+    elif low or high:
+        level = "WARNING"
+    else:
+        return None
+    reason = (
+        "device_error" if status == "ERROR" else "low_battery" if flat else "below_threshold" if low else "above_threshold"
+    )
+    shown = "None" if value is None else f"{value:,.2f}"
+    return level, reason, f"{level}: {device_id or 'None'} {reason} (value={shown} {unit or 'None'})"
+
+
+def test_threshold_lookup_matches_naive_reference(spark):
+    """detect_anomalies and alert_columns both flag against
+    ingest.threshold_bounds; swept at and around every bound of
+    S.ANOMALY_THRESHOLDS and over the types and values it does not
+    cover, each matches a plain-Python reading of the table."""
+    from metrocloud_data_pipeline_spark.streaming import alert_columns
+
+    rows = _threshold_sweep()
+    df = spark.createDataFrame(
+        rows, "id int, device_id string, device_type string, value double, unit string, status string"
+    )
+    flags = {r["id"]: r["is_anomaly"] for r in ingest.detect_anomalies(df).collect()}
+    expected = {}
+    for i, _, dt, v, _, _ in rows:
+        thr = S.ANOMALY_THRESHOLDS.get(dt)
+        expected[i] = False if thr is None else None if v is None else (v < thr[0] or v > thr[1])
+    assert flags == expected
+
+    alerts = {
+        r["id"]: (r["alert_level"], r["alert_reason"], r["alert_message"]) for r in alert_columns(df).collect()
+    }
+    naive = {i: _naive_alert(dev, dt, v, unit, st) for i, dev, dt, v, unit, st in rows}
+    assert alerts == {i: a for i, a in naive.items() if a is not None}
+    # the sweep reaches every outcome, so a lookup that lost a bound shows
+    assert {a[1] for a in alerts.values()} == {"device_error", "low_battery", "below_threshold", "above_threshold"}
+    assert set(flags.values()) == {True, False, None}
 
 
 def test_normalize_raw_end_to_end(raw):

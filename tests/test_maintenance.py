@@ -757,6 +757,64 @@ def test_idempotent_append_refuses_null_natural_keys(spark, tmp_path):
             assert not os.path.exists(os.path.join(path, "_temporary"))
 
 
+def test_idempotent_append_one_shuffle_matches_naive_reference(spark, tmp_path):
+    """The dedup and the stored-key drop are one aggregation
+    (_dedup_on_natural_key with the overlapping days' keys). One batch
+    over a stored day D1 and a new day D2 carries stored keys, new keys,
+    an in-batch duplicate of a new key with other non-key values and an
+    in-batch duplicate of a stored key. What lands is the naive
+    reference: one row per new key, from among that key's batch rows,
+    and none for a stored key; the returned count is the store's
+    growth; a re-delivery inserts 0. A NULL key in such a batch is
+    refused with the day set supplied, and lands nothing."""
+    import os
+    from datetime import date
+
+    path = str(tmp_path / "t")
+    schema = "device_id string, timestamp timestamp, device_type string, value double, tags array<string>"
+    d1, d2 = datetime(2025, 3, 1, 8, 0, 0), datetime(2025, 3, 2, 8, 0, 0)
+    stored = [("a", d1, "temperature_sensor", 1.0, ["x"]), ("b", d1, "humidity_sensor", 2.0, [])]
+    assert M.idempotent_append(spark, spark.createDataFrame(stored, schema), path) == 2
+
+    batch_rows = [
+        ("a", d1, "temperature_sensor", 10.0, ["stored"]),  # stored key
+        ("b", d1, "humidity_sensor", 20.0, None),  # stored key ...
+        ("b", d1, "humidity_sensor", 21.0, ["dup"]),  # ... twice in the batch
+        ("a", d1, "humidity_sensor", 3.0, ["new"]),  # new key on the stored day
+        ("c", d2, "temperature_sensor", 4.0, ["new"]),  # new key on a new day ...
+        ("c", d2, "temperature_sensor", 5.0, ["other"]),  # ... twice, other values
+        ("d", d2, "pressure_sensor", None, None),  # new key, NULL values
+    ]
+    batch = spark.createDataFrame(batch_rows, schema).repartition(3)
+    key = lambda r: (r[0], r[1], r[2])  # noqa: E731
+    stored_keys = {key(r) for r in stored}
+    candidates: dict = {}
+    for r in batch_rows:
+        if key(r) not in stored_keys:
+            candidates.setdefault(key(r), []).append(r)
+
+    inserted = M.idempotent_append(spark, batch, path, days=[d1.date(), d2.date()])
+    table = M.read_table(spark, path)
+    assert table.columns == batch.columns + [M.PARTITION_COL]
+    landed = [tuple(r)[:5] for r in table.collect()]
+    assert inserted == len(landed) - len(stored) == len(candidates)
+    new = [r for r in landed if key(r) not in stored_keys]
+    assert sorted(key(r) for r in new) == sorted(candidates)
+    for r in new:
+        assert list(r) in [list(c) for c in candidates[key(r)]], r
+    assert sorted(r for r in landed if key(r) in stored_keys) == sorted(stored)
+    assert sorted(M.list_partitions(path)) == [date(2025, 3, 1), date(2025, 3, 2)]
+
+    assert M.idempotent_append(spark, batch, path, days=[d1.date(), d2.date()]) == 0
+    assert table.count() == len(landed)
+
+    with_null = spark.createDataFrame(batch_rows + [(None, d2, "temperature_sensor", 6.0, None)], schema)
+    with pytest.raises(ValueError, match="NULL natural-key"):
+        M.idempotent_append(spark, with_null, path, days=[d1.date(), d2.date()])
+    assert M.read_table(spark, path).count() == len(landed)
+    assert not os.path.exists(os.path.join(path, "_temporary"))
+
+
 def test_idempotent_append_empty_batch_writes_nothing(spark, tmp_path):
     """No rows, no write, on both paths: an empty batch returns 0 and
     creates no store root."""

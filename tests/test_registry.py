@@ -443,3 +443,57 @@ def test_text_tier_defines_each_rule_once():
         and "_gram_rows" in [a.name for a in node.names]
     ]
     assert not imports, f"_gram_rows imported from curation in {imports} — it lives in text.py"
+
+
+def test_anomaly_thresholds_are_read_by_one_lookup():
+    """S.ANOMALY_THRESHOLDS (OP-T7) has one reader, the expression
+    helper ingest.threshold_bounds; detect_anomalies and
+    streaming.pipeline.alert_columns flag through it. A thresholds
+    frame built from the table's rows is the other shape this gate
+    refuses: joined per micro-batch, it costs a broadcast job each
+    time, and a second copy can drift from the first. Gate: outside
+    schema.py, every ANOMALY_THRESHOLDS reference sits inside
+    ingest.threshold_bounds, and no createDataFrame call in the
+    package builds threshold rows."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "metrocloud_data_pipeline_spark"
+    readers, frames = set(), []
+    for p in pkg.rglob("*.py"):
+        rel = p.relative_to(pkg).as_posix()
+        text = p.read_text()
+        tree = ast.parse(text)
+        for top in tree.body:
+            for node in ast.walk(top):
+                name = node.attr if isinstance(node, ast.Attribute) else getattr(node, "id", None)
+                if name == "ANOMALY_THRESHOLDS" and rel != "schema.py":
+                    readers.add((rel, getattr(top, "name", "<module>")))
+                if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "createDataFrame":
+                    if "thr" in ast.get_source_segment(text, node).lower():
+                        frames.append(f"{rel}:{node.lineno}")
+    outside = {r for r in readers if r != ("operators/ingest.py", "threshold_bounds")}
+    assert readers and not outside, f"ANOMALY_THRESHOLDS read at {sorted(outside)} — use ingest.threshold_bounds"
+    assert not frames, f"threshold rows built as a frame at {frames} — use ingest.threshold_bounds"
+
+
+def test_natural_key_dedup_is_one_helper():
+    """maintenance._dedup_on_natural_key is the one ON CONFLICT stand-in:
+    idempotent_append passes it the stored keys and sources.jdbc_io
+    .write_jdbc calls it without, so the dedup and the stored-key drop
+    share one aggregation. Gate: one definition, and neither sink
+    spells its own dropDuplicates or left_anti join."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "metrocloud_data_pipeline_spark"
+    texts = {p.relative_to(pkg).as_posix(): p.read_text() for p in pkg.rglob("*.py")}
+    homes = {p: t.count("def _dedup_on_natural_key(") for p, t in texts.items() if "def _dedup_on_natural_key(" in t}
+    assert homes == {"operators/maintenance.py": 1}, homes
+    for rel, name in (("operators/maintenance.py", "idempotent_append"), ("sources/jdbc_io.py", "write_jdbc")):
+        text = texts[rel]
+        fn = next(n for n in ast.walk(ast.parse(text)) if isinstance(n, ast.FunctionDef) and n.name == name)
+        used = {getattr(n, "attr", getattr(n, "id", None)) for n in ast.walk(fn)}
+        strings = {n.value for n in ast.walk(fn) if isinstance(n, ast.Constant)}
+        assert "_dedup_on_natural_key" in used, name
+        assert "dropDuplicates" not in used and "left_anti" not in strings, f"{name} dedups outside the one helper"

@@ -1647,10 +1647,11 @@ def test_ingest_stream_observed_days_match_discovered_days(spark, tmp_path):
 def test_ingest_job_budget(spark, tmp_path):
     """Tripwire on the write path's job shape: each micro-batch is
     computed once (one checkpoint whose Observation carries the counters
-    and day set) and the append's NULL-key refusal rides its write; the
-    refresh reads under a footer schema and observes its own write. A
-    new eager count/collect anywhere on this path breaks the budget
-    loudly."""
+    and day set, with the thresholds looked up inline), the append
+    dedups and drops stored keys in one shuffle, and its NULL-key
+    refusal rides its write; the refresh reads under a footer schema
+    and observes its own write. A new eager count/collect anywhere on
+    this path breaks the budget loudly."""
     import os
 
     assert not spark.streams.active, "another streaming query would add jobs to the count"
@@ -1664,7 +1665,7 @@ def test_ingest_job_budget(spark, tmp_path):
     )
     per_batch = []
     try:
-        for i in range(2):  # the second batch anti-joins against the first's partition
+        for i in range(2):  # the second batch meets the first's stored partition
             staged = str(tmp_path / f"raw{i}")
             spark.createDataFrame(RAW_FIXTURE_ROWS, schema=RAW_FIXTURE_SCHEMA).coalesce(1).write.parquet(staged)
             part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
@@ -1679,7 +1680,11 @@ def test_ingest_job_budget(spark, tmp_path):
     refresh_jobs = jobs() - j0
 
     assert maintenance.read_table(spark, table).count() == 20
-    assert max(per_batch) <= 7, per_batch
+    first, second = per_batch
+    # checkpoint 1, append 2 (one shuffle, the write), rejects 1, metrics 1
+    assert first <= 5, f"first batch, no stored day: {per_batch}"
+    # the stored day's keys ride the append's one shuffle: still 5
+    assert second <= 5, f"second batch, against a stored day: {per_batch}"
     assert refresh_jobs <= 2, refresh_jobs
 
 
