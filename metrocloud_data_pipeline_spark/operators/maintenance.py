@@ -525,9 +525,11 @@ def idempotent_append(
     them — the streaming ingest body observes them on its one
     materialization of the micro-batch — and the batch is never scanned
     to discover target partitions. Without it, the batch is
-    localCheckpoint-ed and ONE aggregate over it yields both the day set
-    and the null-key count (a batch whose every timestamp is NULL has
-    no day and would otherwise return 0 unrefused). (A collect-free
+    localCheckpoint-ed and an Observation on that checkpoint yields both
+    the day set and the null-key count, so discovery runs no job of its
+    own (a batch whose every timestamp is NULL has no day and would
+    otherwise return 0 unrefused): three jobs per call, the checkpoint
+    and the append's two. (A collect-free
     formulation was measured and rejected: Spark's dynamic partition
     pruning never fires for LEFT ANTI — canPruneRight covers
     Inner/LeftSemi only — so the 'pure join' shape silently reads the
@@ -558,15 +560,18 @@ def idempotent_append(
         "on every redelivery)"
     )
     if days is None:
-        # one computation of the batch, shared by discovery and the write
-        batch = batch.localCheckpoint(eager=True)
-        facts = batch.agg(
+        # one computation of the batch, shared by discovery and the
+        # write; the facts ride the checkpoint's own job
+        facts = Observation()
+        batch = batch.observe(
+            facts,
             F.count_if(_any_null(NATURAL_KEY)).alias("null_keys"),
             F.collect_set(F.to_date(F.col(ts_col))).alias("days"),
-        ).first()
-        if facts["null_keys"]:
+        ).localCheckpoint(eager=True)
+        observed = facts.get
+        if observed["null_keys"]:
             raise ValueError(refusal)
-        days = facts["days"]
+        days = observed["days"]
     if not days:
         return 0
     existing_days = set(list_partitions(path))

@@ -53,7 +53,7 @@ from ..llm.similarity import (
     load_pq_codebook,
 )
 from ..operators.maintenance import overwrite_batch_partition, read_store_or_none
-from .pipeline import _parquet_stream, _start_micro_batches
+from .pipeline import _metrics_row, _parquet_stream, _start_micro_batches
 
 QUERY_SCHEMA = "vec_id long, embedding array<float>"
 
@@ -108,14 +108,10 @@ def _write_serving_metrics(
             .where(F.coalesce(F.col("_n"), F.lit(0)) < k)
             .count()
         )
-    metrics_row = spark.createDataFrame(
-        [(
-            n_queries,
-            n_results,
-            n_underfilled,
-            int((time.monotonic() - t_start) * 1000),
-        )],
+    metrics_row = _metrics_row(
+        spark,
         "n_queries long, n_results long, n_underfilled long, wall_ms long",
+        (n_queries, n_results, n_underfilled, int((time.monotonic() - t_start) * 1000)),
     )
     overwrite_batch_partition(metrics_row, metrics_path, batch_id)
 

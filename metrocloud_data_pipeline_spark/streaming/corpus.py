@@ -40,7 +40,7 @@ from ..operators.maintenance import (
     read_store_or_none,
     recover_store,
 )
-from .pipeline import _parquet_stream, _start_micro_batches
+from .pipeline import _metrics_row, _parquet_stream, _start_micro_batches
 
 DOCUMENT_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -678,12 +678,13 @@ def run_corpus_ingest_stream(
             # that wipes prior partitions (r14 review)
             # n_contaminated (added r15) sits after n_invalid for the
             # same strict column-prefix evolution reason
-            metrics_row = batch.sparkSession.createDataFrame(
-                [stats[1:]],
+            metrics_row = _metrics_row(
+                batch.sparkSession,
                 "n_ingested long, n_kept long, kept_chars long, "
                 "n_rejected long, n_dup_in_batch long, n_dup_in_corpus long, "
                 "n_near_dup_in_corpus long, n_quality_rejected long, "
                 "n_invalid long, n_contaminated long",
+                stats[1:],
             )
             overwrite_batch_partition(metrics_row, metrics_path, batch_id)
 

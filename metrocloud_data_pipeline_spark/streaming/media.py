@@ -76,7 +76,7 @@ from pyspark.sql.types import StructField, StructType
 
 from ..llm.multimodal import MEDIA_SCHEMA, extract_features
 from ..operators.maintenance import overwrite_batch_partition, read_store_or_none
-from .pipeline import _parquet_stream, _start_micro_batches
+from .pipeline import _metrics_row, _parquet_stream, _start_micro_batches
 
 REJECT_SCHEMA = "media_id long, media_type string, reason string"
 
@@ -517,8 +517,13 @@ def run_media_feature_stream(
             # STATIC overwrite that wipes every prior partition — the
             # per-micro-batch clone is never shared, so the race cannot
             # exist (r14 review; ann already passed the clone)
-            metrics_row = batch.sparkSession.createDataFrame(
-                [(
+            metrics_row = _metrics_row(
+                batch.sparkSession,
+                "n_items long, n_features long, n_rejected long, "
+                "n_invalid long, n_decode_errors long, wall_ms long, "
+                "n_codec_missing long, n_duplicates long, "
+                "n_near_dup long",
+                (
                     n_kept + n_rejected,
                     n_kept,
                     n_rejected,
@@ -528,11 +533,7 @@ def run_media_feature_stream(
                     n_codec_missing,
                     n_duplicates,
                     n_near_dup,
-                )],
-                "n_items long, n_features long, n_rejected long, "
-                "n_invalid long, n_decode_errors long, wall_ms long, "
-                "n_codec_missing long, n_duplicates long, "
-                "n_near_dup long",
+                ),
             )
             # effectively-once: one metrics row per batch_id, rewritten
             # (never appended twice) under redelivery — batch_id lands

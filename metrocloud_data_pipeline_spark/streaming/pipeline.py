@@ -22,7 +22,11 @@ Structured Streaming:
 - OP-ST5 late/future data: withWatermark + the OP-T11 clamp.
 - OP-ST6 at-least-once + idempotent sink: checkpointed foreachBatch
   into maintenance.idempotent_append (dedup on natural key) ==
-  effectively-once — a deliberate upgrade over retry-then-drop.
+  effectively-once — a deliberate upgrade over retry-then-drop. The
+  ingest body persists each micro-batch once and lands its sinks in
+  the order rejects → append → metrics, all batch_id-keyed side sinks
+  through maintenance.overwrite_batch_partition; every runner builds
+  its one-row metrics frame through `_metrics_row`.
 - OP-ST7 maintenance: operators.maintenance jobs, scheduled externally.
 - OP-ST8 continuous aggregates: windowed agg with watermark in update
   mode, playing the refresh-policy role.
@@ -39,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from .. import schema as S
 from ..operators import ingest, maintenance, quality
@@ -71,6 +76,19 @@ def _start_micro_batches(
     )
 
 
+def _metrics_row(spark: SparkSession, schema: str, values) -> DataFrame:
+    """The one builder of a runner's per-batch metrics row: `values` as
+    literals cast to the DDL `schema`'s types, in its column order, over
+    a one-row range — built in the JVM (no Python worker starts) and
+    written in one task. Literal columns are non-nullable, so the
+    parquet footer records them as required; Spark reads every file
+    source column back as nullable, so readers see the same schema."""
+    fields = StructType.fromDDL(schema).fields
+    return spark.range(1, numPartitions=1).select(
+        *[F.lit(v).cast(f.dataType).alias(f.name) for f, v in zip(fields, values, strict=True)]
+    )
+
+
 def stream_raw_files(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-based raw-message stream (stands in for the MQTT/Kafka source,
     OP-S1/S3; swap for spark.readStream.format('kafka') + from_avro in a
@@ -97,22 +115,24 @@ def run_ingest_stream(
     rate) to a pipeline_metrics table — the queryable replacement for
     the reference's Prometheus counters (metrics.py:41-165; §2.11).
 
-    Job shape: the micro-batch is computed ONCE — one eager
-    localCheckpoint of the reject_reasons-tagged frame, before the
-    valid/rejected split — and an Observation on that checkpoint
-    carries the batch facts: the four counters and the event days of
-    the valid rows (after the OP-T11 clamp). Every sink then reads the
-    checkpoint; the day set goes to idempotent_append(days=...), so
-    nothing is recomputed to learn a count or a target partition, and
-    the append's NULL-key refusal rides its own write instead of a
-    probe job. That is 5 Spark jobs per batch, whether or not its day
-    is already in the store (adaptive execution on, both side sinks
-    set): one to materialize the checkpoint (the OP-T7 thresholds are
-    an inline lookup, not a broadcast), two for the append (one shuffle
-    that dedups the batch and drops the stored keys of the overlapping
-    partitions, then the write) and one write per side sink, the
-    one-row metrics write in one task. A batch with no valid rows skips
-    the append: no rows, no write."""
+    Job shape: the micro-batch is computed ONCE — the reject_reasons-
+    tagged frame, before the valid/rejected split, is persisted, and
+    an Observation on it carries the batch facts: the four counters and
+    the event days of the valid rows (after the OP-T11 clamp). The
+    rejects write runs first: it is the one job that builds the cache
+    and fills the Observation (without a rejects sink, a noop write
+    does). The append and the metrics write then read the cache, and
+    the day set goes to idempotent_append(days=...), so nothing is
+    recomputed to learn a count or a target partition, and the
+    append's NULL-key refusal rides its own write instead of a probe
+    job. The cache is released when the batch ends, crashed or not.
+    That is 4 Spark jobs per batch, whether or not its day is already
+    in the store (adaptive execution on, both side sinks set): the
+    rejects write (the OP-T7 thresholds are an inline lookup, not a
+    broadcast), two for the append (one shuffle that dedups the batch
+    and drops the stored keys of the overlapping partitions, then the
+    write) and the one-row metrics write in one task. A batch with no
+    valid rows skips the append: no rows, no write."""
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -121,27 +141,31 @@ def run_ingest_stream(
             facts,
             *quality.batch_counters(ingest.is_valid(), F.col("is_anomaly")),
             F.collect_set(F.when(ingest.is_valid(), F.to_date("timestamp"))).alias("days"),
-        ).localCheckpoint(eager=True)
-        observed = facts.get
-        valid, rejected = ingest.split_normalized(tagged)
-        if observed["rows_valid"]:
-            maintenance.idempotent_append(spark, valid, table_path, days=observed["days"])
-        # rejects + metrics are effectively-once like the data store
-        # (r14): batch_id-keyed dynamic partition overwrite, so a
-        # re-delivered micro-batch rewrites its own partition instead
-        # of double-counting the books
-        if rejects_path is not None:
-            maintenance.overwrite_batch_partition(rejected, rejects_path, batch_id)
-        if metrics_path is not None:
-            m = quality.metrics_record(observed)
-            # one partition, so the metrics write is one task rather than
-            # one per default-parallelism slice
-            row = (m["rows_in"], m["rows_valid"], m["rows_rejected"], m["anomalies"], m["validation_failure_rate"])
-            metrics_row = spark.createDataFrame(
-                spark.sparkContext.parallelize([row], 1),
-                "rows_in long, rows_valid long, rows_rejected long, anomalies long, validation_failure_rate double",
-            )
-            maintenance.overwrite_batch_partition(metrics_row, metrics_path, batch_id)
+        ).persist()
+        try:
+            valid, rejected = ingest.split_normalized(tagged)
+            # rejects + metrics are effectively-once like the data store
+            # (r14): batch_id-keyed dynamic partition overwrite, so a
+            # re-delivered micro-batch rewrites its own partition instead
+            # of double-counting the books. The first sink builds the
+            # cache and fills `facts`, whose day set the append needs.
+            if rejects_path is not None:
+                maintenance.overwrite_batch_partition(rejected, rejects_path, batch_id)
+            else:
+                tagged.write.format("noop").mode("overwrite").save()
+            observed = facts.get
+            if observed["rows_valid"]:
+                maintenance.idempotent_append(spark, valid, table_path, days=observed["days"])
+            if metrics_path is not None:
+                m = quality.metrics_record(observed)
+                metrics_row = _metrics_row(
+                    spark,
+                    "rows_in long, rows_valid long, rows_rejected long, anomalies long, validation_failure_rate double",
+                    (m["rows_in"], m["rows_valid"], m["rows_rejected"], m["anomalies"], m["validation_failure_rate"]),
+                )
+                maintenance.overwrite_batch_partition(metrics_row, metrics_path, batch_id)
+        finally:
+            tagged.unpersist()
 
     trigger = {"availableNow": True} if available_now else {"processingTime": processing_time}
     return _start_micro_batches(raw_stream, process, checkpoint_path, trigger)

@@ -757,6 +757,27 @@ def test_idempotent_append_refuses_null_natural_keys(spark, tmp_path):
             assert not os.path.exists(os.path.join(path, "_temporary"))
 
 
+def test_idempotent_append_discovery_job_budget(spark, tmp_path):
+    """Tripwire on idempotent_append without a day set: the null-key
+    count and the day set are an Observation on the batch's one
+    checkpoint, so a call is that checkpoint plus the append's shuffle
+    and write, against a new day or a stored one. A separate discovery
+    aggregate would add two jobs."""
+    assert not spark.streams.active, "another streaming query would add jobs to the count"
+    jobs = spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs
+    path = str(tmp_path / "t")
+    schema = "device_id string, timestamp timestamp, device_type string, value double"
+    rows = [(f"d{i % 3}", datetime(2025, 1, 1 + i % 2, i, 0, 0), "temperature_sensor", float(i)) for i in range(8)]
+    per_call = []
+    for batch in (rows[:4], rows):  # the second call meets the first's stored days
+        df = spark.createDataFrame(batch, schema)
+        j0 = jobs()
+        M.idempotent_append(spark, df, path)
+        per_call.append(jobs() - j0)
+    assert M.read_table(spark, path).count() == 8
+    assert per_call[0] <= 3 and per_call[1] <= 3, per_call
+
+
 def test_idempotent_append_one_shuffle_matches_naive_reference(spark, tmp_path):
     """The dedup and the stored-key drop are one aggregation
     (_dedup_on_natural_key with the overlapping days' keys). One batch

@@ -497,3 +497,91 @@ def test_natural_key_dedup_is_one_helper():
         strings = {n.value for n in ast.walk(fn) if isinstance(n, ast.Constant)}
         assert "_dedup_on_natural_key" in used, name
         assert "dropDuplicates" not in used and "left_anti" not in strings, f"{name} dedups outside the one helper"
+
+
+def _streaming_modules():
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "metrocloud_data_pipeline_spark" / "streaming"
+    for path in sorted(root.glob("*.py")):
+        yield path.name, ast.parse(path.read_text())
+
+
+def test_streaming_metrics_rows_start_no_python_worker():
+    """A streaming runner's one-row metrics frame is built in the JVM by
+    pipeline._metrics_row (literals over a one-row range). A frame made
+    with createDataFrame or from a parallelized list is a Python RDD:
+    computing it starts a pyspark.daemon and a worker, the only Python
+    processes the sensor ingest path would otherwise start, and its
+    first batch pays their startup. Gate: no createDataFrame or
+    parallelize call under streaming/."""
+    import ast
+
+    calls = [
+        f"{name}:{node.lineno} {node.func.attr}"
+        for name, tree in _streaming_modules()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("createDataFrame", "parallelize")
+    ]
+    assert not calls, f"Python-side frames under streaming/: {calls} — use pipeline._metrics_row"
+
+
+def test_streaming_persists_are_released_in_a_finally():
+    """A persist() registers its frame in the session's shared
+    CacheManager, which outlives every micro-batch: a batch body that
+    persists and does not release on every exit keeps one storage entry
+    per batch, and a crashed batch is replayed with a fresh frame, so
+    its entry is never read again. Gate: every persist() under
+    streaming/ is assigned to a name, and the innermost function that
+    makes it calls <that name>.unpersist() in a finally block."""
+    import ast
+
+    def own_nodes(fn):
+        # the function's nodes, not those of the functions nested in it
+        todo = list(ast.iter_child_nodes(fn))
+        while todo:
+            node = todo.pop()
+            yield node
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                todo.extend(ast.iter_child_nodes(node))
+
+    def is_persist(node):
+        return isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and node.func.attr == "persist"
+
+    bad, seen = [], 0
+    for name, tree in _streaming_modules():
+        in_function = set()
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            nodes = list(own_nodes(fn))
+            released = {
+                call.func.value.id
+                for node in nodes
+                if isinstance(node, ast.Try)
+                for stmt in node.finalbody
+                for call in ast.walk(stmt)
+                if isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "unpersist"
+                and isinstance(call.func.value, ast.Name)
+            }
+            assigned = {
+                id(node.value): node.targets[0].id
+                for node in nodes
+                if isinstance(node, ast.Assign)
+                and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+            }
+            for node in nodes:
+                if is_persist(node):
+                    seen += 1
+                    in_function.add(id(node))
+                    if assigned.get(id(node)) not in released:
+                        bad.append(f"{name}:{node.lineno} in {fn.name}")
+        bad += [f"{name}:{n.lineno} at module level" for n in ast.walk(tree) if is_persist(n) and id(n) not in in_function]
+    assert seen, "no persist() found under streaming/ — the gate scans the wrong tree"
+    assert not bad, f"persist() without a matching unpersist() in a finally: {bad}"

@@ -1646,8 +1646,9 @@ def test_ingest_stream_observed_days_match_discovered_days(spark, tmp_path):
 
 def test_ingest_job_budget(spark, tmp_path):
     """Tripwire on the write path's job shape: each micro-batch is
-    computed once (one checkpoint whose Observation carries the counters
-    and day set, with the thresholds looked up inline), the append
+    computed once (one cache, built by the rejects write and carrying an
+    Observation of the counters and day set, with the thresholds looked
+    up inline), the append
     dedups and drops stored keys in one shuffle, and its NULL-key
     refusal rides its write; the refresh reads under a footer schema
     and observes its own write. A new eager count/collect anywhere on
@@ -1681,10 +1682,10 @@ def test_ingest_job_budget(spark, tmp_path):
 
     assert maintenance.read_table(spark, table).count() == 20
     first, second = per_batch
-    # checkpoint 1, append 2 (one shuffle, the write), rejects 1, metrics 1
-    assert first <= 5, f"first batch, no stored day: {per_batch}"
-    # the stored day's keys ride the append's one shuffle: still 5
-    assert second <= 5, f"second batch, against a stored day: {per_batch}"
+    # rejects 1 (builds the cache), append 2 (one shuffle, the write), metrics 1
+    assert first <= 4, f"first batch, no stored day: {per_batch}"
+    # the stored day's keys ride the append's one shuffle: still 4
+    assert second <= 4, f"second batch, against a stored day: {per_batch}"
     assert refresh_jobs <= 2, refresh_jobs
 
 

@@ -459,7 +459,7 @@ def test_scd2_stream_crash_on_staging_write_replays_stable(
 
 
 # --------------------------------------------------------------------------
-# sensor ingest stream: store (idempotent_append) -> rejects -> metrics
+# sensor ingest stream: rejects -> store (idempotent_append) -> metrics
 # --------------------------------------------------------------------------
 
 
@@ -479,12 +479,11 @@ def _raw_dir(spark, tmp_path):
     return p
 
 
-def test_sensor_ingest_crash_before_metrics_replays_stable(
-    spark, tmp_path, monkeypatch
-):
-    """Kill the sensor pipeline between its rejects write and its
-    metrics write; replay must not double the data store (natural-key
-    idempotent append), the rejects partition, or the metrics row."""
+def _sensor_ingest_crash_replay(spark, tmp_path, monkeypatch, crash_sink):
+    """Crash the sensor pipeline on its write to `crash_sink`, replay on
+    the same checkpoint, and check every table is replay-stable."""
+    import os
+
     from metrocloud_data_pipeline_spark import streaming
 
     raw_dir = _raw_dir(spark, tmp_path)
@@ -500,9 +499,11 @@ def test_sensor_ingest_crash_before_metrics_replays_stable(
             anchor=ANCHOR,
         )
 
-    injector = CrashOnWrite(monkeypatch, "metrics")
+    injector = CrashOnWrite(monkeypatch, crash_sink)
     _await_failure(start())
     assert injector.fired == 1
+    # the rejects write is the batch's first sink: crashing on it lands nothing
+    assert os.path.exists(table) == (crash_sink != "rejects")
 
     q = start()
     q.awaitTermination(180)
@@ -519,6 +520,75 @@ def test_sensor_ingest_crash_before_metrics_replays_stable(
     assert len(m) == 1
     assert (m[0].rows_in, m[0].rows_valid, m[0].rows_rejected) == (21, 20, 1)
     assert m[0].rows_in == m[0].rows_valid + m[0].rows_rejected
+
+
+def test_sensor_ingest_crash_before_metrics_replays_stable(
+    spark, tmp_path, monkeypatch
+):
+    """Kill the sensor pipeline between its append and its metrics
+    write; replay must not double the data store (natural-key
+    idempotent append), the rejects partition, or the metrics row."""
+    _sensor_ingest_crash_replay(spark, tmp_path, monkeypatch, "metrics")
+
+
+def test_sensor_ingest_crash_before_rejects_replays_stable(
+    spark, tmp_path, monkeypatch
+):
+    """Kill the sensor pipeline on its first sink, the rejects write,
+    which also builds the batch's cache and fills the Observation the
+    append reads its day set from: nothing lands, and the replay lands
+    every table once."""
+    _sensor_ingest_crash_replay(spark, tmp_path, monkeypatch, "rejects")
+
+
+def test_sensor_ingest_releases_batch_cache(spark, tmp_path, monkeypatch):
+    """The ingest body persists each micro-batch for its three sinks.
+    The CacheManager and the block manager are shared by every query of
+    the session, so the entry must be gone when the batch ends, whether
+    it completed or died on a sink write: one leaked entry per batch
+    grows without bound in a long-lived stream, and a crashed batch is
+    replayed from scratch, so its cache is never read again."""
+    from metrocloud_data_pipeline_spark import streaming
+    from metrocloud_data_pipeline_spark.tests_fixtures import (
+        RAW_FIXTURE_ROWS,
+        RAW_FIXTURE_SCHEMA,
+    )
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def persistent():
+        # ids, not a count: the context cleaner may drop other tests'
+        # garbage-collected RDDs meanwhile; a leak is an id not seen before
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    src = tmp_path / "src"
+    for i in range(2):  # one file per micro-batch
+        spark.createDataFrame(RAW_FIXTURE_ROWS, schema=RAW_FIXTURE_SCHEMA).coalesce(
+            1
+        ).write.parquet(str(src / f"b{i}"))
+    before, entries = persistent(), cache.numCachedEntries()
+
+    def start(run):
+        return streaming.run_ingest_stream(
+            streaming.stream_raw_files(spark, str(src) + "/*", 1),
+            *(str(tmp_path / f"{run}_{d}") for d in ("readings", "ck")),
+            rejects_path=str(tmp_path / f"{run}_rejects"),
+            metrics_path=str(tmp_path / f"{run}_metrics"),
+            anchor=ANCHOR,
+        )
+
+    q = start("ok")
+    q.awaitTermination(180)
+    assert spark.read.parquet(str(tmp_path / "ok_metrics")).count() == 2
+    assert persistent() <= before
+    assert cache.numCachedEntries() <= entries
+
+    # after the append has read the built cache, so both entries exist
+    injector = CrashOnWrite(monkeypatch, "crash_metrics")
+    _await_failure(start("crash"))
+    assert injector.fired == 1
+    assert persistent() <= before
+    assert cache.numCachedEntries() <= entries
 
 
 @pytest.mark.slow
